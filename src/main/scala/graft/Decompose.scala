@@ -426,7 +426,7 @@ object Decompose {
   /** prefixJaccardPairs stage split (mirrors the Dedup body — keep in
     * sync): toks persist, df table, ranked (the per-doc (df,tok) sort),
     * prefix explode, candidate self-join + distinct (twice: with the
-    * prefix subtree recomputed per side as the lazy plan does, and with
+    * prefix subtree recomputed per side, as without its persist, and with
     * it persisted), verification joins + merge-scan intersect over the
     * materialized candidates, and the committed operator end-to-end.
     * Intermediate stages run through the noop sink (guide §1.4) so

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Expression}
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, JoinType, LeftAnti, LeftSemi}
@@ -216,13 +217,29 @@ object DeferralGuard {
     buf.distinct.toSeq
   }
 
-  def hazards(df: org.apache.spark.sql.DataFrame): Seq[Hazard] =
+  def hazards(df: DataFrame): Seq[Hazard] =
     hazards(df.queryExecution.executedPlan)
+
+  /** Hazards in every plan one registered query runs: the query is built
+    * and written to the no-op sink, and each execution captured meanwhile
+    * is walked — the checkpoints its operators ran while it was built
+    * (each a pipeline breaker) and the query's own executed plan.
+    */
+  def queryHazards(spark: SparkSession,
+      query: (SparkSession, String) => DataFrame, sfDir: String): Seq[Hazard] = {
+    val (_, runs) = Executions.capture(spark) {
+      query(spark, sfDir).write.format("noop").mode("overwrite").save()
+    }
+    // the write itself is always an execution: none captured means the
+    // capture is broken, and an empty walk would pass vacuously
+    require(runs.nonEmpty, "no execution captured for the query's write")
+    runs.flatMap { case (_, qe) => hazards(qe.executedPlan) }.distinct
+  }
 }
 
 /** Audit main (r16): build every registered query, EXECUTE it (so AQE
   * has re-planned and broadcast decisions are the real ones), and walk
-  * the final plan with [[DeferralGuard]]. Prints one JSON line
+  * every executed plan with [[DeferralGuard.queryHazards]]. Prints one JSON line
   * (`"metric":"deferral_audit"`), exits 1 when any non-allowlisted
   * hazard is found — the committed DEFERRAL_r{N}.json artifact, and the
   * per-round gate that makes the three-round trap class impossible to
@@ -241,28 +258,17 @@ object DeferralAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    // operator plans, not scans of materialized scratch output (PlanOf's
-    // device); the cache clear between queries bounds what lazy mode
-    // keeps pinned
-    sys.props("graft.explain.lazy") = "true"
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     def esc(s: String): String = s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     }
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val entry =
-        try {
-          val df = fn(spark, sfDir)
-          df.queryExecution.toRdd.count()
-          val hz = DeferralGuard.hazards(df)
-          name -> (hz, None: Option[String])
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            name -> (Seq.empty[DeferralGuard.Hazard], Some(e.toString.take(200)))
-        }
-      spark.sqlContext.clearCache()
-      entry
+      try name -> (DeferralGuard.queryHazards(spark, fn, sfDir), None: Option[String])
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          name -> (Seq.empty[DeferralGuard.Hazard], Some(e.toString.take(200)))
+      }
     }
     val flagged = rows.collect { case (n, (hz, None)) if hz.nonEmpty => (n, hz) }
     val errs = rows.collect { case (n, (_, Some(e))) => (n, e) }

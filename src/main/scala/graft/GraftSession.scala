@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession configuration every diagnostic/benchmark main
-  * shares. One definition, eight callers (Bench, ScaleBench, StreamBench,
-  * Verify, RecallReport, ShuffleReport, ExplainAll, PlanOf): a config
+  * shares. One definition, seven callers (Bench, ScaleBench, StreamBench,
+  * Verify, RecallReport, ShuffleReport, ExplainAll): a config
   * added here — e.g. the ObjectHashAggregate fallback threshold, which
   * changes physical aggregate operator choice — reaches the plan dumps,
   * the benches, and the oracle runner identically. A drifted copy would

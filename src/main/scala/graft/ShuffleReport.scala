@@ -2,13 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Shuffle/spill telemetry main: run every registered query once at
   * SPARK_GRAFT_SF_DIR and print ONE JSON line with per-query aggregate
@@ -30,39 +25,30 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * metrics accumulated across EVERY job between query start and the drain
   * barrier capture that work, plus driver-side iteration loops (k-means)
   * the final plan never shows. Broadcast dataSize is not a task metric, so
-  * it is summed from each SQL execution's plan via a
-  * [[QueryExecutionListener]] (both listeners share the live bus, so one
+  * it is summed from each SQL execution's plan, captured by
+  * [[Executions.capture]] (both listeners share the live bus, so one
   * drain barrier covers both). Driver-style contract: one JSON line,
   * per-query objects, queries that throw are recorded and non-zero-exit.
   */
 object ShuffleReport {
 
-  /** Flatten an executed tree: AQE roots expand to their final plan,
-    * materialized query stages to their contained plan; reused exchanges
-    * stop (their metrics belong to the original, counting them twice
-    * would double the bytes).
-    */
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = {
-    val kids: Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case _: ReusedExchangeExec => Seq.empty
-      case other => other.children
-    }
-    p +: kids.flatMap(flatten)
-  }
+  /** Broadcast build bytes in an executed plan. */
+  private def broadcastBytes(p: SparkPlan): Long =
+    Executions.nodes(p).collect {
+      case e if e.nodeName.contains("BroadcastExchange") =>
+        e.metrics.get("dataSize").map(_.value).getOrElse(0L)
+    }.filter(_ > 0).sum
 
-  /** Running totals since session start; per-query numbers are deltas
-    * between drained snapshots.
+  /** Running task-metric totals since session start; per-query numbers
+    * are deltas between drained snapshots.
     */
   private final class Totals {
     val shuffleWrite = new AtomicLong
     val shuffleRead = new AtomicLong
     val spill = new AtomicLong
     val input = new AtomicLong
-    val broadcast = new AtomicLong
-    def snapshot: (Long, Long, Long, Long, Long) =
-      (shuffleWrite.get, shuffleRead.get, spill.get, input.get, broadcast.get)
+    def snapshot: (Long, Long, Long, Long) =
+      (shuffleWrite.get, shuffleRead.get, spill.get, input.get)
   }
 
   def main(args: Array[String]): Unit = {
@@ -83,16 +69,8 @@ object ShuffleReport {
         }
       }
     })
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-        totals.broadcast.addAndGet(flatten(qe.executedPlan).collect {
-          case e if e.nodeName.contains("BroadcastExchange") =>
-            e.metrics.get("dataSize").map(_.value).getOrElse(0L)
-        }.filter(_ > 0).sum)
-      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
-    })
-    def drained: (Long, Long, Long, Long, Long) = {
-      ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext, 30000)
+    def drained: (Long, Long, Long, Long) = {
+      Executions.drain(spark)
       totals.snapshot
     }
 
@@ -115,28 +93,26 @@ object ShuffleReport {
         val t0 = System.nanoTime()
         // time includes fn(): materializing operators do their real work
         // in the constructor, and that work is part of the query's cost
-        val df = fn(spark, sfDir)
-        // execute THIS DataFrame's own QueryExecution — df.count() would
-        // plan and run a separate aggregate query
-        df.queryExecution.toRdd.count()
-        // toRdd bypasses Dataset.withAction, so the QueryExecutionListener
-        // never fires for THIS (top-level) plan — its broadcast exchanges
-        // would report 0 (a BroadcastHashJoin final plan, e.g. j1, showed
-        // broadcast:0). Sum them from the executed plan's own metrics,
-        // which the just-finished run populated; the listener still
-        // covers internal sub-executions (materializing constructors).
-        totals.broadcast.addAndGet(flatten(df.queryExecution.executedPlan)
-          .collect {
-            case e if e.nodeName.contains("BroadcastExchange") =>
-              e.metrics.get("dataSize").map(_.value).getOrElse(0L)
-          }.filter(_ > 0).sum)
-        val sec = (System.nanoTime() - t0) / 1e9
+        val ((df, sec), inner) = Executions.capture(spark) {
+          val df = fn(spark, sfDir)
+          // execute THIS DataFrame's own QueryExecution — df.count() would
+          // plan and run a separate aggregate query
+          df.queryExecution.toRdd.count()
+          (df, (System.nanoTime() - t0) / 1e9)
+        }
+        // toRdd bypasses Dataset.withAction, so the capture never sees
+        // THIS (top-level) plan — its broadcast exchanges would report 0
+        // (a BroadcastHashJoin final plan, e.g. j1, showed broadcast:0).
+        // Sum them from the executed plan's own metrics, which the
+        // just-finished run populated; the capture covers the internal
+        // executions (materializing constructors).
+        val bc = (df.queryExecution +: inner.map(_._2))
+          .map(qe => broadcastBytes(qe.executedPlan)).sum
         val after = drained
         val sw = after._1 - before._1
         val sr = after._2 - before._2
         val spill = after._3 - before._3
         val scanned = after._4 - before._4
-        val bc = after._5 - before._5
         name -> (s""""$name":{"sec":${math.rint(sec * 1000) / 1000},""" +
           s""""shuffle_write":$sw,"shuffle_read":$sr,"broadcast":$bc,""" +
           s""""spill":$spill,"scan_bytes":$scanned}""", false)

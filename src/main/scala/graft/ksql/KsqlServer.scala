@@ -131,6 +131,24 @@ object KsqlServer {
     None
   }
 
+  /** Largest request body either plane accepts: far above any
+    * interactive script (the tutorial's whole all.sql is about 6 KB),
+    * small enough that one request cannot exhaust the heap.
+    */
+  private[graft] val MaxBodyBytes: Int = 1 << 20
+
+  /** The request body, read once and at most [[MaxBodyBytes]]. A larger
+    * body is answered 413 here and yields None.
+    */
+  private def readBody(ex: HttpExchange): Option[String] = {
+    val bytes = ex.getRequestBody.readNBytes(MaxBodyBytes + 1)
+    if (bytes.length <= MaxBodyBytes) Some(new String(bytes, StandardCharsets.UTF_8))
+    else {
+      respond(ex, 413, s"""{"error":"request body exceeds $MaxBodyBytes bytes"}""")
+      None
+    }
+  }
+
   /** ONE response protocol for both serving planes — a header or
     * error-draining change must not land on one plane only.
     */
@@ -167,8 +185,7 @@ object KsqlServer {
         if (ex.getRequestMethod != "POST") {
           respond(ex, 405, """{"error":"use POST"}"""); return
         }
-        val body = new String(ex.getRequestBody.readAllBytes(),
-          StandardCharsets.UTF_8)
+        val body = readBody(ex).getOrElse(return)
         extractKsqlField(body) match {
           case None =>
             respond(ex, 400, """{"error":"body must be {\"ksql\": \"...\"}"}""")
@@ -223,19 +240,24 @@ object KsqlServer {
     *    contract — the changelog so far).
     *
     * Handlers run on a cached thread pool: an open `/query` response
-    * must not block the `/ksql` INSERTs that feed it.
+    * must not block the `/ksql` INSERTs that feed it. Its threads are
+    * daemons, so an idle pool never keeps the JVM alive after
+    * `server.stop`.
     */
   def startStreaming(engine: KsqlStreamingEngine, port: Int): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
-    server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
+    server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "graft-ksql-handler")
+      t.setDaemon(true)
+      t
+    })
 
     server.createContext("/ksql", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = try {
         if (ex.getRequestMethod != "POST") {
           respond(ex, 405, """{"error":"use POST"}"""); return
         }
-        val body = new String(ex.getRequestBody.readAllBytes(),
-          StandardCharsets.UTF_8)
+        val body = readBody(ex).getOrElse(return)
         extractKsqlField(body) match {
           case None =>
             respond(ex, 400, """{"error":"body must be {\"ksql\": \"...\"}"}""")
@@ -291,8 +313,7 @@ object KsqlServer {
         if (ex.getRequestMethod != "POST") {
           respond(ex, 405, """{"error":"use POST"}"""); return
         }
-        val body = new String(ex.getRequestBody.readAllBytes(),
-          StandardCharsets.UTF_8)
+        val body = readBody(ex).getOrElse(return)
         val script = extractKsqlField(body).getOrElse {
           respond(ex, 400,
             """{"error":"body must be {\"ksql\": \"...\"}"}"""); return

@@ -12,12 +12,10 @@ import org.apache.spark.sql.functions._
   * pairs that share a bucket. At 100 TB each stage is a hash shuffle on a
   * synthetic key with bounded skew (bucket ids are uniform hashes).
   *
-  * Cache lifecycle: the LSH operators persist their small signature
-  * relations (both sides of a bucket self-join read them) and rely on
-  * Spark's LRU storage eviction rather than explicit unpersist — the
-  * returned DataFrame stays lazy, so there is no safe point inside the
-  * operator to release the cache. Long-lived sessions running many
-  * distinct dedup plans should size executor storage accordingly.
+  * Cache lifecycle: the pair operators persist their small signature
+  * relations (both sides of a bucket self-join read them) and return
+  * through [[Scratch.materializeThenFree]], which runs the result once
+  * and frees those relations before the operator returns.
   */
 object Dedup {
   /** Ceiling on the distinct-shingle count a probe batch may broadcast
@@ -150,8 +148,7 @@ object Dedup {
     */
   def minhashPairs(documents: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 64, bands: Int = 16,
-      shingleW: Int = 3, threshold: Double = 0.8, seed: Int = 42,
-      materialize: Boolean = true): DataFrame = {
+      shingleW: Int = 3, threshold: Double = 0.8, seed: Int = 42): DataFrame = {
     val rows = k / bands
     require(bands * rows == k, s"bands=$bands must divide k=$k")
     val sh = documents.select(
@@ -188,7 +185,7 @@ object Dedup {
         round(inter / (size(col("_sha")) + size(col("_shb")) - inter), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    if (materialize) Scratch.materializeThenFree(pairs, sh, banded) else pairs
+    Scratch.materializeThenFree(pairs, sh, banded)
   }
 
   /** Incremental MinHash dedup — the continuous-ingest shape: near-dup
@@ -211,7 +208,7 @@ object Dedup {
   def incrementalMinhashPairs(corpus: DataFrame, batch: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", k: Int = 64,
       bands: Int = 16, shingleW: Int = 3, threshold: Double = 0.8,
-      seed: Int = 42, materialize: Boolean = true): DataFrame = {
+      seed: Int = 42): DataFrame = {
     val rows = k / bands
     require(bands * rows == k, s"bands=$bands must divide k=$k")
     def shingled(df: DataFrame): DataFrame = df.select(
@@ -246,7 +243,7 @@ object Dedup {
         round(inter / (size(col("_sha")) + size(col("_shb")) - inter), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    if (materialize) Scratch.materializeThenFree(pairs, shB, shC) else pairs
+    Scratch.materializeThenFree(pairs, shB, shC)
   }
 
   /** Materialize the corpus's banded-signature index — the production
@@ -277,8 +274,7 @@ object Dedup {
     */
   def containmentPairs(documents: DataFrame, threshold: Double = 0.9,
       maxDf: Int = 5, shingleW: Int = 3, seed: Int = 42,
-      idCol: String = "doc_id", textCol: String = "text",
-      materialize: Boolean = true): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val sh = shingledSet(documents, idCol, textCol, shingleW, seed)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // per-doc shingles are distinct, so this IS document frequency
@@ -298,7 +294,7 @@ object Dedup {
       .select(col("a"), col("b"),
         round(inter / size(col("_sha")), 6).as("containment"))
       .filter(col("containment") >= threshold)
-    if (materialize) Scratch.materializeThenFree(pairs, sh) else pairs
+    Scratch.materializeThenFree(pairs, sh)
   }
 
   /** Shingle-hash sets `(_id, _sh)` for a document relation — the shared
@@ -499,15 +495,9 @@ object Dedup {
   def containmentPairsIndexed(spark: org.apache.spark.sql.SparkSession,
       table: String, shPath: String, batch: DataFrame,
       threshold: Double = 0.9, maxDf: Int = 5, shingleW: Int = 3,
-      seed: Int = 42, idCol: String = "doc_id", textCol: String = "text",
-      materialize: Boolean = true): DataFrame = {
-    // persist gated on materialize for the same reason as batchSh below:
-    // only the materialize=true path owns the free
-    val shBBase = shingledSet(batch, idCol, textCol, shingleW, seed)
-    val shB =
-      if (materialize)
-        shBBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else shBBase
+      seed: Int = 42, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val shB = shingledSet(batch, idCol, textCol, shingleW, seed)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val post = graft.engine.Layout.read(spark, table)
     // count(DISTINCT): replayed at-least-once appends must not inflate df.
     // r14: the df pass is PRUNED to the batch's own shingles first — df
@@ -525,18 +515,10 @@ object Dedup {
     // the broadcast limit tolerate — past the gate the semi-join falls
     // back to Catalyst's shuffle choice, degrading gracefully the way
     // the pre-r14 full-table df pass did. The count is one job over the
-    // already-persisted shB, trivial beside the df pass it prunes.
-    // persist only when this call also owns the free (materialize=true,
-    // via materializeThenFree) — a materialize=false caller gets back a
-    // lazy plan with no handle to unpersist an internal cache, so the
-    // persist would leak executor storage per call (ADVICE r15). The
-    // unpersisted form recomputes the distinct once for the gate count
-    // and once in the plan — both over the already-persisted shB.
-    val batchShBase = shB.select(explode(col("_sh")).as("_s")).distinct()
-    val batchSh =
-      if (materialize)
-        batchShBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else batchShBase
+    // already-persisted shB, trivial beside the df pass it prunes;
+    // batchSh is persisted so the gate count and the plan share it.
+    val batchSh = shB.select(explode(col("_sh")).as("_s")).distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val probe =
       if (batchSh.count() <= MaxBroadcastShingles) broadcast(batchSh)
       else batchSh
@@ -567,8 +549,7 @@ object Dedup {
       // whose (_id, _sh) row landed twice (at-least-once append crash)
       // must not double its pairs in the output
       .dropDuplicates("batch_id", "corpus_id")
-    if (materialize) Scratch.materializeThenFree(pairs, shB, batchSh)
-    else pairs
+    Scratch.materializeThenFree(pairs, shB, batchSh)
   }
 
   /** Incremental near-dup pairs against a MATERIALIZED banded index: the
@@ -584,15 +565,9 @@ object Dedup {
       table: String, shPath: String, batch: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", k: Int = 64,
       bands: Int = 16, shingleW: Int = 3, threshold: Double = 0.8,
-      seed: Int = 42, materialize: Boolean = true): DataFrame = {
-    // persist gated on materialize: only the materialize=true path owns
-    // the free (materializeThenFree); a lazy caller would otherwise hold
-    // an internally-cached relation with no handle to unpersist it
-    val shBBase = shingledSet(batch, idCol, textCol, shingleW, seed)
-    val shB =
-      if (materialize)
-        shBBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else shBBase
+      seed: Int = 42): DataFrame = {
+    val shB = shingledSet(batch, idCol, textCol, shingleW, seed)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val candidates = bandedKeys(shB, k, bands, seed)
       .withColumnRenamed("_id", "batch_id")
       .join(graft.engine.Layout.read(spark, table)
@@ -616,7 +591,7 @@ object Dedup {
       // bounded; the store itself stays append-only) to keep the
       // distinct-pairs contract the in-plan twin guarantees
       .dropDuplicates("batch_id", "corpus_id")
-    if (materialize) Scratch.materializeThenFree(pairs, shB) else pairs
+    Scratch.materializeThenFree(pairs, shB)
   }
 
   /** The batch docs ACCEPTED by incremental dedup: anti-join on
@@ -687,8 +662,7 @@ object Dedup {
     * with a single merge scan instead of a per-pair hash set.
     */
   def ngramJaccardPairs(documents: DataFrame, threshold: Double = 0.8,
-      blockCols: Seq[String] = Seq("lang", "source"),
-      materialize: Boolean = true): DataFrame = {
+      blockCols: Seq[String] = Seq("lang", "source")): DataFrame = {
     // persisted: both sides of the block self-join read the token sets —
     // the cache keeps the tokenize+sort pass single-scan
     val toks = documents.select(
@@ -708,7 +682,7 @@ object Dedup {
       .select(col("a"), col("b"),
         round(inter / (col("_na") + col("_nb") - inter), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    if (materialize) Scratch.materializeThenFree(pairs, toks) else pairs
+    Scratch.materializeThenFree(pairs, toks)
   }
 
   /** EXACT corpus-wide Jaccard pairs via prefix filtering (AllPairs —
@@ -754,8 +728,7 @@ object Dedup {
     * the PipelineSpec 300/301 fixture pins the boundary pair any future
     * re-attempt must keep.
     */
-  def prefixJaccardPairs(documents: DataFrame, threshold: Double = 0.8,
-      materialize: Boolean = true): DataFrame = {
+  def prefixJaccardPairs(documents: DataFrame, threshold: Double = 0.8): DataFrame = {
     val tSlack = threshold - 1e-6
     // persisted: feeds the df count, the per-doc ordering, and both
     // verification joins — tokenize runs once
@@ -774,13 +747,8 @@ object Dedup {
       .join(dfTable, Seq("_tok"))
       .groupBy("doc_id", "_n")
       .agg(array_sort(collect_list(struct(col("_df"), col("_tok")))).as("_r"))
-    val prefixLazy = ranked.select(col("doc_id"), col("_n"),
-        explode(slice(col("_r"), lit(1),
-          (col("_n") - ceil(col("_n") * lit(tSlack)) + 1).cast("int"))).as("_p"))
-      .select(col("doc_id"), col("_n"), col("_p._tok").as("_tok"))
-    // persisted (materialized path only — lazy mode must not leak a cache
-    // entry the caller can't free): BOTH candidate-join sides read the
-    // prefix relation, and persisting it does two things at once (r16,
+    // persisted: BOTH candidate-join sides read the prefix relation, and
+    // persisting it does two things at once (r16,
     // measured in Decompose d20): the ranked subtree (explode + df join +
     // per-doc (df,tok) sort) runs once instead of once per side, and the
     // join planner sees the relation's TRUE size instead of a
@@ -789,10 +757,11 @@ object Dedup {
     // the wrong shape at 100 TB, where prefix postings are corpus-scale
     // and must equi-shuffle, never broadcast). cand stage 12.0 s → 2.4 s
     // at sf0.1/32 cores.
-    val prefix =
-      if (materialize)
-        prefixLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else prefixLazy
+    val prefix = ranked.select(col("doc_id"), col("_n"),
+        explode(slice(col("_r"), lit(1),
+          (col("_n") - ceil(col("_n") * lit(tSlack)) + 1).cast("int"))).as("_p"))
+      .select(col("doc_id"), col("_n"), col("_p._tok").as("_tok"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cand = prefix
       .select(col("_tok"), col("doc_id").as("a"), col("_n").as("_na"))
       .join(prefix.select(col("_tok"), col("doc_id").as("b"),
@@ -810,8 +779,7 @@ object Dedup {
       .select(col("a"), col("b"),
         round(inter / (col("_na") + col("_nb") - inter), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    if (materialize) Scratch.materializeThenFree(pairs, toks, prefix)
-    else pairs
+    Scratch.materializeThenFree(pairs, toks, prefix)
   }
 
   /** [[prefixJaccardPairs]] over a BUCKETED scope — the production
@@ -841,8 +809,7 @@ object Dedup {
     * output.
     */
   def prefixJaccardPairsScoped(documents: DataFrame, threshold: Double = 0.8,
-      scopeCols: Seq[String] = Seq("lang", "source"),
-      materialize: Boolean = true): DataFrame = {
+      scopeCols: Seq[String] = Seq("lang", "source")): DataFrame = {
     val tSlack = threshold - 1e-6
     val scope = scopeCols.map(col)
     val toks = documents.select(col("doc_id") +: scope :+
@@ -891,7 +858,7 @@ object Dedup {
       .select(col("a"), col("b"),
         round(inter / (col("_na") + col("_nb") - inter), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    if (materialize) Scratch.materializeThenFree(pairs, toks) else pairs
+    Scratch.materializeThenFree(pairs, toks)
   }
 
   /** SimHash near-dup pairs (Charikar '02; Manku et al. WWW'07 table
@@ -901,8 +868,7 @@ object Dedup {
     * Output: (a, b, hamming) with a < b, distinct.
     */
   def simhashPairs(documents: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", maxHamming: Int = 3,
-      materialize: Boolean = true): DataFrame = {
+      textCol: String = "text", maxHamming: Int = 3): DataFrame = {
     // persisted: the banded self-join reads this twice; the cache keeps
     // the tokenize+md5 fingerprint scan single-pass
     val fps = documents.select(
@@ -923,7 +889,7 @@ object Dedup {
         bit_count(col("_fpa").bitwiseXOR(col("_fpb"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-    if (materialize) Scratch.materializeThenFree(pairs, fps) else pairs
+    Scratch.materializeThenFree(pairs, fps)
   }
 
   /** Connected components over a near-duplicate pair graph, resolving the
@@ -1074,7 +1040,7 @@ object Dedup {
   def semanticPairs(embeddings: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", threshold: Double = 0.45,
       centroidEvery: Int = 50, kmeansIters: Int = 2,
-      singleCell: Boolean = false, materialize: Boolean = true,
+      singleCell: Boolean = false,
       maxCells: Int = 65536, nAssign: Int = 8, spill: Int = 2): DataFrame = {
     val cents =
       if (singleCell) Array.empty[(Long, Array[Float])]
@@ -1166,7 +1132,7 @@ object Dedup {
             cos.as("cosine"))
           .distinct()
     val pairs = base.filter(col("cosine") >= threshold)
-    if (materialize) Scratch.materializeThenFree(pairs, assigned) else pairs
+    Scratch.materializeThenFree(pairs, assigned)
   }
 
   /** The corpus that SURVIVES semantic dedup: [[semanticPairs]] resolved
@@ -1181,7 +1147,7 @@ object Dedup {
     nearDupSurvivors(
       embeddings.select(col(idCol)),
       semanticPairs(embeddings, idCol, vecCol, threshold, centroidEvery,
-        kmeansIters, singleCell, materialize = true, maxCells = maxCells,
+        kmeansIters, singleCell, maxCells = maxCells,
         nAssign = nAssign),
       idCol)
 
@@ -1195,8 +1161,7 @@ object Dedup {
     */
   def embeddingNearDupPairs(embeddings: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", dim: Int = 64, threshold: Double = 0.99,
-      nPlanes: Int = 12, nTables: Int = 4, seed: Int = 7,
-      materialize: Boolean = true): DataFrame = {
+      nPlanes: Int = 12, nTables: Int = 4, seed: Int = 7): DataFrame = {
     Similarity.requireVectorDim(embeddings, vecCol, dim,
       "embeddingNearDupPairs")
     val planes = Similarity.randomPlanes(nTables * nPlanes, dim, seed)
@@ -1225,7 +1190,7 @@ object Dedup {
           .as("cosine"))
       .distinct()
       .filter(col("cosine") >= threshold)
-    if (materialize) Scratch.materializeThenFree(pairs, banded) else pairs
+    Scratch.materializeThenFree(pairs, banded)
   }
 
   /** Pairwise source-overlap matrix: exact Jaccard + directional
@@ -1255,7 +1220,7 @@ object Dedup {
     */
   def sourceOverlap(documents: DataFrame, textCol: String = "text",
       srcCol: String = "source", shingleW: Int = 3,
-      seed: Int = 42, materialize: Boolean = true): DataFrame = {
+      seed: Int = 42): DataFrame = {
     // persisted: the per-hash source-set relation — whose construction is
     // the only corpus-sized work — feeds the sizes aggregate AND the
     // pair expansion; without the persist the corpus is tokenized+
@@ -1289,6 +1254,6 @@ object Dedup {
           col("_na").cast("double"), 6).as("containment_a"),
         round(coalesce(col("_i"), lit(0L)).cast("double") /
           col("_nb").cast("double"), 6).as("containment_b"))
-    if (materialize) Scratch.materializeThenFree(out, sets) else out
+    Scratch.materializeThenFree(out, sets)
   }
 }

@@ -2,41 +2,32 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 
-/** Cache hygiene for the build-then-self-join pattern used across the
-  * dedup / similarity operators: a scratch relation (shingle hashes, LSH
-  * bands, cell assignments, probe sets) is persisted so both sides of a
-  * self-join read it once, but the operator returns a LAZY DataFrame — so
-  * the function itself can never unpersist, and every invocation would
-  * otherwise leak a session-lifetime CacheManager entry (round-4/5 advice).
+/** The one cache-lifetime rule for pipeline operators: a scratch
+  * relation belongs to the operator call that persists it and is freed
+  * before that call returns.
   *
-  * [[materializeThenFree]] closes the hole: run the result to completion
-  * once via `localCheckpoint` (eager; stores the — small, post-filter —
-  * result as executor blocks whose lifetime is managed by the
-  * ContextCleaner, NOT a CacheManager entry), then unpersist the scratch
-  * relations deterministically. Callers get a lineage-truncated DataFrame
-  * whose re-use costs no recompute.
+  * The dedup / similarity / text operators persist scratch relations
+  * (shingle hashes, LSH bands, cell assignments, probe sets) so both
+  * sides of a self-join read them once. Every such operator returns
+  * through [[materializeThenFree]]: the result runs to completion once
+  * via an eager `localCheckpoint`, which stores the small, post-filter
+  * result as executor blocks owned by the ContextCleaner rather than as
+  * a CacheManager entry, and then the scratch relations are unpersisted.
+  * The caller gets a lineage-truncated DataFrame whose reuse costs no
+  * recompute, and the session's CacheManager is left as it was found.
   *
-  * The affected operators also expose `materialize = false`, which skips
-  * this and returns the fully-lazy plan — for plan-shape inspection
-  * (PlanShapeSpec) and composition into larger lazy pipelines. In that
-  * mode the scratch cache stays alive until the caller clears it.
+  * To see the plan an operator ran, capture its checkpoint's execution
+  * with [[graft.Executions.capture]].
   */
 private[graft] object Scratch {
 
   /** Materialize `result` eagerly, then unpersist every `scratch`
     * relation it was built from. Use when `result` is small relative to
     * the scratch relations (candidate pairs after a threshold filter,
-    * top-k rows) — the checkpoint blocks it leaves behind are bounded and
+    * top-k rows): the checkpoint blocks it leaves behind are bounded and
     * GC-collected, while the corpus-sized scratch cache is freed now.
-    *
-    * System property `graft.explain.lazy` (set by [[graft.ExplainAll]])
-    * skips the checkpoint and returns the lazy plan unchanged, so plan
-    * dumps show the operator's real join/exchange tree instead of a
-    * lineage-truncated RDD scan. Explain-only: in that mode the scratch
-    * cache is never freed.
     */
   def materializeThenFree(result: DataFrame, scratch: DataFrame*): DataFrame = {
-    if (sys.props.contains("graft.explain.lazy")) return result
     val out = result.localCheckpoint(eager = true)
     scratch.foreach(_.unpersist(blocking = false))
     out

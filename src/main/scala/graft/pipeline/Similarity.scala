@@ -194,13 +194,12 @@ object Similarity {
     */
   def knnGraph(embeddings: DataFrame, k: Int = 5, idCol: String = "vec_id",
       vecCol: String = "embedding", centroidEvery: Int = 50,
-      kmeansIters: Int = 2, singleCell: Boolean = false,
-      materialize: Boolean = true, maxCells: Int = 65536,
+      kmeansIters: Int = 2, singleCell: Boolean = false, maxCells: Int = 65536,
       nAssign: Int = 16, spill: Int = 2,
       collapseDuplicates: Boolean = true): DataFrame = {
     if (!collapseDuplicates)
       return knnGraphDirect(embeddings, k, idCol, vecCol, centroidEvery,
-        kmeansIters, singleCell, materialize, maxCells, nAssign, spill)
+        kmeansIters, singleCell, maxCells, nAssign, spill)
     // ---- exact-duplicate collapse (see scaladoc) -----------------------
     // one row per distinct vector VALUE: representative id = the class's
     // smallest member id, the k+1 smallest member ids (bounded agg — k
@@ -208,12 +207,8 @@ object Similarity {
     // self-cosine computed the same way the direct path would score an
     // identical pair (1.0 after 6dp rounding for any non-zero vector;
     // a zero vector reproduces the direct path's NaN rather than a lie)
-    // persist only on the materialized path: `classes` feeds three
-    // consumers, but materialize = false is the lazy/explain contract
-    // (PlanShapeSpec, ExplainAll) — an eager persist + the inner
-    // checkpoint there would run jobs at plan CONSTRUCTION and pin a
-    // cached relation no caller could ever free
-    val classesBase = embeddings
+    // persisted: `classes` feeds three consumers
+    val classes = embeddings
       .select(col(idCol).cast("long").as("_id"), col(vecCol).as("_v"))
       .groupBy("_v")
       .agg(min(col("_id")).as("_rep"),
@@ -222,17 +217,14 @@ object Similarity {
       .withColumn("_selfcos",
         round(gvec.cosinePre(col("_v"), col("_v"),
           gvec.norm(col("_v")), gvec.norm(col("_v"))), 6))
-    val classes =
-      if (materialize)
-        classesBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else classesBase
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // class-level graph over DISTINCT vectors only: every quadratic-ish
     // term (k-means, probe ranking, the cell join's pair volume) now
     // scales with the distinct count, not the row count
     val dg = knnGraphDirect(
       classes.select(col("_rep").as(idCol), col("_v").as(vecCol)),
       k, idCol, vecCol, centroidEvery, kmeansIters, singleCell,
-      materialize, maxCells, nAssign, spill)
+      maxCells, nAssign, spill)
     // member → class mapping: the one full-corpus exchange the wrapper
     // adds (an equi-join keyed by the vector value; identical values
     // hash identically, so this is an ordinary shuffle join)
@@ -266,7 +258,7 @@ object Similarity {
       own.unionByName(cross).groupBy("query_id")
         .agg(gagg.topKByScore(col("cosine"), col("neighbor_id"), k)
           .as("_top")))
-    if (materialize) Scratch.materializeThenFree(graph, classes) else graph
+    Scratch.materializeThenFree(graph, classes)
   }
 
   /** The celled kNN-graph core over rows assumed DISTINCT-enough that
@@ -277,8 +269,7 @@ object Similarity {
     */
   private[graft] def knnGraphDirect(embeddings: DataFrame, k: Int,
       idCol: String, vecCol: String, centroidEvery: Int,
-      kmeansIters: Int, singleCell: Boolean,
-      materialize: Boolean, maxCells: Int,
+      kmeansIters: Int, singleCell: Boolean, maxCells: Int,
       nAssign: Int, spill: Int): DataFrame = {
     val cents =
       if (singleCell) Array.empty[(Long, Array[Float])]
@@ -369,7 +360,7 @@ object Similarity {
       scored.groupBy("query_id")
         .agg(gagg.topKByScore(col("cosine"), col("neighbor_id"), k,
           dedup = spilled).as("_top")))
-    if (materialize) Scratch.materializeThenFree(graph, assigned) else graph
+    Scratch.materializeThenFree(graph, assigned)
   }
 
   /** Cell count above which assignment switches from the flat argmax to
@@ -1229,8 +1220,7 @@ object Similarity {
       indexPath: String, centroids: Array[(Long, Array[Float])],
       codebooks: Array[Array[Array[Float]]], queries: DataFrame,
       k: Int = 5, nProbe: Int = 20, idCol: String = "vec_id",
-      vecCol: String = "embedding", materialize: Boolean = true,
-      rerank: Int = 24): DataFrame = {
+      vecCol: String = "embedding", rerank: Int = 24): DataFrame = {
     requireVectorDim(queries, vecCol,
       codebooks.length * codebooks.head.head.length, "ivfPqTopKIndexed")
     val codes = spark.read.parquet(s"$indexPath/codes")
@@ -1281,7 +1271,7 @@ object Similarity {
         // the refine sidecar under the SAME static cell filter — the
         // re-rank reads only the probed cells' directories
         raw.filter(col("cell_id").isin(cells: _*)))
-      if (materialize) Scratch.materializeThenFree(topk, probed) else topk
+      Scratch.materializeThenFree(topk, probed)
     }
   }
 
@@ -1293,10 +1283,9 @@ object Similarity {
   def ivfCosineTopKIndexed(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, centroids: Array[(Long, Array[Float])],
       queries: DataFrame, k: Int = 5, nProbe: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      materialize: Boolean = true): DataFrame =
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     ivfCosineTopKSnapshot(spark.read.parquet(indexPath), centroids,
-      queries, k, nProbe, idCol, vecCol, materialize)
+      queries, k, nProbe, idCol, vecCol)
 
   /** [[ivfCosineTopKIndexed]] against an already-RESOLVED index relation.
     * Resolving `spark.read.parquet(indexPath)` lists every `cell_id=`
@@ -1313,8 +1302,7 @@ object Similarity {
   def ivfCosineTopKSnapshot(assigned: DataFrame,
       centroids: Array[(Long, Array[Float])],
       queries: DataFrame, k: Int = 5, nProbe: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      materialize: Boolean = true): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val probed = probedCellsOf(centroids, queries, nProbe, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // queries are index-build-small: their probed cell set collects to a
@@ -1333,7 +1321,7 @@ object Similarity {
         assigned.filter(col("cell_id").isin(cells: _*))
       }
     val topk = probeJoin(pruned, probed, k)
-    if (materialize) Scratch.materializeThenFree(topk, probed) else topk
+    Scratch.materializeThenFree(topk, probed)
   }
 
   /** (query_id, _qv, cell_id) for each query's nProbe nearest cells —
@@ -1660,7 +1648,7 @@ object Similarity {
     */
   def pcaCosineTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       kPca: Int = 16, shortlist: Int = 800, idCol: String = "vec_id",
-      vecCol: String = "embedding", materialize: Boolean = true): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     val (_, comps) = pcaComponents(corpus, kPca, vecCol)
     def proj(v: Column): Column =
       array(comps.toIndexedSeq.map(c => dotFD(v, compLit(c))): _*)
@@ -1678,16 +1666,10 @@ object Similarity {
     // same ops in the same order, bit-identical scores. At 100 TB the
     // projected corpus (kPca doubles/row < the raw vector) would be a
     // written artifact, like the IVF index.
-    val cLazy = corpus.select(col(idCol).cast("long").as("neighbor_id"),
+    val c = corpus.select(col(idCol).cast("long").as("neighbor_id"),
         proj(col(vecCol)).as("_cp"))
       .withColumn("_cpn", sqrt(dotD(col("_cp"), col("_cp"))))
-    // lazy mode (plan inspection / composition) must not leak a cache
-    // entry the caller can't free — same contract as the dedup scratch
-    // relations
-    val c =
-      if (materialize)
-        cLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else cLazy
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val projCos = dotD(col("_qp"), col("_cp")) /
       (col("_qpn") * col("_cpn"))
     val cand = c.crossJoin(broadcast(q.select(col("query_id"), col("_qp"),
@@ -1712,7 +1694,7 @@ object Similarity {
     val out = explodeTopK(
       exact.groupBy("query_id")
         .agg(gagg.topKByScore(col("cosine"), col("neighbor_id"), k).as("_top")))
-    if (materialize) Scratch.materializeThenFree(out, c) else out
+    Scratch.materializeThenFree(out, c)
   }
 
   /** PCA-reconstruction-error outlier score: how much of each vector's

@@ -330,7 +330,7 @@ object TextAnalysis {
   }
 
   def bm25TopTerms(documents: DataFrame, k: Int = 3, k1: Double = 1.2,
-      b: Double = 0.75, materialize: Boolean = true): DataFrame = {
+      b: Double = 0.75): DataFrame = {
     val base = documents.select(col("doc_id"), tokens(col("text")).as("_t"))
     // persisted: the tokenize+termCounts front feeds BOTH the df
     // aggregate and the scoring join (the ngramLmScore pattern); the
@@ -342,7 +342,7 @@ object TextAnalysis {
     val stats = base.agg(count(lit(1)).cast("double").as("_nd"),
       avg(size(col("_t"))).as("_avgdl"))
     val out = bm25Score(tf, dfreq, stats, k, k1, b)
-    if (materialize) Scratch.materializeThenFree(out, tf) else out
+    Scratch.materializeThenFree(out, tf)
   }
 
   /** Train-once half of BM25 scoring: materialize the corpus term
@@ -730,11 +730,11 @@ object TextAnalysis {
         sum("n").cast("long").as("n_feats"))
 
   def dsirWeights(documents: DataFrame, targetLang: String = "en",
-      buckets: Int = 4096, materialize: Boolean = true): DataFrame = {
+      buckets: Int = 4096): DataFrame = {
     val db = docDsirBuckets(documents, buckets)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val scored = dsirScore(db, dsirLogRatios(db, targetLang, buckets))
-    if (materialize) Scratch.materializeThenFree(scored, db) else scored
+    Scratch.materializeThenFree(scored, db)
   }
 
   /** Train-once half of the production importance-weighting shape:
@@ -889,8 +889,7 @@ object TextAnalysis {
     * the per-doc rollup re-uses the exploded relation (persisted so the
     * tokenize+hash pass runs once, freed deterministically).
     */
-  def passageDedup(documents: DataFrame, w: Int = 8,
-      materialize: Boolean = true): DataFrame = {
+  def passageDedup(documents: DataFrame, w: Int = 8): DataFrame = {
     val passages = documents
       .select(col("doc_id"), tokens(col("text")).as("_t"))
       .withColumn("_np", (size(col("_t")) / lit(w)).cast("int"))
@@ -910,7 +909,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_passages"), col("n_dup_passages"),
         round(col("n_dup_passages").cast("double")
           / col("n_passages").cast("double"), 6).as("dup_ratio"))
-    if (materialize) Scratch.materializeThenFree(out, passages) else out
+    Scratch.materializeThenFree(out, passages)
   }
 
   /** Domain-mixture rebalancing: sample every source down to (at most) the

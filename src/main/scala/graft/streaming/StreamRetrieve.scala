@@ -74,9 +74,8 @@ object StreamRetrieve {
         def land(): Unit =
           graft.engine.BatchLedger.stagedLanding(batch.sparkSession,
             s"$checkpointDir/graft_ledger", batchId) { st =>
-            // materialize=true: the probe relation persists inside the
-            // indexed query and is freed once the k-bounded result lands —
-            // without it each batch would leak one cached relation
+            // the probe relation persists inside the indexed query and is
+            // freed before it returns, so no batch leaves a cached relation
             Similarity.ivfCosineTopKSnapshot(snapshot,
               centroids, batch, k, nProbe, idCol, vecCol)
               .write.mode("overwrite").parquet(st.appendInto(outPath))

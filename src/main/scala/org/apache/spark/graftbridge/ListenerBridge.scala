@@ -3,14 +3,14 @@ package org.apache.spark.graftbridge
 import org.apache.spark.SparkContext
 
 /** `SparkContext.listenerBus` and `LiveListenerBus.waitUntilEmpty` are
-  * `private[spark]`; telemetry mains (graft.ShuffleReport) need a drain
-  * barrier so stage-completion events posted by the last job are counted
-  * before the per-query totals are snapshotted. Compiled inside the
+  * `private[spark]`; `graft.Executions` needs a drain barrier so the
+  * events posted by the last job (stage completions, SQL execution ends)
+  * are delivered before they are read. Compiled inside the
   * `org.apache.spark` hierarchy to re-export just that one call.
   *
   * VERSION PIN: verified against Spark 4.1.2. If Spark renames
-  * `listenerBus`/`waitUntilEmpty`, only ShuffleReport's drain barrier is
-  * affected — telemetry would undercount late events, never corrupt
+  * `listenerBus`/`waitUntilEmpty`, only that drain barrier is affected —
+  * telemetry and plan capture would miss late events, never corrupt
   * query results.
   */
 object ListenerBridge {

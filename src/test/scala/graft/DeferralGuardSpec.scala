@@ -106,34 +106,36 @@ class DeferralGuardSpec extends SparkSpec {
       "aggregate-keyed build side must suppress the flag")
   }
 
-  test("the WHOLE registered suite is hazard-free (static plans, " +
-      "sf0.001)") {
-    // the sbt-test gate for the trap class: every SparkEntry query's
-    // pre-execution physical plan walks clean. Static plans carry the
-    // same join strategies the audit sees at this SF (stats-based
-    // broadcasts resolve at planning); the per-round DeferralAudit main
-    // re-checks the EXECUTED (AQE-final) plans and is the thorough
-    // artifact — this test is the cheap always-on tripwire.
-    sys.props("graft.explain.lazy") = "true"
-    try {
-      val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          val hz = DeferralGuard.hazards(
-            fn(spark, "/root/testdata/sf0.001").queryExecution.executedPlan)
-          if (hz.isEmpty) Nil else Seq(s"$name: ${hz.mkString("; ")}")
-      }
-      assert(bad.isEmpty, s"deferral hazards in registered queries:\n${
-        bad.mkString("\n")}")
-    } finally {
-      sys.props.remove("graft.explain.lazy")
-      // constructing the suite persist()s internal relations (lazy-mode
-      // contract leaves them cached); drop them so a later suite's plan
-      // never resolves to an entry THIS suite registered — a cold-
-      // warehouse model build can EXECUTE such an entry, and an executed
-      // InMemoryRelation prints Final+Initial plans, shifting other
-      // suites' exchange/plan_id counts (the r16 cold-start flake)
-      spark.catalog.clearCache()
+  /** One pass over the registry for two gates: each SparkEntry query is
+    * built at sf0.001 and written to the no-op sink, recording the
+    * deferral hazards of every plan that ran and whether the session's
+    * CacheManager is empty afterwards.
+    */
+  private lazy val registryPass: Seq[(String, Seq[DeferralGuard.Hazard], Boolean)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val hz = DeferralGuard.queryHazards(spark, fn, "/root/testdata/sf0.001")
+      (name, hz, spark.sharedState.cacheManager.isEmpty)
     }
+
+  test("the WHOLE registered suite is hazard-free (executed plans, sf0.001)") {
+    // the sbt-test gate for the trap class: every plan a registered query
+    // runs walks clean — the checkpoints its operators ran while it was
+    // built (each a pipeline breaker) and its own plan, AQE-final as
+    // executed. The per-round DeferralAudit main runs the same walk and
+    // writes the artifact; this test is the always-on tripwire.
+    val bad = registryPass.collect {
+      case (name, hz, _) if hz.nonEmpty => s"$name: ${hz.mkString("; ")}"
+    }
+    assert(bad.isEmpty, s"deferral hazards in registered queries:\n${
+      bad.mkString("\n")}")
+  }
+
+  test("no registered query leaves a CacheManager entry behind") {
+    // every scratch persist is freed by the operator that made it
+    // (Scratch.materializeThenFree); the first query after which the
+    // cache is non-empty is the one that leaked
+    val firstLeak = registryPass.collectFirst { case (name, _, false) => name }
+    assert(firstLeak === None, "a registered query left a cache entry behind")
   }
 
   test("dotDD/dotFD kernels are bit-identical to the builtin " +

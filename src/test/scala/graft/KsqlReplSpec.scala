@@ -28,9 +28,7 @@ class KsqlReplSpec extends SparkSpec {
   test("all.sql pipes through the REPL end-to-end with golden tables") {
     // the tutorial script verbatim, plus the two interactive queries the
     // README has the user type at the prompt (README.md:98, 407-420)
-    val script = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/files/ksqldb-cli/all.sql")),
-      "UTF-8") +
+    val script = TutorialScript.text +
       "\nSELECT * FROM players EMIT CHANGES;\n" +
       "SELECT * FROM player_stats EMIT CHANGES;\n"
     val (executed, outText) = replay(script)

@@ -49,10 +49,7 @@ class KsqlServerSpec extends SparkSpec {
       val (c0, info) = get(port, "/info")
       assert(c0 === 200 && info.contains("KsqlServerInfo"))
 
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/files/ksqldb-cli/all.sql")),
-        "UTF-8")
-      val (c1, out1) = post(port, "/ksql", jsonBody(script))
+      val (c1, out1) = post(port, "/ksql", jsonBody(TutorialScript.text))
       assert(c1 === 200)
       // the script's invalid aggregation errors inline, execution continues
       assert(out1.contains("MISSING_AGGREGATION"))
@@ -197,6 +194,57 @@ class KsqlServerSpec extends SparkSpec {
       server.stop(0)
       engine.stopAll()
     }
+  }
+
+  test("an oversized body is refused with 413 on every endpoint; the " +
+      "tutorial DDL still succeeds") {
+    import graft.ksql.KsqlStreamingEngine
+    val oversized = jsonBody("x" * KsqlServer.MaxBodyBytes)
+    val ddl = jsonBody(
+      """CREATE STREAM match_event (
+        id VARCHAR KEY, event_type VARCHAR, player_id VARCHAR,
+        home boolean) WITH (KAFKA_TOPIC='match_event');""")
+    val batch = KsqlServer.start(new KsqlEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s)), 0)
+    try {
+      val port = batch.getAddress.getPort
+      assert(post(port, "/ksql", oversized)._1 === 413)
+      assert(post(port, "/ksql", ddl)._1 === 200)
+    } finally batch.stop(0)
+    val engine = new KsqlStreamingEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s))
+    val streaming = KsqlServer.startStreaming(engine, 0)
+    try {
+      val port = streaming.getAddress.getPort
+      assert(post(port, "/ksql", oversized)._1 === 413)
+      assert(post(port, "/query", oversized)._1 === 413)
+      assert(post(port, "/ksql", ddl)._1 === 200)
+    } finally {
+      streaming.stop(0)
+      engine.stopAll()
+    }
+  }
+
+  test("stopping the streaming plane leaves no non-daemon handler thread") {
+    import graft.ksql.KsqlStreamingEngine
+    import scala.jdk.CollectionConverters._
+    def nonDaemon = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && !t.isDaemon).toSet
+    val before = nonDaemon
+    val engine = new KsqlStreamingEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s))
+    val server = KsqlServer.startStreaming(engine, 0)
+    try assert(post(server.getAddress.getPort, "/ksql",
+      jsonBody("SHOW STREAMS;"))._1 === 200)
+    finally {
+      server.stop(0)
+      engine.stopAll()
+    }
+    // an idle handler-pool thread that is not a daemon would keep the
+    // JVM alive for the pool's keep-alive after the server has stopped
+    val lingering = nonDaemon -- before
+    assert(lingering.isEmpty,
+      s"non-daemon threads outlive server.stop: ${lingering.map(_.getName)}")
   }
 
   test("json escaping survives quotes, backslashes, and control chars") {

@@ -5,20 +5,27 @@ import graft.streaming.Tutorial
 import org.apache.spark.sql.Row
 
 /** Acceptance: the engine executes the reference's OWN KSQL script
-  * (/root/reference/files/ksqldb-cli/all.sql — read at test time, never
-  * vendored) end-to-end, plus the README's player_stats query over the
-  * canonical insert sequence, and reproduces the golden outputs.
+  * ([[TutorialScript]], the committed `all.sql`) end-to-end, plus the
+  * README's player_stats query over the canonical insert sequence, and
+  * reproduces the golden outputs.
   */
 class KsqlTutorialSpec extends SparkSpec {
 
   private def engine = new KsqlEngine(spark,
     connectorProvider = (s, _) => Tutorial.playersSeed(s))
 
+  test("the committed all.sql is the reference's own where that is present") {
+    val original = java.nio.file.Paths.get("/root/reference/files/ksqldb-cli/all.sql")
+    if (java.nio.file.Files.exists(original))
+      assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(original),
+        TutorialScript.bytes),
+        "src/test/resources/reference/all.sql differs from the reference's " +
+          "all.sql: replace the reconstruction with the original")
+  }
+
   test("the reference's all.sql runs end-to-end with correct states") {
-    val script = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/files/ksqldb-cli/all.sql")), "UTF-8")
     val e = engine
-    val results = e.executeScript(script)
+    val results = e.executeScript(TutorialScript.text)
     val queries = results.collect {
       case StatementResult(PushQuery(_, _), Some(df), None) => df
     }

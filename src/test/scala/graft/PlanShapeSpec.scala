@@ -1,6 +1,8 @@
 package graft
 
 import graft.pipeline.Similarity
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** Asserts the scale-critical physical-plan shapes: the top-k aggregate
@@ -9,6 +11,31 @@ import org.apache.spark.sql.functions._
   * and small dimension joins must broadcast.
   */
 class PlanShapeSpec extends SparkSpec {
+
+  /** Runs `body` and returns its result with the plans of the
+    * checkpoints it ran. A pipeline operator executes inside its call
+    * (`Scratch.materializeThenFree`), so these are the plans that
+    * produced its result; the returned DataFrame only scans checkpointed
+    * blocks. Each plan is the one planned before adaptive execution
+    * re-planned it (an AQE root's initial plan, or the plan itself when
+    * AQE is off): an executed AQE root prints both its final and initial
+    * plans, which would count every node twice.
+    */
+  private def checkpointed[T](body: => T): (T, Seq[SparkPlan]) = {
+    val (out, runs) = Executions.capture(spark)(body)
+    val plans = runs.collect {
+      case ("localCheckpoint", qe) => qe.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+    }
+    assert(plans.nonEmpty, s"no checkpoint captured; executions: ${runs.map(_._1)}")
+    (out, plans)
+  }
+
+  /** The checkpoint plans `body` ran, as one text. */
+  private def checkpointPlan(body: => Any): String =
+    checkpointed(body)._2.mkString("\n")
 
   test("bruteCosineTopK: partial top-k before the exchange, no corpus shuffle") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -131,8 +158,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("bm25 (t23): narrow termCounts TF, bounded exchanges, no occurrence shuffle") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val plan = graft.pipeline.TextAnalysis.bm25TopTerms(docs, materialize = false)
-      .queryExecution.executedPlan.toString
+    val plan = checkpointPlan(graft.pipeline.TextAnalysis.bm25TopTerms(docs))
     // same budget as t8: the df agg + the per-doc rank window — dl and the
     // (N, avgdl) stats must NOT add exchanges (broadcast 1-row aggregate)
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
@@ -151,14 +177,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("dsir weights (t29): log-ratio table broadcasts into the scoring " +
       "join; no sort-merge, no cartesian") {
-    // defensive (mirrors t29b): an earlier suite's leaked-and-EXECUTED
-    // feature cache entry would substitute an InMemoryRelation whose
-    // display carries Final+Initial plans — two plan_ids for one
-    // physical exchange — and break the distinct-id budget below
-    spark.catalog.clearCache()
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val plan = graft.pipeline.TextAnalysis.dsirWeights(docs,
-      materialize = false).queryExecution.executedPlan.toString
+    val plan = checkpointPlan(graft.pipeline.TextAnalysis.dsirWeights(docs))
     // the ≤buckets-row log-ratio relation must broadcast — the per-doc
     // feature side (corpus-sized at 100 TB) never re-shuffles to score
     assert(plan.contains("BroadcastHashJoin"),
@@ -175,16 +195,9 @@ class PlanShapeSpec extends SparkSpec {
     val exchanges = raw"Exchange hashpartitioning[^\n]*plan_id=(\d+)".r
       .findAllMatchIn(plan).map(_.group(1)).toSet.size
     assert(exchanges <= 6, s"t29 shuffles beyond its agg budget:\n$plan")
-    // materialize = false leaves the feature relation cached (documented
-    // Scratch contract); drop it so later plan tests (t29b) don't
-    // resolve their feature build to this test's InMemoryRelation
-    spark.catalog.clearCache()
   }
 
   test("indexed DSIR (t29b): no distribution fit in the scoring plan") {
-    // defensive: an aborted t29 test would leak its cached feature
-    // relation, substituting an InMemoryRelation into this test's plan
-    spark.catalog.clearCache()
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val dir = java.nio.file.Files.createTempDirectory("graft_dsirplan").toString
     graft.pipeline.TextAnalysis.buildDsirModel(docs, s"$dir/m")
@@ -288,55 +301,48 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("pairwise dedup joins stay equi-hash (no cartesian product)") {
-    // materialize = false: the public API localCheckpoints (hiding the
-    // plan behind a LogicalRDD scan); the lazy variant runs the SAME
-    // physical plan, so asserting on it covers what executes.
+    // the public API returns a scan of checkpointed blocks; the plan that
+    // produced them is the operator's checkpoint
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val lazyPairs = Map(
+    val pairPlans = Map(
       "d2_ngram_jaccard" ->
-        graft.pipeline.Dedup.ngramJaccardPairs(docs, materialize = false),
+        checkpointPlan(graft.pipeline.Dedup.ngramJaccardPairs(docs)),
       "d3_minhash_pairs" ->
-        graft.pipeline.Dedup.minhashPairs(docs, materialize = false),
+        checkpointPlan(graft.pipeline.Dedup.minhashPairs(docs)),
       "d4_simhash_pairs" ->
-        graft.pipeline.Dedup.simhashPairs(docs, materialize = false),
+        checkpointPlan(graft.pipeline.Dedup.simhashPairs(docs)),
       "d12_incremental_dedup" ->
-        graft.pipeline.Dedup.incrementalMinhashPairs(
+        checkpointPlan(graft.pipeline.Dedup.incrementalMinhashPairs(
           docs.filter(col("doc_id") % 20 =!= 0),
-          docs.filter(col("doc_id") % 20 === 0), materialize = false),
+          docs.filter(col("doc_id") % 20 === 0))),
       "d20_prefix_jaccard" ->
-        graft.pipeline.Dedup.prefixJaccardPairs(docs, materialize = false),
+        checkpointPlan(graft.pipeline.Dedup.prefixJaccardPairs(docs)),
       "d21_scoped_prefix_jaccard" ->
-        graft.pipeline.Dedup.prefixJaccardPairsScoped(docs, materialize = false))
-    for ((q, df) <- lazyPairs) {
-      val plan = df.queryExecution.executedPlan.toString
+        checkpointPlan(graft.pipeline.Dedup.prefixJaccardPairsScoped(docs)))
+    for ((q, plan) <- pairPlans) {
       assert(!plan.contains("CartesianProduct"), s"$q went cartesian:\n$plan")
       assert(plan.contains("graft_sorted_intersect_count") || q == "d4_simhash_pairs",
         s"$q lost the merge-scan verify:\n$plan")
     }
-    spark.sharedState.cacheManager.clearCache() // lazy mode leaves scratch cached
   }
 
   test("knn graph: partial top-k under the exchange, cell join stays equi-hash") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val plan = Similarity.knnGraph(emb, k = 5, centroidEvery = 50,
-      materialize = false).queryExecution.executedPlan.toString
+    val plan = checkpointPlan(Similarity.knnGraph(emb, k = 5, centroidEvery = 50))
     assert(plan.contains("partial_graft_top_k_by_score"),
       s"no partial top-k phase:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"cell join went cartesian:\n$plan")
     assert(!plan.contains("Window"), s"rank window crept in:\n$plan")
-    spark.sharedState.cacheManager.clearCache()
   }
 
   test("passage dedup and domain mixture: docs never shuffle whole") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     // t21: the exchanges carry (doc_id, passage-hash) longs and the per-doc
     // rollup — never the text column
-    val p21 = graft.pipeline.TextAnalysis.passageDedup(docs, materialize = false)
-      .queryExecution.executedPlan.toString
+    val p21 = checkpointPlan(graft.pipeline.TextAnalysis.passageDedup(docs))
     assert(!p21.contains("CartesianProduct"), s"t21 cartesian:\n$p21")
     assert(!"Exchange hashpartitioning\\([^)]*text".r.findFirstIn(p21).isDefined,
       s"t21 shuffles document text:\n$p21")
-    spark.sharedState.cacheManager.clearCache()
     // t22: per-source totals and the 1-row minimum broadcast back onto the
     // scan — the final join must be broadcast, not sort-merge
     val p22 = graft.pipeline.TextAnalysis.domainMixture(docs)
@@ -426,10 +432,9 @@ class PlanShapeSpec extends SparkSpec {
     withSqlConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.enabled" -> "false") { // AQE wraps the tree in a leaf
       import org.apache.spark.sql.execution.SparkPlan
-      val pairs = graft.pipeline.Dedup.incrementalMinhashPairsIndexed(
-        spark, tbl, s"$dir/sh", docs.filter(col("doc_id") % 20 === 0),
-        materialize = false)
-      val root = pairs.queryExecution.executedPlan
+      val (_, Seq(root)) = checkpointed(
+        graft.pipeline.Dedup.incrementalMinhashPairsIndexed(
+          spark, tbl, s"$dir/sh", docs.filter(col("doc_id") % 20 === 0)))
       // root-to-scan path for the band table's bucketed file scan
       def pathTo(p: SparkPlan): Option[List[SparkPlan]] =
         if (p.toString.linesIterator.next().contains(s"default.$tbl"))
@@ -509,11 +514,10 @@ class PlanShapeSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 10)
     val centroids = Similarity.buildIvfIndex(emb, dir)
-    // materialize = false exposes the probe plan (the public default
-    // localCheckpoints the k-bounded result and frees the probe cache)
-    val topk = Similarity.ivfCosineTopKIndexed(spark, dir, centroids, queries,
-      materialize = false)
-    val plan = topk.queryExecution.executedPlan.toString
+    // the probe plan is the checkpoint of the k-bounded result
+    val (topk, probePlans) = checkpointed(
+      Similarity.ivfCosineTopKIndexed(spark, dir, centroids, queries))
+    val plan = probePlans.mkString("\n")
     assert(plan.matches("(?s).*PartitionFilters: \\[[^\\]]*cell_id[^\\]]*\\].*"),
       s"probe not pruning index partitions:\n$plan")
     // the indexed path returns the same answer as the in-memory IVF built
@@ -525,7 +529,6 @@ class PlanShapeSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute & indexed).size.toDouble / brute.size
     assert(recall >= 0.5, s"indexed IVF recall $recall too low")
-    spark.sharedState.cacheManager.clearCache() // lazy mode leaves the probe cached
   }
 
   test("materialized IVFPQ index: gated probe prunes BOTH codes and raw " +
@@ -536,11 +539,9 @@ class PlanShapeSpec extends SparkSpec {
     // centroidEvery=10 keeps nCells above the gated nProbe at this SF
     val (cents, cb) = Similarity.buildIvfPqIndex(emb, dir,
       centroidEvery = 10)
-    // materialize = false exposes the probe plan (the public default
-    // localCheckpoints the k-bounded result and frees the probe cache)
-    val gated = Similarity.ivfPqTopKIndexed(spark, dir, cents, cb,
-      queries, k = 5, nProbe = 4, materialize = false)
-    val plan = gated.queryExecution.executedPlan.toString
+    // the probe plan is the checkpoint of the k-bounded result
+    val plan = checkpointPlan(Similarity.ivfPqTopKIndexed(spark, dir, cents, cb,
+      queries, k = 5, nProbe = 4))
     // two partition-pruned scans: the codes shortlist AND the raw
     // refine sidecar both carry the probed-cell filter
     val pruned = "PartitionFilters: \\[[^\\]]*cell_id[^\\]]*\\]".r
@@ -564,7 +565,6 @@ class PlanShapeSpec extends SparkSpec {
     val adcOnly = microRows(Similarity.ivfPqTopKIndexed(spark, dir, cents,
       cb, queries, k = 5, nProbe = Int.MaxValue, rerank = 0))
     assert(adcOnly === microRows(Similarity.pqTopK(emb, queries, k = 5)))
-    spark.catalog.clearCache() // lazy mode leaves the probe cached
   }
 
   test("partitioned layout: partition predicate prunes directories") {
@@ -794,10 +794,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("pca retrieval: corpus never shuffles — exchanges carry bounded top-k buffers") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val plan = graft.pipeline.Similarity
-      .pcaCosineTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
-        materialize = false)
-      .queryExecution.executedPlan.toString
+    val plan = checkpointPlan(graft.pipeline.Similarity
+      .pcaCosineTopK(emb, emb.filter(col("vec_id") < 10), k = 5))
     // both passes meet the corpus through broadcasts (query set, then the
     // bounded candidate list); the only hash exchanges sit under the
     // per-query top-k aggregates and carry ≤ shortlist-sized heap buffers
@@ -812,8 +810,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("source overlap: vocabulary equi-join, no cartesian on corpus rows") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val plan = graft.pipeline.Dedup.sourceOverlap(docs, materialize = false)
-      .queryExecution.executedPlan.toString
+    val plan = checkpointPlan(graft.pipeline.Dedup.sourceOverlap(docs))
     // the only nested-loop join is the bounded sources² frame (broadcast
     // of the per-source size relation); corpus-sized rows meet only in
     // hash joins/aggregates on the shingle-hash key
