@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession configuration every diagnostic/benchmark main
-  * shares. One definition, seven callers (Bench, ScaleBench, StreamBench,
-  * Verify, RecallReport, ShuffleReport, ExplainAll): a config
+  * shares (Bench, Verify, ExplainAll, ShuffleReport, Decompose and the
+  * other harness mains call `local`): a config
   * added here — e.g. the ObjectHashAggregate fallback threshold, which
   * changes physical aggregate operator choice — reaches the plan dumps,
   * the benches, and the oracle runner identically. A drifted copy would
@@ -32,7 +32,7 @@ object GraftSession {
       // Trade-off (ADVICE r14): ~80× more retained generated classes =
       // more metaspace + JIT code-cache residency in a long-lived
       // session. This factory serves only the repo's bench/diagnostic
-      // mains (its 8 callers), and the env override lets any of them —
+      // mains, and the env override lets any of them —
       // or a decomposition run testing the retention itself — dial it
       // without a rebuild. Library consumers configure their own
       // sessions; nothing here leaks into user code.

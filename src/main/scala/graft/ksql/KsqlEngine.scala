@@ -8,6 +8,16 @@ import org.apache.spark.sql.types._
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+/** One executed statement: the result DataFrame (queries/SHOW) or the
+  * error ksqlDB's CLI would have printed (the reference script itself
+  * contains one intentionally-invalid query — a non-aggregated,
+  * non-grouped column, all.sql:100-125 — that the tutorial then fixes
+  * with LATEST_BY_OFFSET; a script run must survive it the way the CLI
+  * does).
+  */
+final case class StatementResult(statement: KsqlStatement,
+    df: Option[DataFrame], error: Option[String])
+
 /** Executes the reference's KSQL dialect on Spark — the API-compatibility
   * layer that lets a user of the reference submit the same statements they
   * run today (reference: files/ksqldb-cli/all.sql, README.md).
@@ -20,31 +30,14 @@ import scala.jdk.CollectionConverters._
   * always observes the converged state a ksqlDB push query would have
   * emitted last (the README's golden tables are exactly these states).
   * Continuous *emission* semantics (the changelog between states) are
-  * exercised by the Structured Streaming path
-  * (graft.streaming.Tutorial + StreamingTutorialSpec).
-  *
-  * SELECT translation to Spark SQL is textual and total for the dialect:
-  * `EMIT CHANGES` stripped, `UCASE`→`upper`, `COUNT_DISTINCT(x)`→
-  * `count(DISTINCT x)`, `LATEST_BY_OFFSET(x)`→`max_by(x, s._offset)` with
-  * `s` the stream source in FROM, `SELECT *` expanded against the
-  * catalog (ksqlDB prefixes join stars with the source alias). Everything
-  * else — CASE WHEN, CAST AS DOUBLE, joins, grouping, trailing aliases —
-  * is shared SQL that Catalyst parses directly.
+  * exercised by [[KsqlStreamingEngine]]. SELECT translation is the shared
+  * [[KsqlTranslator]]'s.
   */
-/** One executed statement: the result DataFrame (queries/SHOW) or the
-  * error ksqlDB's CLI would have printed (the reference script itself
-  * contains one intentionally-invalid query — a non-aggregated,
-  * non-grouped column, all.sql:100-125 — that the tutorial then fixes
-  * with LATEST_BY_OFFSET; a script run must survive it the way the CLI
-  * does).
-  */
-final case class StatementResult(statement: KsqlStatement,
-    df: Option[DataFrame], error: Option[String])
-
 class KsqlEngine(
     val spark: SparkSession,
     connectorProvider: (SparkSession, Map[String, String]) => DataFrame =
-      KsqlEngine.jdbcConnectorProvider) extends KsqlTranslator {
+      KsqlEngine.jdbcConnectorProvider) extends KsqlTranslator[DataFrame] {
+  import KsqlTranslator.{LogColumns, RowtimeBaseSec, connectorTopic, topicOf}
 
   /** One in-memory topic: `base` is the connector-fed portion as a LAZY
     * DataFrame (never collected to the driver — a 100 TB snapshot stays
@@ -61,30 +54,16 @@ class KsqlEngine(
     }
   }
 
-  /** Record timestamps (ksqlDB's ROWTIME) for the in-memory log: a fixed
-    * epoch base + 1 s per offset — deterministic ingestion-time semantics
-    * for the tutorial's hand-INSERTed records, enabling WINDOW clauses.
-    */
-  private val RowtimeBaseSec = 1577836800L // 2020-01-01T00:00:00Z
+  /** An INSERTed record's ROWTIME: the [[withRowtime]] clock as a value. */
   private def rowtime(offset: Long): java.sql.Timestamp =
     new java.sql.Timestamp((RowtimeBaseSec + offset) * 1000L)
-  override protected def rowtimeSupported: Boolean = true
-  private case class Decl(kind: String, name: String, cols: Seq[ColumnDef],
-      topic: String)
-  private case class Derived(kind: String, name: String, select: String,
-      partitionBy: Option[String], topic: String)
-
-  graft.functions.GraftFunctions.registerAll(spark)
 
   private val topics = mutable.LinkedHashMap.empty[String, Topic]
   private val decls = mutable.LinkedHashMap.empty[String, Decl]
-  private val derived = mutable.LinkedHashMap.empty[String, Derived]
   private val connectors = mutable.ArrayBuffer.empty[String]
   private val properties = mutable.Map.empty[String, String]
 
-  protected def kindOf(name: String): Option[String] =
-    decls.get(name.toLowerCase).map(_.kind)
-      .orElse(derived.get(name.toLowerCase).map(_.kind))
+  protected def declared(name: String): Option[Decl] = decls.get(name.toLowerCase)
 
   // ---- statement execution -------------------------------------------
 
@@ -96,28 +75,19 @@ class KsqlEngine(
         StatementResult(stmt, None, Some(e.getMessage)) }
     }
 
-  def execute(statement: String): Option[DataFrame] = {
-    val stmts = KsqlParser.splitStatements(statement)
-    require(stmts.size == 1, s"expected one statement, got ${stmts.size}")
-    execute(KsqlParser.parse(stmts.head))
-  }
-
   def execute(stmt: KsqlStatement): Option[DataFrame] = stmt match {
     case SetProperty(k, v) =>
       properties(k) = v; None
 
     case CreateConnector(name, props) =>
-      val df = connectorProvider(spark, props)
-      val topic = props.getOrElse("topic.prefix", "") +
-        props.getOrElse("table.whitelist",
-          throw new IllegalArgumentException("connector needs table.whitelist"))
-      val withLog = KsqlEngine.withLogColumns(spark, df, RowtimeBaseSec)
-      topics(topic) = Topic(withLog.schema, withLog, mutable.ArrayBuffer.empty)
+      val withLog = withLogColumns(connectorProvider(spark, props))
+      topics(connectorTopic(props)) =
+        Topic(withLog.schema, withLog, mutable.ArrayBuffer.empty)
       connectors += name
       None
 
     case CreateCollection(kind, name, cols, props) =>
-      val topic = props.getOrElse("KAFKA_TOPIC", props.getOrElse("kafka_topic", name))
+      val topic = topicOf(name, props)
       if (!topics.contains(topic)) {
         val schema = StructType(cols.map(c =>
           StructField(c.name, c.dataType)).toSeq :+
@@ -130,61 +100,39 @@ class KsqlEngine(
       decls(name.toLowerCase) = Decl(kind, name, cols, topic)
       None
 
-    case CreateAsSelect(kind, name, props, select, pby) =>
-      val topic = props.getOrElse("KAFKA_TOPIC", props.getOrElse("kafka_topic", name))
+    case c: CreateAsSelect =>
       refreshViews()
-      // validate eagerly so a bad CSAS fails at CREATE time, like ksqlDB
-      spark.sql(translateSelect(select, injectOffset = kind == "STREAM"))
-      derived(name.toLowerCase) = Derived(kind, name, select, pby, topic)
+      createDerived(c)
       None
 
-    case InsertValues(target, columns, values) =>
+    case ins @ InsertValues(target, _, _) =>
       val d = decls.getOrElse(target.toLowerCase,
         throw new NoSuchElementException(s"unknown collection $target"))
       val topic = topics(d.topic)
-      val order = columns.getOrElse(d.cols.map(_.name))
-      require(order.length == values.length,
-        s"INSERT arity ${values.length} != ${order.length}")
-      val byName = order.zip(values).map { case (c, v) => c.toLowerCase -> v }.toMap
-      val declByName = d.cols.map(c => c.name.toLowerCase -> c).toMap
-      // a typo'd column must fail loudly, exactly as the streaming plane
-      // does — the lookup below resolves by DECLARED names only, so an
-      // unvalidated unknown column would silently land an all-null row
-      // and the value would vanish
-      order.filterNot(c => declByName.contains(c.toLowerCase)).foreach(c =>
-        throw new IllegalArgumentException(s"unknown column $c in ${d.name}"))
+      val supplied = insertColumns(d.name, d.cols, ins)
+        .map { case (c, v) => c.name.toLowerCase -> (c, v) }.toMap
       // the appended Row unions POSITIONALLY against the TOPIC schema —
       // align by name, not by declaration order (a decl over a
       // connector-fed topic may list columns in a different order, or a
       // subset; positional append would corrupt silently)
-      val valueFields = topic.schema.fields.toSeq
-        .filterNot(f => f.name == "_offset" || f.name == "_rowtime")
+      val valueFields = topic.schema.fields.toSeq.filterNot(f => LogColumns(f.name))
       val unknown = d.cols.map(_.name.toLowerCase)
         .filterNot(n => valueFields.exists(_.name.toLowerCase == n))
       require(unknown.isEmpty,
         s"decl ${d.name} columns ${unknown.mkString(",")} not in topic " +
           s"${d.topic}'s schema — INSERTed values would have nowhere to land")
-      val converted = valueFields.map { f =>
-        declByName.get(f.name.toLowerCase)
-          .flatMap(c => byName.get(c.name.toLowerCase)
-            .map(v => convert(v, c.dataType)))
-          .orNull
-      }
+      val converted = valueFields.map(f => supplied.get(f.name.toLowerCase)
+        .map { case (c, v) => KsqlEngine.convertLiteral(v, c.dataType) }.orNull)
       val off = topic.baseCount + topic.rows.length
       topic.rows += Row.fromSeq(converted :+ off :+ rowtime(off))
       None
 
-    case PushQuery(select, emitFinal) =>
+    case q @ PushQuery(select, _) =>
       // batch re-evaluation sees the complete log, so every window is
       // already final — EMIT FINAL and EMIT CHANGES converge here; the
-      // validity rule still applies (finals exist per window), so the
-      // same statement never succeeds here and fails on the streaming
-      // engine. The window may be INHERITED from a derived CSAS/CTAS
-      // view the select reads — resolve through view definitions like
-      // the streaming engine's effectiveWindowKind, or the two planes
-      // give different verdicts on the same statement.
-      require(!emitFinal || effectiveWindowKind(select).isDefined,
-        "EMIT FINAL requires a WINDOW clause (finals exist per window)")
+      // validity rule still applies, so the same statement never
+      // succeeds here and fails on the streaming engine
+      pushWindowKind(q)
       refreshViews()
       Some(upperCased(spark.sql(translateSelect(select))))
 
@@ -197,14 +145,14 @@ class KsqlEngine(
 
     case DescribeCommand(name) => {
       import spark.implicits._
-      val rows = decls.get(name.toLowerCase) match {
+      val rows = declared(name) match {
         case Some(d) =>
           d.cols.map(c => (c.name.toUpperCase, c.dataType.sql,
             if (c.isKey) (if (d.kind == "TABLE") "PRIMARY KEY" else "KEY") else ""))
         case None =>
           refreshViews()
           spark.table(name).schema.fields.toSeq
-            .filterNot(f => f.name == "_offset" || f.name == "_rowtime")
+            .filterNot(f => LogColumns(f.name))
             .map(f => (f.name.toUpperCase, f.dataType.sql, ""))
       }
       Some(rows.toDF("column_name", "type", "key"))
@@ -264,12 +212,6 @@ class KsqlEngine(
       })
   }
 
-  // effectiveWindowKind lives on the shared trait (one resolution, so
-  // EMIT FINAL over a windowed view gets the same verdict on both
-  // planes); this engine only supplies the derived-view select lookup
-  override protected def derivedSelect(name: String): Option[String] =
-    derived.get(name).map(_.select)
-
   /** Reject removing a collection some remaining derived query reads —
     * otherwise every later refreshViews() would throw resolving the
     * dangling SELECT (ksqlDB rejects such drops the same way).
@@ -305,29 +247,8 @@ class KsqlEngine(
       }
       view.createOrReplaceTempView(d.name)
     }
-    derived.values.foreach { d =>
-      var df = spark.sql(translateSelect(d.select, injectOffset = d.kind == "STREAM"))
-      d.partitionBy.foreach(p => df = df.repartition(col(p)))
-      df.createOrReplaceTempView(d.name)
-    }
+    refreshDerived()
   }
-
-  // SELECT translation lives in KsqlTranslator
-
-  /** Declared/derived output columns of a collection (no `_offset`). */
-  protected def viewColumns(name: String): Seq[String] =
-    decls.get(name.toLowerCase).map(_.cols.map(_.name))
-      .getOrElse(spark.table(name).columns.toSeq
-        .filterNot(c => c == "_offset" || c == "_rowtime"))
-
-  private def upperCased(df: DataFrame): DataFrame =
-    df.toDF(df.columns.map(_.toUpperCase).toIndexedSeq: _*)
-
-  /** ksqlDB literal → Spark row value, including the complex constructors
-    * `ARRAY[...]`, `MAP('k' := v, ...)`, `STRUCT(f := v, ...)`.
-    */
-  private def convert(literal: String, dt: DataType): Any =
-    KsqlEngine.convertLiteral(literal, dt)
 }
 
 object KsqlEngine {
@@ -416,36 +337,12 @@ object KsqlEngine {
     }
   }
 
-  /** Append the topic-log columns to a connector snapshot WITHOUT
-    * collecting it: `_offset` via a distributed `zipWithIndex` (stable
-    * partition-order indices — the arrival-order analogue; one partition-
-    * size job, no data to the driver) and `_rowtime` derived in-plan from
-    * the offset (the engines' deterministic ingestion-time clock).
-    */
-  private[ksql] def withLogColumns(spark: SparkSession, df: DataFrame,
-      rowtimeBaseSec: Long): DataFrame = {
-    val schema = StructType(df.schema.fields.toSeq :+
-      StructField("_offset", LongType, nullable = false))
-    val indexed = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    spark.createDataFrame(indexed, schema)
-      .withColumn("_rowtime",
-        timestamp_seconds(lit(rowtimeBaseSec) + col("_offset")))
-  }
-
   /** Default CREATE SOURCE CONNECTOR provider: a JDBC snapshot via
     * Spark's JDBC source (S1; the reference's Connect worker equivalent,
     * all.sql:3-18). Tests inject an in-memory provider instead.
     */
   def jdbcConnectorProvider(spark: SparkSession,
-      props: Map[String, String]): DataFrame = {
-    val opts = Seq(
-      "user" -> props.get("connection.user"),
-      "password" -> props.get("connection.password"),
-      // drivers absent from java.sql.Driver's service registry (e.g.
-      // embedded Derby) need an explicit class name
-      "driver" -> props.get("connection.driver.class"))
-      .collect { case (k, Some(v)) => k -> v }.toMap
-    Sources.fromJdbcSnapshot(spark,
-      props("connection.url"), props("table.whitelist"), opts)
-  }
+      props: Map[String, String]): DataFrame =
+    Sources.fromJdbcSnapshot(spark, props("connection.url"),
+      props("table.whitelist"), KsqlTranslator.jdbcOptions(props))
 }

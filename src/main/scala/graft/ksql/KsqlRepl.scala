@@ -24,11 +24,12 @@ import java.io.{BufferedReader, InputStreamReader, PrintStream}
   * tutorial script itself contains one intentionally-invalid query,
   * all.sql:100-125).
   *
-  * Connector resolution: `CREATE SOURCE CONNECTOR` uses the real JDBC
-  * provider when `GRAFT_REPL_JDBC=1` (the reference's Connect-to-MySQL
-  * path, needs a reachable database); by default it binds the tutorial's
-  * 10-row players seed ([[graft.streaming.Tutorial.playersSeed]],
-  * init.sql:11-22) so `all.sql` replays standalone.
+  * Connector resolution ([[interactiveSession]]): `CREATE SOURCE
+  * CONNECTOR` uses the real JDBC provider when `GRAFT_REPL_JDBC=1` (the
+  * reference's Connect-to-MySQL path, needs a reachable database); by
+  * default it binds the tutorial's 10-row players seed
+  * ([[graft.streaming.Tutorial.playersSeed]], init.sql:11-22) so
+  * `all.sql` replays standalone.
   */
 object KsqlRepl {
 
@@ -132,10 +133,16 @@ object KsqlRepl {
       script.substring(lastSemi + 1))
   }
 
-  def main(args: Array[String]): Unit = {
+  /** The session and connector provider both interactive mains run on
+    * (this REPL and [[KsqlServer]]): `CREATE SOURCE CONNECTOR` uses the
+    * real JDBC provider when `GRAFT_REPL_JDBC=1`, else the tutorial's
+    * players seed.
+    */
+  private[ksql] def interactiveSession(appName: String)
+      : (SparkSession, (SparkSession, Map[String, String]) => DataFrame) = {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName("graft-ksql")
+      .appName(appName)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -146,6 +153,11 @@ object KsqlRepl {
         KsqlEngine.jdbcConnectorProvider _
       else (s: SparkSession, _: Map[String, String]) =>
         graft.streaming.Tutorial.playersSeed(s)
+    (spark, provider)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (spark, provider) = interactiveSession("graft-ksql")
     val interactive = System.console() != null
     if (interactive)
       println("graft ksql — statements end with ';', 'exit' leaves")
@@ -171,20 +183,7 @@ object KsqlRepl {
       }
       val engine = new KsqlStreamingEngine(spark,
         connectorProvider = provider, livePolling = live)
-      try run(stmt => engine.execute(stmt).map { h =>
-          // drain, snapshot, RELEASE: a leaked active query would pin
-          // its MemoryStream attachments (every later INSERT pays dead
-          // fan-out), and a stopped-but-registered sink table would pin
-          // its whole changelog for the session's lifetime. The
-          // snapshot DataFrame is analyzed BEFORE the release (inside
-          // the try), so the dropped temp view doesn't affect rendering
-          // it; the release rides a finally so a drain that throws
-          // (runtime error in the micro-batch) cannot leak the handle.
-          try {
-            h.processAllAvailable()
-            h.emissions
-          } finally engine.release(h)
-        }, in, System.out, interactive)
+      try run(engine.executeDrained _, in, System.out, interactive)
       finally engine.stopAll()
     } else {
       val engine = new KsqlEngine(spark, connectorProvider = provider)

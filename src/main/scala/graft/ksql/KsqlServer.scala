@@ -1,7 +1,7 @@
 package graft.ksql
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.DataFrame
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -22,10 +22,11 @@ import java.nio.charset.StandardCharsets
   *
   * Statements execute against ONE engine instance (the server IS the
   * session, as in ksqlDB): handlers serialize on it, so concurrent
-  * clients see a consistent catalog. Execution semantics are the batch
-  * engine's converged states; the live-changelog plane is
-  * [[startStreaming]] — `POST /query` holds a chunked response open and
-  * streams push-query rows as they emit (see its scaladoc).
+  * clients see a consistent catalog. Both planes share one handler set
+  * ([[serve]]); [[start]] serves the batch engine's converged states,
+  * [[startStreaming]] the live-changelog plane — `POST /query` holds a
+  * chunked response open and streams push-query rows as they emit (see
+  * its scaladoc).
   */
 object KsqlServer {
 
@@ -174,51 +175,83 @@ object KsqlServer {
         s"""{"statement":${jsonValue(statement)},"status":"SUCCESS"}"""
     }
 
-  /** Start a server bound to `port` (0 = ephemeral; read the bound port
-    * off the returned server). The caller owns the engine's lifecycle.
+  private def errorJson(message: String): String =
+    s"""{"error":${jsonValue(message)}}"""
+
+  /** The request prelude every statement endpoint shares: POST only,
+    * bounded body, a top-level `"ksql"` string field. Yields the script,
+    * or None once the 4xx answer has been sent.
     */
-  def start(engine: KsqlEngine, port: Int): HttpServer = {
+  private def readScript(ex: HttpExchange): Option[String] =
+    if (ex.getRequestMethod != "POST") {
+      respond(ex, 405, errorJson("use POST")); None
+    } else readBody(ex).flatMap { body =>
+      val script = extractKsqlField(body)
+      if (script.isEmpty)
+        respond(ex, 400, """{"error":"body must be {\"ksql\": \"...\"}"}""")
+      script
+    }
+
+  /** Create and start the one server both planes run on. `/ksql` executes each
+    * `;`-terminated statement through `exec` while holding `session`'s
+    * monitor for the WHOLE script: one engine = one session, so another
+    * client's statements never interleave into this script's
+    * create/insert/select sequence (half-built catalog reads). On the
+    * streaming plane the lock also spans the push-query drain (a
+    * script's SELECT must see exactly the script's own INSERTs), so a
+    * slow push query stalls other clients — fine for the interactive
+    * statement plane this models. `/info` answers `info`; `routes` adds
+    * plane-specific endpoints.
+    *
+    * Handlers run on a cached pool of daemon threads: an open `/query`
+    * response must not block the `/ksql` INSERTs that feed it, and an
+    * idle pool never keeps the JVM alive after `server.stop`.
+    */
+  private def serve(port: Int, session: AnyRef,
+      exec: KsqlStatement => Option[DataFrame], info: String,
+      routes: (String, HttpExchange => Unit)*): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
-
-    server.createContext("/ksql", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = try {
-        if (ex.getRequestMethod != "POST") {
-          respond(ex, 405, """{"error":"use POST"}"""); return
-        }
-        val body = readBody(ex).getOrElse(return)
-        extractKsqlField(body) match {
-          case None =>
-            respond(ex, 400, """{"error":"body must be {\"ksql\": \"...\"}"}""")
-          case Some(script) =>
-            // one engine = one session; serialize statement execution so
-            // concurrent clients observe a consistent catalog
-            val results = engine.synchronized {
-              KsqlParser.splitStatements(script).map { s =>
-                try resultJson(s, engine.execute(KsqlParser.parse(s)))
-                catch { case e: Exception =>
-                  s"""{"statement":${jsonValue(s)},""" +
-                    s""""error":${jsonValue(e.getMessage)}}"""
-                }
-              }
+    server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "graft-ksql-handler")
+      t.setDaemon(true)
+      t
+    })
+    val ksql = (ex: HttpExchange) =>
+      try readScript(ex).foreach { script =>
+        val results = session.synchronized {
+          KsqlParser.splitStatements(script).map { s =>
+            try resultJson(s, exec(KsqlParser.parse(s)))
+            catch { case e: Exception =>
+              s"""{"statement":${jsonValue(s)},""" +
+                s""""error":${jsonValue(e.getMessage)}}"""
             }
-            respond(ex, 200, results.mkString("[", ",", "]"))
+          }
         }
-      } catch { case e: Exception =>
-        respond(ex, 500, s"""{"error":${jsonValue(e.getMessage)}}""")
-      } finally ex.close()
-    })
-
-    server.createContext("/info", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = try {
-        respond(ex, 200,
-          """{"KsqlServerInfo":{"version":"graft","kafkaClusterId":"n/a",""" +
-            """"ksqlServiceId":"graft_spark_"}}""")
-      } finally ex.close()
-    })
-
+        respond(ex, 200, results.mkString("[", ",", "]"))
+      } catch { case e: Exception => respond(ex, 500, errorJson(e.getMessage)) }
+    val handlers = Seq("/ksql" -> ksql,
+      "/info" -> ((ex: HttpExchange) => respond(ex, 200, info))) ++ routes
+    handlers.foreach { case (path, handle) =>
+      server.createContext(path, (ex: HttpExchange) => try handle(ex) finally ex.close())
+    }
     server.start()
     server
   }
+
+  /** Start the batch plane bound to `port` (0 = ephemeral; read the bound
+    * port off the returned server). The caller owns the engine's
+    * lifecycle.
+    */
+  def start(engine: KsqlEngine, port: Int): HttpServer =
+    serve(port, engine, engine.execute(_: KsqlStatement),
+      """{"KsqlServerInfo":{"version":"graft","kafkaClusterId":"n/a",""" +
+        """"ksqlServiceId":"graft_spark_"}}""")
+
+  /** Most `/query` streams one streaming server holds open at once. Each
+    * is a standing Structured Streaming query plus a handler thread; past
+    * the cap a request is answered 503 before any query starts.
+    */
+  private[graft] val MaxPushStreams: Int = 8
 
   /** The STREAMING serving plane — ksqlDB's push-query interaction over
     * HTTP (reference README.md:94-118: `SELECT … EMIT CHANGES;` and rows
@@ -233,198 +266,107 @@ object KsqlServer {
     *    further chunks (the ksqlDB `/query-stream` delimited shape,
     *    simplified). A blank heartbeat line flushes every poll so a
     *    closed client is detected promptly; disconnect stops the
-    *    standing query.
+    *    standing query. At most [[MaxPushStreams]] are open at once.
     *  - `POST /ksql` executes statements on the SAME streaming engine
     *    (one engine = one session, as in ksqlDB): DDL/INSERT → status,
-    *    push queries → drain-snapshot-stop (the streaming REPL's
-    *    contract — the changelog so far).
-    *
-    * Handlers run on a cached thread pool: an open `/query` response
-    * must not block the `/ksql` INSERTs that feed it. Its threads are
-    * daemons, so an idle pool never keeps the JVM alive after
-    * `server.stop`.
+    *    push queries → [[KsqlStreamingEngine.executeDrained]] (the
+    *    streaming REPL's contract — the changelog so far).
     */
   def startStreaming(engine: KsqlStreamingEngine, port: Int): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-    server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool { r =>
-      val t = new Thread(r, "graft-ksql-handler")
-      t.setDaemon(true)
-      t
-    })
+    val slots = new java.util.concurrent.Semaphore(MaxPushStreams)
+    serve(port, engine, engine.executeDrained,
+      """{"KsqlServerInfo":{"version":"graft","kafkaClusterId":"n/a",""" +
+        """"ksqlServiceId":"graft_spark_","plane":"streaming"}}""",
+      "/query" -> { ex =>
+        if (!slots.tryAcquire())
+          respond(ex, 503, errorJson(s"at most $MaxPushStreams push queries stream at once"))
+        else try streamQuery(engine, ex) finally slots.release()
+      })
+  }
 
-    server.createContext("/ksql", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = try {
-        if (ex.getRequestMethod != "POST") {
-          respond(ex, 405, """{"error":"use POST"}"""); return
-        }
-        val body = readBody(ex).getOrElse(return)
-        extractKsqlField(body) match {
-          case None =>
-            respond(ex, 400, """{"error":"body must be {\"ksql\": \"...\"}"}""")
-          case Some(script) =>
-            // serialize the WHOLE script, not per statement — the batch
-            // plane does, and per-statement locking let another client's
-            // statements interleave into this script's
-            // create/insert/select sequence (half-built catalog reads).
-            // KNOWN TRADEOFF: the lock is held across the push-query
-            // drain/snapshot too (a script's SELECT must see exactly the
-            // script's own INSERTs — draining outside the lock would let
-            // another client's rows into the snapshot), so a script with
-            // a slow push query stalls other clients and /query
-            // teardowns (release shares this monitor, reentrant). Fine
-            // for the interactive statement plane this models; a
-            // high-concurrency deployment wants per-session engines.
-            val results = engine.synchronized {
-              KsqlParser.splitStatements(script).map { s =>
-                try {
-                  val out = engine.execute(KsqlParser.parse(s)) match {
-                    case Some(h) =>
-                      // drain, snapshot, RELEASE (the streaming REPL
-                      // rule): a leaked active query would pin
-                      // MemoryStream buffers, and a stopped-but-kept
-                      // sink table would pin its whole changelog. The
-                      // release rides a finally: a drain/collect that
-                      // throws (runtime error in the micro-batch) must
-                      // not leak the handle it was about to release —
-                      // one leaked changelog per failing statement on a
-                      // long-lived server, the /query leak class.
-                      try {
-                        h.processAllAvailable()
-                        Some(resultJson(s, Some(h.emissions)))
-                      } finally engine.release(h)
-                    case None => None
-                  }
-                  out.getOrElse(resultJson(s, None))
-                } catch { case e: Exception =>
-                  s"""{"statement":${jsonValue(s)},""" +
-                    s""""error":${jsonValue(e.getMessage)}}"""
-                }
-              }
-            }
-            respond(ex, 200, results.mkString("[", ",", "]"))
-        }
+  /** One held-open `/query` response (see [[startStreaming]]). */
+  private def streamQuery(engine: KsqlStreamingEngine, ex: HttpExchange): Unit = {
+    val script = readScript(ex).getOrElse(return)
+    val stmts = KsqlParser.splitStatements(script)
+    val parsed =
+      try {
+        require(stmts.size == 1,
+          s"/query takes exactly one statement, got ${stmts.size}")
+        KsqlParser.parse(stmts.head)
       } catch { case e: Exception =>
-        respond(ex, 500, s"""{"error":${jsonValue(e.getMessage)}}""")
-      } finally ex.close()
-    })
-
-    server.createContext("/query", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = try {
-        if (ex.getRequestMethod != "POST") {
-          respond(ex, 405, """{"error":"use POST"}"""); return
-        }
-        val body = readBody(ex).getOrElse(return)
-        val script = extractKsqlField(body).getOrElse {
-          respond(ex, 400,
-            """{"error":"body must be {\"ksql\": \"...\"}"}"""); return
-        }
-        val stmts = KsqlParser.splitStatements(script)
-        val parsed =
-          try {
-            require(stmts.size == 1,
-              s"/query takes exactly one statement, got ${stmts.size}")
-            KsqlParser.parse(stmts.head)
-          } catch { case e: Exception =>
-            respond(ex, 400,
-              s"""{"error":${jsonValue(e.getMessage)}}"""); return
+        respond(ex, 400, errorJson(e.getMessage)); return
+      }
+    if (!parsed.isInstanceOf[PushQuery]) {
+      respond(ex, 400, """{"error":"/query serves push queries """ +
+        """(SELECT ... EMIT CHANGES;) - use /ksql for statements"}""")
+      return
+    }
+    val h =
+      try engine.synchronized { engine.execute(parsed).get }
+      catch { case e: Exception =>
+        respond(ex, 400, errorJson(e.getMessage)); return
+      }
+    // from here on the handle exists: EVERYTHING — including the
+    // chunked handshake, which throws IOException if the client
+    // already disconnected — runs inside the try whose finally
+    // releases, or the aborted connection leaks a standing query
+    try {
+      ex.getResponseHeaders.set("Content-Type",
+        "application/json; charset=utf-8")
+      ex.sendResponseHeaders(200, 0) // length 0 => chunked, held open
+      val os = ex.getResponseBody
+      try {
+        h.processAllAvailable()
+        val cols = h.emissions.columns
+          .map(c => s""""${jsonEscape(c.toUpperCase)}"""")
+          .mkString("[", ",", "]")
+        os.write((s"""{"queryId":${jsonValue(h.name)},""" +
+          s""""columnNames":$cols}""" + "\n")
+          .getBytes(StandardCharsets.UTF_8))
+        os.flush()
+        // poll-and-stream: every new changelog row becomes one chunk.
+        // Chunk order is emission order because the memory sink
+        // appends per micro-batch and [[PushHandle.drainSince]] walks
+        // its batch list in order. Each poll is INCREMENTAL — O(rows
+        // landed since the last poll), zero Spark jobs —
+        // so a long-lived connection's total serving cost is O(rows
+        // emitted), not O(changelog²). The stream's own trigger
+        // advances micro-batches; the loop never calls
+        // processAllAvailable, it only observes the sink. The blank
+        // heartbeat makes a closed client surface as IOException on
+        // flush even when no rows are arriving, and a query stopped
+        // under the handler (engine shutdown) ends the response after
+        // one final drain instead of spinning until a write fails.
+        var cursor = -1L
+        var more = true
+        while (more) {
+          more = h.query.isActive
+          val (rows, next) = h.drainSince(cursor)
+          cursor = next
+          rows.foreach { r =>
+            val cells = r.toSeq.map(jsonValue).mkString("[", ",", "]")
+            os.write((s"""{"row":{"columns":$cells}}""" + "\n")
+              .getBytes(StandardCharsets.UTF_8))
           }
-        if (!parsed.isInstanceOf[PushQuery]) {
-          respond(ex, 400, """{"error":"/query serves push queries """ +
-            """(SELECT ... EMIT CHANGES;) - use /ksql for statements"}""")
-          return
+          os.write('\n'.toInt); os.flush()
+          if (more) Thread.sleep(100)
         }
-        val h =
-          try engine.synchronized { engine.execute(parsed).get }
-          catch { case e: Exception =>
-            respond(ex, 400,
-              s"""{"error":${jsonValue(e.getMessage)}}"""); return
-          }
-        // from here on the handle exists: EVERYTHING — including the
-        // chunked handshake, which throws IOException if the client
-        // already disconnected — runs inside the try whose finally
-        // releases, or the aborted connection leaks a standing query
-        try {
-          ex.getResponseHeaders.set("Content-Type",
-            "application/json; charset=utf-8")
-          ex.sendResponseHeaders(200, 0) // length 0 => chunked, held open
-          val os = ex.getResponseBody
-          try {
-          h.processAllAvailable()
-          val cols = h.emissions.columns
-            .map(c => s""""${jsonEscape(c.toUpperCase)}"""")
-            .mkString("[", ",", "]")
-          os.write((s"""{"queryId":${jsonValue(h.name)},""" +
-            s""""columnNames":$cols}""" + "\n")
-            .getBytes(StandardCharsets.UTF_8))
-          os.flush()
-          // poll-and-stream: every new changelog row becomes one chunk.
-          // Chunk order is emission order because the memory sink
-          // appends per micro-batch and [[PushHandle.drainSince]] walks
-          // its batch list in order. Each poll is INCREMENTAL — O(rows
-          // landed since the last poll), driver-only, zero Spark jobs —
-          // so a long-lived connection's total serving cost is O(rows
-          // emitted), not O(changelog²). The stream's own trigger
-          // advances micro-batches; the loop never calls
-          // processAllAvailable, it only observes the sink. The blank
-          // heartbeat makes a closed client surface as IOException on
-          // flush even when no rows are arriving, and a query stopped
-          // under the handler (engine shutdown) ends the response after
-          // one final drain instead of spinning until a write fails.
-          var cursor = -1L
-          var more = true
-          while (more) {
-            more = h.query.isActive
-            val (rows, next) = h.drainSince(cursor)
-            cursor = next
-            rows.foreach { r =>
-              val cells = r.toSeq.map(jsonValue).mkString("[", ",", "]")
-              os.write((s"""{"row":{"columns":$cells}}""" + "\n")
-                .getBytes(StandardCharsets.UTF_8))
-            }
-            os.write('\n'.toInt); os.flush()
-            if (more) Thread.sleep(100)
-          }
-          } finally {
-            try os.close() catch { case _: java.io.IOException => () }
-          }
-        } catch {
-          case _: java.io.IOException => () // client closed: normal end
-        } finally {
-          // release, not stop: the memory sink's table holds this
-          // connection's full changelog — a server field-tested only by
-          // short tests would leak one changelog per connection served
-          engine.release(h)
-        }
-      } finally ex.close()
-    })
-
-    server.createContext("/info", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = try {
-        respond(ex, 200,
-          """{"KsqlServerInfo":{"version":"graft","kafkaClusterId":"n/a",""" +
-            """"ksqlServiceId":"graft_spark_","plane":"streaming"}}""")
-      } finally ex.close()
-    })
-
-    server.start()
-    server
+      } finally {
+        try os.close() catch { case _: java.io.IOException => () }
+      }
+    } catch {
+      case _: java.io.IOException => () // client closed: normal end
+    } finally {
+      // release, not stop: the memory sink's table holds this
+      // connection's full changelog — a server field-tested only by
+      // short tests would leak one changelog per connection served
+      engine.release(h)
+    }
   }
 
   def main(args: Array[String]): Unit = {
     val port = sys.env.getOrElse("GRAFT_KSQL_PORT", "8088").toInt
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName("graft-ksql-server")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val provider =
-      if (sys.env.get("GRAFT_REPL_JDBC").contains("1"))
-        KsqlEngine.jdbcConnectorProvider _
-      else (s: SparkSession, _: Map[String, String]) =>
-        graft.streaming.Tutorial.playersSeed(s)
+    val (spark, provider) = KsqlRepl.interactiveSession("graft-ksql-server")
     // GRAFT_SERVER_ENGINE=streaming serves the live-changelog plane:
     // /query streams push-query rows over a chunked response (the same
     // switch the REPL uses, GRAFT_REPL_ENGINE=streaming)

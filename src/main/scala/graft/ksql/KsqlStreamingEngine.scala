@@ -9,7 +9,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** One live push query. */
 final case class PushHandle(spark: SparkSession, name: String,
@@ -51,6 +50,21 @@ final case class PushHandle(spark: SparkSession, name: String,
   def stop(): Unit = query.stop()
 }
 
+/** Enables LIVE `CREATE SOURCE CONNECTOR` execution: a connector declared
+  * with `mode=incrementing` starts a real [[graft.engine.Sources.jdbcPollingSource]]
+  * loop instead of taking a one-shot snapshot. `ticks` is a factory for
+  * the pacing stream — one fresh streaming DataFrame per connector
+  * (production: `spark.readStream.format("rate")` at the poll interval;
+  * tests: a MemoryStream advanced deterministically); `root` is where
+  * each connector's topic landing + checkpoint live. `pollEveryMs` caps
+  * the poll cadence via the query trigger — the correct lever for "poll
+  * the database every N ms" (a slower tick ROW rate still polls once per
+  * micro-batch, so rate-source row counts alone cannot slow polling
+  * below one per batch).
+  */
+final case class LivePolling(ticks: () => DataFrame, root: String,
+    pollEveryMs: Option[Long] = None)
+
 /** Continuous-execution KSQL: push queries run as real Structured
   * Streaming jobs — `EMIT CHANGES` actually emits changes.
   *
@@ -74,33 +88,15 @@ final case class PushHandle(spark: SparkSession, name: String,
   * EXPLAIN, DROP, TERMINATE) live on [[KsqlEngine]]; submitting one here
   * fails with a clear unsupported-statement error.
   */
-/** Enables LIVE `CREATE SOURCE CONNECTOR` execution: a connector declared
-  * with `mode=incrementing` starts a real [[graft.engine.Sources.jdbcPollingSource]]
-  * loop instead of taking a one-shot snapshot. `ticks` is a factory for
-  * the pacing stream — one fresh streaming DataFrame per connector
-  * (production: `spark.readStream.format("rate")` at the poll interval;
-  * tests: a MemoryStream advanced deterministically); `root` is where
-  * each connector's topic landing + checkpoint live. `pollEveryMs` caps
-  * the poll cadence via the query trigger — the correct lever for "poll
-  * the database every N ms" (a slower tick ROW rate still polls once per
-  * micro-batch, so rate-source row counts alone cannot slow polling
-  * below one per batch).
-  */
-final case class LivePolling(ticks: () => DataFrame, root: String,
-    pollEveryMs: Option[Long] = None)
-
 class KsqlStreamingEngine(
     val spark: SparkSession,
     connectorProvider: (SparkSession, Map[String, String]) => DataFrame =
       KsqlEngine.jdbcConnectorProvider,
-    livePolling: Option[LivePolling] = None) extends KsqlTranslator {
+    livePolling: Option[LivePolling] = None) extends KsqlTranslator[PushHandle] {
+  import KsqlTranslator.{connectorTopic, jdbcOptions, topicOf}
 
-  graft.functions.GraftFunctions.registerAll(spark)
   spark.udf.register("graft_exact_count_distinct",
     org.apache.spark.sql.functions.udaf(new graft.functions.ExactCountDistinct))
-
-  // COUNT_DISTINCT rewriting is the trait's depth-matched rewriteCall
-  // with this engine's countDistinctRender (the exact Aggregator)
 
   /** A declared stream: the durable record buffer (the topic log) plus
     * every MemoryStream currently attached to it. Each push query gets
@@ -120,10 +116,6 @@ class KsqlStreamingEngine(
       topic: String,
       buffer: mutable.ArrayBuffer[(String, Long)],
       attached: mutable.ArrayBuffer[Attachment])
-  private case class TableDecl(name: String, cols: Seq[ColumnDef],
-      keyCols: Seq[String], topic: String)
-  private case class DerivedDef(kind: String, select: String,
-      partitionBy: Option[String])
 
   /** Connector-fed topics as LAZY DataFrames (with `_offset`) — never
     * collected to the driver; a 100 TB snapshot stays distributed.
@@ -137,29 +129,19 @@ class KsqlStreamingEngine(
   /** Stream decls bound to live topics: no MemoryStream, no INSERT —
     * records arrive from the database through the polling loop only.
     */
-  private case class LiveStreamDecl(name: String, cols: Seq[ColumnDef],
-      topic: String)
-  private val liveStreamDecls =
-    mutable.LinkedHashMap.empty[String, LiveStreamDecl]
+  private val liveStreamDecls = mutable.LinkedHashMap.empty[String, Decl]
   private val streamDecls = mutable.LinkedHashMap.empty[String, StreamDecl]
-  private val tableDecls = mutable.LinkedHashMap.empty[String, TableDecl]
-  private val derivedKinds = mutable.LinkedHashMap.empty[String, String]
-  private val derivedDefs = mutable.LinkedHashMap.empty[String, DerivedDef]
+  private val tableDecls = mutable.LinkedHashMap.empty[String, Decl]
   private val offsets = mutable.Map.empty[String, Long].withDefaultValue(0L)
   private val handles = mutable.ArrayBuffer.empty[PushHandle]
   private var queryId = 0
 
-  /** Attach a fresh MemoryStream to a declared stream: replay the buffer,
-    * re-register the collection view over it. Already-started queries keep
-    * their resolved plans (bound to their own attached streams).
-    *
-    * `watermarked` registers the view with a zero-delay watermark on
-    * `_rowtime` — required for SESSION-window aggregations (Spark only
-    * supports session windows in append mode, which needs a watermark to
-    * close sessions). Zero delay is exact here because rowtime derives
-    * from the topic offset, so event time is monotone by construction —
-    * nothing is ever late.
-    */
+  protected def declared(name: String): Option[Decl] = {
+    val n = name.toLowerCase
+    streamDecls.get(n).map(d => Decl("STREAM", d.name, d.cols, d.topic))
+      .orElse(liveStreamDecls.get(n)).orElse(tableDecls.get(n))
+  }
+
   /** Decode a `(value json, _offset)` wire DataFrame — the one topic
     * shape shared by MemoryStream logs, live polling landings, and the
     * Kafka path — into the declared columns + `_rowtime`. `jsonKey` maps
@@ -178,6 +160,17 @@ class KsqlStreamingEngine(
         col("_offset"): _*))
   }
 
+  /** Attach a fresh MemoryStream to a declared stream: replay the buffer,
+    * re-register the collection view over it. Already-started queries keep
+    * their resolved plans (bound to their own attached streams).
+    *
+    * `watermarked` registers the view with a zero-delay watermark on
+    * `_rowtime` — required for SESSION-window aggregations (Spark only
+    * supports session windows in append mode, which needs a watermark to
+    * close sessions). Zero delay is exact here because rowtime derives
+    * from the topic offset, so event time is monotone by construction —
+    * nothing is ever late.
+    */
   private def attachStream(d: StreamDecl, watermarked: Boolean = false): Unit = {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -205,8 +198,7 @@ class KsqlStreamingEngine(
     * isolation is unnecessary; re-registration only toggles the watermark
     * (same zero-delay exactness argument as [[attachStream]]).
     */
-  private def registerLiveView(d: LiveStreamDecl,
-      watermarked: Boolean = false): Unit = {
+  private def registerLiveView(d: Decl, watermarked: Boolean = false): Unit = {
     val wire = spark.readStream.schema(WireSchema)
       .parquet(liveTopics(d.topic))
     val base = wireDecode(wire, d.cols, _.toLowerCase)
@@ -223,7 +215,7 @@ class KsqlStreamingEngine(
     * resolve-time snapshot (stream–static join semantics, same contract
     * as the snapshot path).
     */
-  private def registerTableView(td: TableDecl): Unit = {
+  private def registerTableView(td: Decl): Unit = {
     val projected = liveTopics.get(td.topic) match {
       case Some(landing) =>
         wireDecode(spark.read.schema(WireSchema).parquet(landing),
@@ -235,14 +227,9 @@ class KsqlStreamingEngine(
         withRowtime(
           base.select(td.cols.map(c => col(c.name)) :+ col("_offset"): _*))
     }
-    TableOps.latestByKey(projected, td.keyCols, "_offset")
+    TableOps.latestByKey(projected, td.cols.filter(_.isKey).map(_.name), "_offset")
       .createOrReplaceTempView(td.name)
   }
-
-  // effectiveWindowKind lives on the shared trait; this engine only
-  // supplies the derived-view select lookup it recurses through
-  override protected def derivedSelect(name: String): Option[String] =
-    derivedDefs.get(name).map(_.select)
 
   /** Exact streaming count-distinct: Spark rejects native
     * count(DISTINCT) under streaming aggregation, so the argument (whole
@@ -252,53 +239,11 @@ class KsqlStreamingEngine(
   override protected def countDistinctRender(args: String): String =
     s"graft_exact_count_distinct(CAST(($args) AS STRING))"
 
-  /** Re-register derived (CSAS/CTAS) views against the current stream
-    * views, in declaration order.
-    */
-  private def refreshDerived(): Unit =
-    derivedDefs.foreach { case (name, DerivedDef(kind, select, pby)) =>
-      var df = spark.sql(translate(select, injectOffset = kind == "STREAM"))
-      pby.foreach(p => df = df.repartition(col(p)))
-      df.createOrReplaceTempView(name)
-    }
-
-  protected def kindOf(name: String): Option[String] =
-    streamDecls.get(name.toLowerCase).map(_ => "STREAM")
-      .orElse(liveStreamDecls.get(name.toLowerCase).map(_ => "STREAM"))
-      .orElse(tableDecls.get(name.toLowerCase).map(_ => "TABLE"))
-      .orElse(derivedKinds.get(name.toLowerCase))
-
-  protected def viewColumns(name: String): Seq[String] =
-    streamDecls.get(name.toLowerCase).map(_.cols.map(_.name))
-      .orElse(liveStreamDecls.get(name.toLowerCase).map(_.cols.map(_.name)))
-      .orElse(tableDecls.get(name.toLowerCase).map(_.cols.map(_.name)))
-      .getOrElse(spark.table(name).columns.toSeq
-        .filterNot(c => c == "_offset" || c == "_rowtime"))
-
-  /** Record timestamps for WINDOW clauses: same deterministic base + 1 s
-    * per offset as the batch engine ([[KsqlEngine]]), derived in-plan so
-    * it works on the live stream. Windowed `EMIT CHANGES` aggregations
-    * run update-mode (state retained; add a watermark for append).
-    */
-  override protected def rowtimeSupported: Boolean = true
-  private val RowtimeBaseSec = 1577836800L // 2020-01-01T00:00:00Z
-  private def withRowtime(df: DataFrame): DataFrame =
-    df.withColumn("_rowtime",
-      timestamp_seconds(lit(RowtimeBaseSec) + col("_offset")))
-
-  def execute(statement: String): Option[PushHandle] = {
-    val stmts = KsqlParser.splitStatements(statement)
-    require(stmts.size == 1, s"expected one statement, got ${stmts.size}")
-    execute(KsqlParser.parse(stmts.head))
-  }
-
   def execute(stmt: KsqlStatement): Option[PushHandle] = stmt match {
     case SetProperty(_, _) => None
 
     case CreateConnector(_, props) =>
-      val topic = props.getOrElse("topic.prefix", "") +
-        props.getOrElse("table.whitelist",
-          throw new IllegalArgumentException("connector needs table.whitelist"))
+      val topic = connectorTopic(props)
       livePolling match {
         case Some(lp) if props.get("mode").contains("incrementing") =>
           // LIVE connector: start the real polling loop; the topic is its
@@ -309,17 +254,12 @@ class KsqlStreamingEngine(
           val fs = new Path(landing)
             .getFileSystem(spark.sparkContext.hadoopConfiguration)
           fs.mkdirs(new Path(landing)) // file source needs the dir to exist
-          val opts = Seq(
-            "user" -> props.get("connection.user"),
-            "password" -> props.get("connection.password"),
-            "driver" -> props.get("connection.driver.class"))
-            .collect { case (k, Some(v)) => k -> v }.toMap
           pollers += graft.engine.Sources.jdbcPollingSource(
             lp.ticks(), props("connection.url"), props("table.whitelist"),
             props.getOrElse("incrementing.column.name",
               throw new IllegalArgumentException(
                 "mode=incrementing needs incrementing.column.name")),
-            landing, s"${lp.root}/$topic/ckpt", opts,
+            landing, s"${lp.root}/$topic/ckpt", jdbcOptions(props),
             pollEveryMs = lp.pollEveryMs)
           liveTopics(topic) = landing
           // a STREAM may legally be declared before its connector (ksqlDB
@@ -332,7 +272,7 @@ class KsqlStreamingEngine(
               require(d.buffer.isEmpty && d.attached.forall(_.owner.isEmpty),
                 s"stream ${d.name} already carries INSERTed rows or live " +
                   s"queries; cannot rebind it to live topic $topic")
-              val live = LiveStreamDecl(d.name, d.cols, topic)
+              val live = Decl("STREAM", d.name, d.cols, topic)
               liveStreamDecls(d.name.toLowerCase) = live
               registerLiveView(live)
               false
@@ -344,27 +284,22 @@ class KsqlStreamingEngine(
         case _ =>
           // shared log-column derivation with the batch engine (the
           // extra _rowtime is dropped by the TABLE projection)
-          topics(topic) = KsqlEngine.withLogColumns(spark,
-            connectorProvider(spark, props), RowtimeBaseSec)
+          topics(topic) = withLogColumns(connectorProvider(spark, props))
       }
       None
 
     case CreateCollection("STREAM", name, cols, props)
-        if liveTopics.contains(
-          props.getOrElse("KAFKA_TOPIC", props.getOrElse("kafka_topic", ""))) =>
+        if liveTopics.contains(topicOf(name, props)) =>
       // stream over a LIVE topic: the view reads the landing as a file
       // stream through the same wire decode as a MemoryStream topic —
       // rows INSERTed into the database surface here continuously
-      val topic =
-        props.getOrElse("KAFKA_TOPIC", props.getOrElse("kafka_topic", ""))
-      val d = LiveStreamDecl(name, cols, topic)
+      val d = Decl("STREAM", name, cols, topicOf(name, props))
       liveStreamDecls(name.toLowerCase) = d
       registerLiveView(d)
       None
 
     case CreateCollection("STREAM", name, cols, props) =>
-      val topic =
-        props.getOrElse("KAFKA_TOPIC", props.getOrElse("kafka_topic", name))
+      val topic = topicOf(name, props)
       // ONE log per topic: a second stream declared over the same
       // KAFKA_TOPIC shares the first's record buffer (same rows, same
       // offsets, history replayed) — two consumers of one Kafka topic,
@@ -379,40 +314,26 @@ class KsqlStreamingEngine(
       None
 
     case CreateCollection("TABLE", name, cols, props) =>
-      val topic = props.getOrElse("KAFKA_TOPIC", props.getOrElse("kafka_topic", name))
-      val td = TableDecl(name, cols, cols.filter(_.isKey).map(_.name), topic)
+      val td = Decl("TABLE", name, cols, topicOf(name, props))
       registerTableView(td) // throws if no connector (live or snapshot) feeds it
       tableDecls(name.toLowerCase) = td
       None
 
-    case CreateAsSelect(kind, name, _, select, pby) =>
-      var df = spark.sql(translate(select, injectOffset = kind == "STREAM"))
-      pby.foreach(p => df = df.repartition(col(p)))
-      df.createOrReplaceTempView(name)
-      derivedKinds(name.toLowerCase) = kind
-      derivedDefs(name.toLowerCase) = DerivedDef(kind, select, pby)
+    case c: CreateAsSelect =>
+      createDerived(c)
       None
 
-    case InsertValues(target, columns, values) =>
+    case ins @ InsertValues(target, _, _) =>
       require(!liveStreamDecls.contains(target.toLowerCase),
         s"$target is connector-fed: rows arrive from the database " +
           "through the polling loop, not INSERT")
       val d = streamDecls.getOrElse(target.toLowerCase,
         throw new NoSuchElementException(s"unknown stream $target"))
-      val order = columns.getOrElse(d.cols.map(_.name))
-      require(order.length == values.length,
-        s"INSERT arity ${values.length} != ${order.length}")
       // parse each literal with the BATCH engine's converter (one INSERT
       // grammar across both planes — arrays/maps/structs, SQL '' escapes)
       // and JSON-encode it for the wire; from_json decodes it back with
-      // the declared schema. The previous inline encoder emitted complex
-      // literals verbatim — invalid JSON that from_json PERMISSIVEly
-      // turned into silent all-null rows.
-      val declByName = d.cols.map(c => c.name.toLowerCase -> c).toMap
-      val json = order.zip(values).map { case (c, v) =>
-        val cd = declByName.getOrElse(c.toLowerCase,
-          throw new IllegalArgumentException(
-            s"unknown column $c in ${d.name}"))
+      // the declared schema
+      val json = insertColumns(d.name, d.cols, ins).map { case (cd, v) =>
         "\"" + cd.name + "\":" + KsqlEngine.jsonEncode(
           KsqlEngine.convertLiteral(v, cd.dataType), cd.dataType)
       }.mkString("{", ",", "}")
@@ -427,7 +348,7 @@ class KsqlStreamingEngine(
       sameTopic.foreach(_.attached.foreach(_.input.addData((json, off))))
       None
 
-    case PushQuery(select, emitFinal) =>
+    case push @ PushQuery(select, emitFinal) =>
       // isolate this query: fresh source streams (buffer replayed) so
       // concurrent queries never share a MemoryStream's commit state.
       // Drop dead AND stale-unowned attachments first — only streams
@@ -439,19 +360,10 @@ class KsqlStreamingEngine(
       // closes the session — closed sessions ARE the append rows.
       // EMIT FINAL asks for exactly that contract on ANY window shape —
       // each window once, when the watermark closes it — so it routes
-      // through the same append+watermark path; on an unwindowed
-      // aggregation there is no close event, so it is refused (as in
-      // ksqlDB). windowKind comes from the translator's structural
-      // (literal-masked) WINDOW parse — the flag and the translation can
-      // never disagree
-      // the window may live in a DERIVED view the query reads (CTAS over
-      // a session window, then SELECT * FROM it) — resolve through
-      // derivedDefs, not just this select's text
-      val winKind = effectiveWindowKind(select)
-      val sessionWindowed = winKind.contains("SESSION")
-      require(!emitFinal || winKind.isDefined,
-        "EMIT FINAL requires a WINDOW clause (finals exist per window)")
-      val appendFinals = sessionWindowed || emitFinal
+      // through the same append+watermark path. The window may live in a
+      // DERIVED view the query reads (CTAS over a session window, then
+      // SELECT * FROM it), which pushWindowKind resolves through
+      val appendFinals = pushWindowKind(push).contains("SESSION") || emitFinal
       streamDecls.values.foreach { d =>
         d.attached.filterInPlace(a => a.owner.exists(_.isActive))
         attachStream(d, watermarked = appendFinals)
@@ -463,7 +375,7 @@ class KsqlStreamingEngine(
       tableDecls.values.filter(t => liveTopics.contains(t.topic))
         .foreach(registerTableView)
       refreshDerived()
-      val df = spark.sql(translate(select))
+      val df = spark.sql(translateSelect(select))
       // output mode from the RESOLVED plan, not the select text: a push
       // query over a derived CSAS/CTAS aggregate contains no GROUP BY of
       // its own but still IS a streaming aggregation (Update mode), and
@@ -476,8 +388,7 @@ class KsqlStreamingEngine(
         }.isDefined
       queryId += 1
       val name = s"ksql_push_$queryId"
-      val upper = df.toDF(df.columns.map(_.toUpperCase).toIndexedSeq: _*)
-      val q = upper.writeStream.format("memory").queryName(name)
+      val q = upperCased(df).writeStream.format("memory").queryName(name)
         .outputMode(
           if (aggregated && !appendFinals) OutputMode.Update()
           else OutputMode.Append())
@@ -495,11 +406,22 @@ class KsqlStreamingEngine(
         s"streaming engine does not support: $other")
   }
 
-  /** COUNT_DISTINCT needs a closing paren for the CAST wrapper; rewrites
-    * stay outside string literals like every other token rewrite.
+  /** Execute `stmt` the way the serving planes do: a push query is
+    * drained (everything inserted so far processed), its changelog
+    * snapshotted, and the query RELEASED. The snapshot is analyzed before
+    * the release and reads the stopped sink, so it still collects after;
+    * the release rides a finally so a drain that throws (runtime error in
+    * the micro-batch) cannot leak the handle — a leaked active query
+    * would pin its MemoryStream attachments, a kept sink table its whole
+    * changelog.
     */
-  private def translate(select: String, injectOffset: Boolean = false): String =
-    translateSelect(select, injectOffset)
+  def executeDrained(stmt: KsqlStatement): Option[DataFrame] =
+    execute(stmt).map { h =>
+      try {
+        h.processAllAvailable()
+        h.emissions
+      } finally release(h)
+    }
 
   /** Stop a push query and RELEASE its driver-side footprint: the
     * memory sink's temp table (which holds the query's FULL changelog)

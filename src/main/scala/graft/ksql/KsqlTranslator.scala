@@ -1,8 +1,30 @@
 package graft.ksql
 
-/** KSQL → Spark SQL SELECT translation, shared by the batch
-  * ([[KsqlEngine]]) and streaming ([[KsqlStreamingEngine]]) executors.
-  * Textual and total for the reference dialect: `EMIT CHANGES` stripped,
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.collection.mutable
+
+/** A declared (non-derived) collection: STREAM or TABLE over `topic`. */
+private[ksql] final case class Decl(kind: String, name: String,
+    cols: Seq[ColumnDef], topic: String)
+
+/** A derived (CSAS/CTAS) collection: its SELECT, re-derived on read. */
+private[ksql] final case class Derived(kind: String, name: String,
+    select: String, partitionBy: Option[String], topic: String)
+
+/** The statement front end both KSQL planes share — the batch
+  * ([[KsqlEngine]], converged states) and streaming
+  * ([[KsqlStreamingEngine]], live changelogs) executors differ only in how
+  * a resolved statement runs, so everything that resolves one lives here
+  * once: statement-text entry, topic naming, INSERT column resolution,
+  * the derived-view registry, record timestamps and the SELECT
+  * translation below. Each plane still dispatches through its public
+  * `execute(stmt: KsqlStatement)`.
+  *
+  * KSQL → Spark SQL SELECT translation is textual and total for the
+  * reference dialect: `EMIT CHANGES` stripped,
   * `UCASE`→`upper`, `COUNT_DISTINCT` → engine-chosen aggregate (exact
   * `count(DISTINCT)` in batch, the exact streaming Aggregator in
   * streaming, where Spark rejects count-distinct), `LATEST_BY_OFFSET(x)`
@@ -10,20 +32,48 @@ package graft.ksql
   * alias-prefixed `SELECT *` expansion.
   *
   * Beyond the tutorial's surface, ksqlDB 0.15's windowed aggregations
-  * translate too (engines that carry a `_rowtime` record timestamp):
+  * translate too (every collection view carries a `_rowtime` record
+  * timestamp):
   * `WINDOW TUMBLING (SIZE n U)` / `HOPPING (SIZE n U, ADVANCE BY m U)` /
   * `SESSION (n U)` become `window()` / `session_window()` grouping
   * expressions, and the `WINDOWSTART`/`WINDOWEND`/`ROWTIME`
   * pseudo-columns resolve to epoch-millis of the window bounds / record
   * time (ksqlDB's BIGINT-millis semantics).
   */
-trait KsqlTranslator {
+trait KsqlTranslator[R] {
+  import KsqlTranslator.LogColumns
+
+  def spark: SparkSession
+
+  graft.functions.GraftFunctions.registerAll(spark)
+
+  /** Execute one parsed statement: `Some` for a query result. */
+  def execute(stmt: KsqlStatement): Option[R]
+
+  /** Execute exactly one statement given as text. */
+  def execute(statement: String): Option[R] = {
+    val stmts = KsqlParser.splitStatements(statement)
+    require(stmts.size == 1, s"expected one statement, got ${stmts.size}")
+    execute(KsqlParser.parse(stmts.head))
+  }
+
+  /** The declared (non-derived) collection `name`, if any. */
+  protected def declared(name: String): Option[Decl]
+
+  /** Derived (CSAS/CTAS) collections by lower-cased name, in creation
+    * order (a derived view may read earlier ones).
+    */
+  protected val derived = mutable.LinkedHashMap.empty[String, Derived]
 
   /** STREAM/TABLE kind of a registered collection, if known. */
-  protected def kindOf(name: String): Option[String]
+  protected def kindOf(name: String): Option[String] =
+    declared(name).map(_.kind)
+      .orElse(derived.get(name.toLowerCase).map(_.kind))
 
-  /** Output columns of a collection (without `_offset`). */
-  protected def viewColumns(name: String): Seq[String]
+  /** Output columns of a collection (without the log columns). */
+  protected def viewColumns(name: String): Seq[String] =
+    declared(name).map(_.cols.map(_.name))
+      .getOrElse(spark.table(name).columns.toSeq.filterNot(LogColumns))
 
   /** Render a `COUNT_DISTINCT(args)` call — engine-specific (batch uses
     * native count-distinct; streaming substitutes the exact Aggregator,
@@ -32,33 +82,91 @@ trait KsqlTranslator {
   protected def countDistinctRender(args: String): String =
     s"count(DISTINCT $args)"
 
-  /** The select text of a derived (CSAS/CTAS) view, if `name` is one —
-    * the lookup [[effectiveWindowKind]] recurses through.
+  /** (Re-)register a derived view: translate its SELECT, apply the
+    * `PARTITION BY` re-key, bind the temp view.
     */
-  protected def derivedSelect(name: String): Option[String] = None
+  private def registerDerived(d: Derived): Unit = {
+    val df = spark.sql(translateSelect(d.select, injectOffset = d.kind == "STREAM"))
+    d.partitionBy.fold(df)(p => df.repartition(col(p)))
+      .createOrReplaceTempView(d.name)
+  }
+
+  /** Re-register every derived view, in creation order. */
+  protected def refreshDerived(): Unit = derived.values.foreach(registerDerived)
+
+  /** CREATE … AS SELECT: the view is built at CREATE, so a bad SELECT
+    * fails there, as in ksqlDB.
+    */
+  protected def createDerived(c: CreateAsSelect): Unit = {
+    val d = Derived(c.kind, c.name, c.select, c.partitionBy,
+      KsqlTranslator.topicOf(c.name, c.props))
+    registerDerived(d)
+    derived(c.name.toLowerCase) = d
+  }
+
+  /** Record timestamps (ksqlDB's ROWTIME): a fixed epoch base + 1 s per
+    * topic offset — deterministic ingestion-time semantics, derived
+    * in-plan so it also works on a live stream.
+    */
+  protected def withRowtime(df: DataFrame): DataFrame =
+    df.withColumn("_rowtime",
+      timestamp_seconds(lit(KsqlTranslator.RowtimeBaseSec) + col("_offset")))
+
+  /** Append the topic-log columns to a connector snapshot WITHOUT
+    * collecting it: `_offset` via a distributed `zipWithIndex` (stable
+    * partition-order indices — the arrival-order analogue; one partition-
+    * size job, no rows collected) and `_rowtime` from the offset.
+    */
+  protected def withLogColumns(df: DataFrame): DataFrame = {
+    val schema = StructType(df.schema.fields.toSeq :+
+      StructField("_offset", LongType, nullable = false))
+    val indexed = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
+    withRowtime(spark.createDataFrame(indexed, schema))
+  }
+
+  /** Pair each VALUES literal with the declared column it fills, checking
+    * arity and rejecting unknown columns — a typo'd column must fail
+    * loudly, never land a silent null.
+    */
+  protected def insertColumns(name: String, cols: Seq[ColumnDef],
+      ins: InsertValues): Seq[(ColumnDef, String)] = {
+    val order = ins.columns.getOrElse(cols.map(_.name))
+    require(order.length == ins.values.length,
+      s"INSERT arity ${ins.values.length} != ${order.length}")
+    val byName = cols.map(c => c.name.toLowerCase -> c).toMap
+    order.zip(ins.values).map { case (c, v) =>
+      byName.getOrElse(c.toLowerCase,
+        throw new IllegalArgumentException(s"unknown column $c in $name")) -> v
+    }
+  }
+
+  /** The window a push query runs under, refusing `EMIT FINAL` without
+    * one (finals exist per window).
+    */
+  protected def pushWindowKind(q: PushQuery): Option[String] = {
+    val kind = effectiveWindowKind(q.select)
+    require(!q.emitFinal || kind.isDefined,
+      "EMIT FINAL requires a WINDOW clause (finals exist per window)")
+    kind
+  }
+
+  protected def upperCased(df: DataFrame): DataFrame =
+    df.toDF(df.columns.map(_.toUpperCase).toIndexedSeq: _*)
 
   /** The WINDOW kind a query effectively runs under: its own clause, or
     * one inherited from a derived (CSAS/CTAS) view it reads —
     * `CREATE TABLE s AS SELECT … WINDOW SESSION(…) …; SELECT * FROM s`
     * is a session-windowed aggregation even though the outer text has no
     * WINDOW. Recurses through derived-of-derived; cycles cut by `seen`.
-    * ONE implementation on the shared trait: both planes must give the
-    * same verdict on the same statement, which two copy-pasted bodies
-    * can only promise until one is edited.
     */
   private[ksql] def effectiveWindowKind(select: String,
       seen: Set[String] = Set.empty): Option[String] =
     windowKind(select).orElse(
       fromSources(select).iterator
         .map(_._1.toLowerCase).filterNot(seen)
-        .flatMap(n => derivedSelect(n)
-          .flatMap(sel => effectiveWindowKind(sel, seen + n)))
+        .flatMap(n => derived.get(n)
+          .flatMap(d => effectiveWindowKind(d.select, seen + n)))
         .nextOption())
-
-  /** Whether collection views expose the `_rowtime` record timestamp
-    * (required for WINDOW clauses and ROWTIME).
-    */
-  protected def rowtimeSupported: Boolean = false
 
   private val FromRe =
     ("(?is)\\bFROM\\s+(\\w+)" +
@@ -123,8 +231,6 @@ trait KsqlTranslator {
       args => s"unix_millis(to_timestamp($args))")
     // ---- windowed aggregation (WINDOW TUMBLING/HOPPING/SESSION) --------
     windowMatch(s).foreach { m =>
-      require(rowtimeSupported,
-        "WINDOW clauses need an engine with record timestamps (_rowtime)")
       val ref = fromSources(s).headOption.map(_._2).getOrElse(
         throw new IllegalArgumentException(s"WINDOW without FROM: $select0"))
       def dur(n: String, u: String) = s"$n ${u.toLowerCase}"
@@ -163,7 +269,7 @@ trait KsqlTranslator {
       s = replaceOutsideQuotes(s, "(?i)(?<![\\w])WINDOWEND(?![\\w])",
         s"unix_millis($winCol.end)")
     }
-    if (rowtimeSupported && s.toUpperCase.matches("(?s).*(?<![\\w])ROWTIME(?![\\w]).*")) {
+    if (s.toUpperCase.matches("(?s).*(?<![\\w])ROWTIME(?![\\w]).*")) {
       val ref = fromSources(s).headOption.map(_._2).getOrElse("")
       s = replaceOutsideQuotes(s, "(?i)(?<![\\w])ROWTIME(?![\\w])",
         s"unix_millis($ref._rowtime)")
@@ -244,8 +350,7 @@ trait KsqlTranslator {
       // analogue) so downstream LATEST_BY_OFFSET keeps arrival order —
       // and the record timestamp, so downstream WINDOW clauses still work
       val ref = sources.headOption.map(_._2).getOrElse("")
-      val extra = s", $ref._offset AS _offset " +
-        (if (rowtimeSupported) s", $ref._rowtime AS _rowtime " else "")
+      val extra = s", $ref._offset AS _offset , $ref._rowtime AS _rowtime "
       FromRe.findFirstMatchIn(KsqlTranslator.maskLiterals(s)).foreach { fm =>
         s = s.substring(0, fm.start) + extra + s.substring(fm.start)
       }
@@ -255,6 +360,36 @@ trait KsqlTranslator {
 }
 
 object KsqlTranslator {
+  /** Epoch base of the record-timestamp clock: 2020-01-01T00:00:00Z. */
+  private[ksql] val RowtimeBaseSec = 1577836800L
+
+  /** Topic-log columns every collection view carries but never shows. */
+  private[ksql] val LogColumns = Set("_offset", "_rowtime")
+
+  /** The topic a collection binds to: its `KAFKA_TOPIC` property,
+    * matched case-insensitively as ksqlDB property names are, else the
+    * collection's own name.
+    */
+  private[ksql] def topicOf(name: String, props: Map[String, String]): String =
+    props.collectFirst { case (k, v) if k.equalsIgnoreCase("KAFKA_TOPIC") => v }
+      .getOrElse(name)
+
+  /** A source connector's topic: `topic.prefix` + `table.whitelist`. */
+  private[ksql] def connectorTopic(props: Map[String, String]): String =
+    props.getOrElse("topic.prefix", "") +
+      props.getOrElse("table.whitelist",
+        throw new IllegalArgumentException("connector needs table.whitelist"))
+
+  /** JDBC reader options from a connector's properties. Drivers absent
+    * from java.sql.Driver's service registry (e.g. embedded Derby) need
+    * the explicit class name.
+    */
+  private[ksql] def jdbcOptions(props: Map[String, String]): Map[String, String] =
+    Seq("user" -> props.get("connection.user"),
+      "password" -> props.get("connection.password"),
+      "driver" -> props.get("connection.driver.class"))
+      .collect { case (k, Some(v)) => k -> v }.toMap
+
   /** ksqlDB scalar-function names whose Spark spelling differs; everything
     * else (ABS, ROUND, CONCAT, TRIM, SUBSTRING, REPLACE, INSTR, SPLIT,
     * CASE, CAST, …) is shared SQL that Catalyst parses directly.

@@ -247,6 +247,146 @@ class KsqlServerSpec extends SparkSpec {
       s"non-daemon threads outlive server.stop: ${lingering.map(_.getName)}")
   }
 
+  /** Open a `/query` stream; the caller reads or disconnects it. */
+  private def openQuery(port: Int, ksql: String): (HttpURLConnection, Int) = {
+    val conn = new URI(s"http://localhost:$port/query").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod("POST")
+    conn.setDoOutput(true)
+    conn.setReadTimeout(30000)
+    val os = conn.getOutputStream
+    try os.write(jsonBody(ksql).getBytes(StandardCharsets.UTF_8))
+    finally os.close()
+    (conn, conn.getResponseCode)
+  }
+
+  private def headerLine(conn: HttpURLConnection): String = {
+    val reader = new java.io.BufferedReader(
+      new java.io.InputStreamReader(conn.getInputStream, StandardCharsets.UTF_8))
+    var l = reader.readLine()
+    while (l != null && l.trim.isEmpty) l = reader.readLine()
+    assert(l != null, "stream closed before its header")
+    l
+  }
+
+  private def eventually(what: String)(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 20000000000L
+    var ok = cond
+    while (!ok && System.nanoTime() < deadline) { Thread.sleep(100); ok = cond }
+    assert(ok, what)
+  }
+
+  private def pushQueryNames: Set[String] =
+    spark.streams.active.map(_.name).filter(n => n != null && n.startsWith("ksql_push_")).toSet
+
+  private def pushViewNames: Set[String] =
+    spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("ksql_push_")).map(_.name).toSet
+
+  test("both planes answer /info with their own unchanged bodies") {
+    import graft.ksql.KsqlStreamingEngine
+    val batch = KsqlServer.start(new KsqlEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s)), 0)
+    try assert(get(batch.getAddress.getPort, "/info")._2 ===
+      """{"KsqlServerInfo":{"version":"graft","kafkaClusterId":"n/a",""" +
+        """"ksqlServiceId":"graft_spark_"}}""")
+    finally batch.stop(0)
+    val engine = new KsqlStreamingEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s))
+    val streaming = KsqlServer.startStreaming(engine, 0)
+    try assert(get(streaming.getAddress.getPort, "/info")._2 ===
+      """{"KsqlServerInfo":{"version":"graft","kafkaClusterId":"n/a",""" +
+        """"ksqlServiceId":"graft_spark_","plane":"streaming"}}""")
+    finally {
+      streaming.stop(0)
+      engine.stopAll()
+    }
+  }
+
+  test("a push query over streaming POST /ksql returns its changelog rows; " +
+      "neither it nor a closed /query stream leaves a query or sink view") {
+    import graft.ksql.KsqlStreamingEngine
+    // sink views of earlier suites' stopped queries reuse this engine's
+    // query names; clear them so a leak here cannot hide behind one
+    pushViewNames.diff(pushQueryNames).foreach(spark.catalog.dropTempView)
+    val queries0 = pushQueryNames
+    val views0 = pushViewNames
+    val engine = new KsqlStreamingEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s))
+    val server = KsqlServer.startStreaming(engine, 0)
+    val port = server.getAddress.getPort
+    try {
+      val (c0, _) = post(port, "/ksql", jsonBody(
+        """CREATE STREAM rel_ev (id VARCHAR KEY, event_type VARCHAR)
+          WITH (KAFKA_TOPIC='rel_ev');
+          INSERT INTO rel_ev VALUES ('1', 'GOAL');
+          INSERT INTO rel_ev VALUES ('1', 'ASSIST');"""))
+      assert(c0 === 200)
+      // the snapshot is taken before the release and collected after it
+      val (c1, out) = post(port, "/ksql", jsonBody(
+        "SELECT id, COUNT(id) AS n FROM rel_ev GROUP BY id EMIT CHANGES;"))
+      assert(c1 === 200)
+      assert(out.contains(""""columns":["ID","N"]"""), out)
+      assert(out.contains("""["1",2]"""), out)
+      assert(pushQueryNames === queries0)
+      assert(pushViewNames === views0)
+
+      val (conn, code) = openQuery(port, "SELECT id FROM rel_ev EMIT CHANGES;")
+      assert(code === 200)
+      val queryId = "\"queryId\":\"(ksql_push_\\d+)\"".r
+        .findFirstMatchIn(headerLine(conn)).get.group(1)
+      assert(pushQueryNames.contains(queryId))
+      conn.disconnect()
+      eventually(s"$queryId still runs or keeps its view after disconnect") {
+        pushQueryNames === queries0 && pushViewNames === views0
+      }
+    } finally {
+      server.stop(0)
+      engine.stopAll()
+    }
+  }
+
+  test("/query streams past MaxPushStreams get 503 before any query " +
+      "starts; a slot frees once a client disconnects") {
+    import graft.ksql.KsqlStreamingEngine
+    val engine = new KsqlStreamingEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s))
+    val server = KsqlServer.startStreaming(engine, 0)
+    val port = server.getAddress.getPort
+    val select = "SELECT id FROM cap_ev EMIT CHANGES;"
+    val open = scala.collection.mutable.ArrayBuffer.empty[HttpURLConnection]
+    try {
+      assert(post(port, "/ksql", jsonBody(
+        """CREATE STREAM cap_ev (id VARCHAR KEY, event_type VARCHAR)
+          WITH (KAFKA_TOPIC='cap_ev');"""))._1 === 200)
+      (1 to KsqlServer.MaxPushStreams).foreach { _ =>
+        val (conn, code) = openQuery(port, select)
+        open += conn
+        assert(code === 200)
+        headerLine(conn)
+      }
+      val running = spark.streams.active.length
+      val (refused, code) = openQuery(port, select)
+      refused.disconnect()
+      assert(code === 503)
+      assert(spark.streams.active.length === running)
+      // statements still run while every stream slot is taken
+      assert(post(port, "/ksql", jsonBody(
+        "INSERT INTO cap_ev VALUES ('1', 'GOAL');"))._1 === 200)
+
+      open.remove(0).disconnect()
+      eventually("no /query slot freed after a client disconnected") {
+        val (conn, c) = openQuery(port, select)
+        if (c == 200) open += conn else conn.disconnect()
+        c == 200
+      }
+    } finally {
+      open.foreach(_.disconnect())
+      server.stop(0)
+      engine.stopAll()
+    }
+  }
+
   test("json escaping survives quotes, backslashes, and control chars") {
     import spark.implicits._
     val engine = new KsqlEngine(spark,

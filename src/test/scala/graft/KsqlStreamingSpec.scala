@@ -604,4 +604,113 @@ class KsqlStreamingSpec extends SparkSpec {
       assert(h.emissions.count() === 7)
     } finally h.stop()
   }
+
+  test("KAFKA_TOPIC keys match case-insensitively: mixed-case keys bind " +
+      "one log on both planes") {
+    val decls = Seq(
+      "CREATE STREAM mc1 (id VARCHAR KEY, v INT) WITH (Kafka_Topic='mc_t');",
+      "CREATE STREAM mc2 (id VARCHAR KEY, v INT) WITH (kafka_TOPIC='mc_t');")
+    val be = new graft.ksql.KsqlEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s))
+    decls.foreach(be.execute)
+    be.execute("INSERT INTO mc1 VALUES ('a', 1);")
+    assert(be.execute("SELECT id, v FROM mc2;").get.collect().toSeq === Seq(Row("a", 1)))
+    assert(be.execute("SHOW TOPICS;").get.collect().map(_.getString(0)).toSet
+      === Set("mc_t"))
+
+    val se = freshEngine
+    decls.foreach(se.execute)
+    se.execute("INSERT INTO mc1 VALUES ('a', 1);")
+    val h = se.execute("SELECT id, v FROM mc2 EMIT CHANGES;").get
+    try {
+      h.processAllAvailable()
+      assert(h.emissions.collect().toSeq === Seq(Row("a", 1)))
+    } finally se.release(h)
+  }
+
+  test("seeded INSERT scripts: both planes converge on player_stats and " +
+      "match_results, and reject the same INSERTs with the same errors") {
+    import scala.util.{Random, Try}
+    val setup = Seq(
+      "CREATE SOURCE CONNECTOR c WITH ('table.whitelist' = 'players');",
+      """CREATE TABLE players (ID VARCHAR PRIMARY KEY, name VARCHAR(50),
+        team VARCHAR(50), nationality VARCHAR(50))
+        WITH (KAFKA_TOPIC = 'players');""",
+      """CREATE STREAM match_event (id VARCHAR KEY, event_type VARCHAR,
+        player_id VARCHAR, home boolean) WITH (KAFKA_TOPIC='match_event');""",
+      """CREATE STREAM match_event_player AS
+        SELECT id, event_type, player_id FROM match_event PARTITION BY player_id;""",
+      """CREATE TABLE player_stats AS SELECT p.id AS player_id,
+          LATEST_BY_OFFSET(p.name) AS player_name,
+          SUM(CASE WHEN mep.event_type = 'GOAL' THEN 1 ELSE 0 END) AS goals,
+          CAST(SUM(CASE WHEN mep.event_type = 'GOAL' THEN 1 ELSE 0 END) AS DOUBLE)
+            / CAST(COUNT_DISTINCT(mep.id) AS DOUBLE) AS avg_goals,
+          SUM(CASE WHEN mep.event_type = 'ASSIST' THEN 1 ELSE 0 END) AS assists
+        FROM match_event_player mep JOIN players p ON p.id = mep.player_id
+        GROUP BY p.id;""",
+      """CREATE TABLE match_results AS SELECT id,
+          SUM(CASE WHEN home = true AND event_type = 'GOAL' THEN 1 ELSE 0 END) AS home_goals,
+          SUM(CASE WHEN home = false AND event_type = 'GOAL' THEN 1 ELSE 0 END) AS away_goals
+        FROM match_event WHERE home IS NOT NULL GROUP BY id;""")
+    // SQL-quoted literals; '' escapes land in match ids, event types and
+    // player ids that join no player
+    val matchIds = Seq("'1'", "'2'", "'3'", "'o''neil'", "'it''s ''4'''")
+    val eventTypes = Seq("'GOAL'", "'GOAL'", "'ASSIST'", "'SAVE'", "'it''s'")
+    val playerIds = (1 to 10).map(i => s"'$i'") ++ Seq("'99'", "'1'''")
+    val homes = Seq("true", "false", "null")
+    val order = Seq("id", "event_type", "player_id", "home")
+    def script(rnd: Random): String = {
+      def pick(xs: Seq[String]) = xs(rnd.nextInt(xs.size))
+      (1 to 20 + rnd.nextInt(21)).map { _ =>
+        val v = Map("id" -> pick(matchIds), "event_type" -> pick(eventTypes),
+          "player_id" -> pick(playerIds), "home" -> pick(homes))
+        rnd.nextInt(10) match {
+          case 0 => // arity: a value missing
+            s"INSERT INTO match_event VALUES (${order.init.map(v).mkString(", ")});"
+          case 1 => // a column that does not exist
+            s"INSERT INTO match_event (id, event_kind, player_id, home) " +
+              s"VALUES (${order.map(v).mkString(", ")});"
+          case 2 | 3 => // named columns, shuffled, mixed case
+            val cols = rnd.shuffle(order)
+            s"INSERT INTO MATCH_EVENT (${cols.map(_.toUpperCase).mkString(", ")}) " +
+              s"VALUES (${cols.map(v).mkString(", ")});"
+          case _ =>
+            s"INSERT INTO match_event VALUES (${order.map(v).mkString(", ")});"
+        }
+      }.mkString("\n")
+    }
+    def errors[R](run: String => Option[R], text: String): Seq[(Int, String)] =
+      graft.ksql.KsqlParser.splitStatements(text).zipWithIndex.flatMap {
+        case (stmt, i) => Try(run(stmt)).failed.toOption.map(e => i -> e.getMessage)
+      }
+
+    Seq(3, 5, 8, 13, 21).foreach { seed =>
+      val text = script(new Random(seed))
+      // batch plane first: it re-registers the shared views it reads
+      val be = new graft.ksql.KsqlEngine(spark,
+        connectorProvider = (s, _) => Tutorial.playersSeed(s))
+      setup.foreach(be.execute)
+      val batchErrors = errors(be.execute, text)
+      val batchState = Seq("player_stats", "match_results")
+        .map(t => be.execute(s"SELECT * FROM $t;").get.collect().toSet)
+
+      val se = freshEngine
+      setup.foreach(se.execute)
+      val streamErrors = errors(se.execute, text)
+      val streamState = Seq("player_stats", "match_results").map { t =>
+        val h = se.execute(s"SELECT * FROM $t EMIT CHANGES;").get
+        try {
+          h.processAllAvailable()
+          // converged state = the changelog's last emission per key
+          h.emissions.collect().groupBy(_.get(0)).values.map(_.last).toSet
+        } finally se.release(h)
+      }
+      assert(streamErrors === batchErrors, s"seed $seed")
+      assert(batchErrors.nonEmpty && batchErrors.forall { case (_, m) =>
+        m.contains("INSERT arity") || m.contains("unknown column event_kind") },
+        s"seed $seed: $batchErrors")
+      assert(streamState === batchState, s"seed $seed:\n$text")
+      assert(batchState.forall(_.nonEmpty), s"seed $seed")
+    }
+  }
 }
