@@ -1,142 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON metric line. A query that throws is recorded with an
-  * "err" field and excluded from the total — a regression can never
-  * masquerade as a speedup (round-1 verdict, What's wrong #3).
-  *
-  * Publication form (round 13, revised round 15): `SPARK_GRAFT_RUNS`
-  * (default 3) full timed passes over the suite; per-row MINIMUM across
-  * passes published, per-row medians alongside (`queries_median`).
-  * r12's single-run artifact let one scheduling fluke (t24b 6.19 s vs
-  * ~1.2-2 s everywhere else) cost a review cycle; r13 moved to
-  * median-of-3. r14 showed the median's own failure mode: external
-  * host load DECAYING across passes (run totals [249, 170, 122] s)
-  * contaminated two of three passes, so five CPU-bound retrieval rows'
-  * medians read 2-8× their idle-host values (v18 7.54 s vs 0.95-0.99
-  * measured at HEAD on an idle host, SUITEDECOMP_r15) while the
-  * IO-bound x6 anchor stayed calm. Timing noise on a deterministic
-  * recomputation is strictly ADDITIVE — min-of-N estimates the
-  * steady state correctly under any one-sided contamination, including
-  * both failure modes above; the medians stay in the artifact for
-  * cross-round continuity (`value_median` = sum of per-row medians, the
-  * pre-r15 "value" definition, so totals compare like with like) and as
-  * the skew flag — rows where min ≪ median are published in
-  * `skew_rows`, each one a query whose timed passes disagree enough
-  * that some window was loaded (r15 ADVICE).
-  *
-  * Each pass also times TWO host-reference probes first and last:
-  * the fixed shuffle row (ScaleBench.HostRefRow → `host_factor`) and a
-  * single-thread FP spin (`cpu_factor`) — r14's contamination was
-  * invisible to the shuffle anchor precisely because the loaded cores
-  * hurt pure-CPU rows hardest; the spin probe flags that window class.
+/** Benchmark main: profiles every SparkEntry query on SPARK_GRAFT_SF_DIR
+  * ([[Profile.run]]) and prints ONE JSON metric line, its
+  * [[Profile.benchLine]] view. Exits 1 when any query threw.
   */
 object Bench {
-  /** Calm-window anchor for the sf0.1 host-reference readings: median of
-    * the in-pass x6_salted_join timings from the r13 development run
-    * (2026-08-16, idle host, cpus=4). Same contract as
-    * ScaleBench.HostAnchor: factor ≈ 1 means comparable window; ≳ 2.5
-    * sustained means the window is throttled and cross-round absolute
-    * comparisons are invalid. `tools/recompute_host_factor.py` re-derives
-    * the field from the artifact's own raw readings if this anchor is
-    * ever corrected.
-    */
-  private val HostAnchorSf01 = 0.55
-
-  // the spin probe + anchor live in BenchUtil so the forked scale sweeps
-  // and the scaled streaming sections publish the same factor (r15 Next
-  // #2: the sweep artifacts carried only the shuffle anchor, which is
-  // blind to exactly the r14 contamination class)
-  private def cpuSpin(): Double = BenchUtil.cpuSpin()
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    require(runs >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $runs")
-    val spark = GraftSession.local(cpus)
-    // JMH-style warmup: one untimed pass over every query so the timed
-    // passes measure steady state (JIT, codegen cache, file listings,
-    // per-session ingest builds) instead of charging first-query session
-    // costs to whichever query sorts first alphabetically
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      // NonFatal only: after an OOM/linkage error the JVM is unreliable —
-      // fail the run rather than time every later query in a broken
-      // process and ship those numbers for cross-round comparison
-      try fn(spark, sfDir).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    def timeOne(name: String): (Double, Option[String]) = {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val err = try { fn(spark, sfDir).count(); None }
-                catch { case scala.util.control.NonFatal(e) =>
-                  Some(e.toString.take(200)) }
-      ((System.nanoTime() - t0) / 1e9, err)
-    }
-    // each pass: cpu spin + host reference row, the suite, then both
-    // again (mirrors ScaleBench.forkedSweep — a mid-pass throttle skews
-    // the closing reading away from the opening one)
-    val passes = (1 to runs).map { _ =>
-      val cpuFirst = cpuSpin()
-      val refFirst = timeOne(ScaleBench.HostRefRow)
-      val rows = names.map(n => timeOne(n))
-      val refLast = timeOne(ScaleBench.HostRefRow)
-      val cpuLast = cpuSpin()
-      (rows, Seq(refFirst, refLast).collect { case (t, None) => t },
-        Seq(cpuFirst, cpuLast))
-    }
-    def median(xs: Seq[Double]): Double = StreamBench.median(xs)
-    def r3(x: Double): Double = BenchUtil.r3(x)
-    // per-row MIN over successful passes (scaladoc: additive-noise
-    // estimator), median alongside; a row that failed in ANY pass keeps
-    // its first err so failures stay loud in the artifact
-    val results = names.indices.map { i =>
-      val row = passes.map(_._1(i))
-      val err = row.flatMap(_._2).headOption
-      val good = row.collect { case (t, None) => t }
-      val ts = if (good.nonEmpty) good else row.map(_._1)
-      (names(i), r3(ts.min), r3(median(ts)), err)
-    }
-    def rowsJson(pick: ((String, Double, Double, Option[String])) => Double) =
-      results.map {
-        case r @ (k, _, _, None) => s""""$k":${pick(r)}"""
-        case r @ (k, _, _, Some(e)) =>
-          s""""$k":{"sec":${pick(r)},"err":"${esc(e)}"}"""
-      }.mkString("{", ",", "}")
-    val qs = rowsJson(_._2)
-    val qsMed = rowsJson(_._3)
-    val ok = results.collect { case (_, v, _, None) => v }
-    val nErr = results.count(_._4.isDefined)
-    val runTotals = passes.map { case (rows, _, _) =>
-      r3(rows.collect { case (t, None) => t }.sum) }
-    val refs = passes.flatMap(_._2)
-    val factor =
-      if (refs.isEmpty) "null" else r3(median(refs) / HostAnchorSf01).toString
-    val cpuRefs = passes.flatMap(_._3)
-    // median total alongside the min total (ADVICE r15): every pre-r15
-    // artifact's "value" was a sum of medians, so round-over-round total
-    // comparisons need a like-with-like scalar — and per-row min ≪ median
-    // is itself the loaded-window flag, surfaced as skew_rows instead of
-    // left for the reader to diff the two maps by hand
-    val okMed = results.collect { case (_, _, m, None) => m }
-    val skewRows = results.collect {
-      case (k, mn, md, None) if md > 2 * mn && md - mn > 0.25 => s""""$k""""
-    }
-    println(s"""{"metric":"total","value":${r3(ok.sum)},"unit":"sec","value_median":${
-      r3(okMed.sum)},"queries":$qs,"queries_median":$qsMed,"skew_rows":[${
-      skewRows.mkString(",")}],"n_ok":${ok.size},"n_err":$nErr,"sf":"$sfDir","runs":$runs,"per_row":"min","run_totals":[${
-      runTotals.mkString(",")}],"host_ref":{"name":"${ScaleBench.HostRefRow}","runs":[${
-      refs.map(r3).mkString(",")}]},"host_factor":$factor,${
-      BenchUtil.cpuJson(cpuRefs)}}""")
-    spark.stop()
-    if (nErr > 0) sys.exit(1)
+    val p = Profile.run(SparkEntry.queries.keys.toSeq)
+    println(p.benchLine)
+    if (p.nErr > 0) sys.exit(1)
   }
 }

@@ -10,13 +10,6 @@ private[graft] object BenchUtil {
   /** Round to 3 decimals — the artifact-wide seconds precision. */
   def r3(x: Double): Double = math.rint(x * 1000) / 1000
 
-  /** (result, wall seconds) of evaluating `f` once. */
-  def timed[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   /** Calm-window anchor for the single-thread FP spin probe (seconds,
     * idle 32-cpu host, 2026-08-16). `cpu_factor` ≈ 1 means the timed
     * window had a full core to itself; sustained ≳ 1.5 means an external

@@ -16,8 +16,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * constructor (`Scratch.materializeThenFree` checkpoints the result),
   * so the plans that actually execute are the checkpoints' plans, not
   * the returned DataFrame's scan of checkpointed blocks. Plan tests, the
-  * deferral audit, the plan dump and the shuffle report all read them
-  * from here.
+  * deferral audit and the plan dump read them from here; [[Profile]]
+  * reads the same execution-end events together with their execution ids.
   */
 object Executions {
 

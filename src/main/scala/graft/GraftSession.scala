@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession configuration every diagnostic/benchmark main
-  * shares (Bench, Verify, ExplainAll, ShuffleReport, Decompose and the
-  * other harness mains call `local`): a config
+  * shares (Profile and so Bench, Verify, ExplainAll, DeferralAudit,
+  * StreamBench, ScaleBench and RecallReport call `local`): a config
   * added here — e.g. the ObjectHashAggregate fallback threshold, which
   * changes physical aggregate operator choice — reaches the plan dumps,
   * the benches, and the oracle runner identically. A drifted copy would

@@ -130,7 +130,7 @@ object ScaleBench {
     // proves the join keys distinct and eliminates the joins under a
     // count, so the row would time a pruned plan (measured: 0.4 s at
     // 100× vs its components' 9-14 s). Its scale story is its parts:
-    // t24b + t29b are swept, and ShuffleReport executes t31 fully.
+    // t24b + t29b are swept, and ExplainAll (noop sink) executes t31 fully.
     // leakage-safe split: repIngest builds the rep relation once per
     // session over the scaled corpus; the timed query is the recurring
     // cost — a doc_id equi-join against that persisted state
@@ -152,9 +152,9 @@ object ScaleBench {
     * enough to preserve neighborhood structure (V7SALTED recall vs exact
     * stays ≥ 0.9), large enough that no two replicas collide, so the
     * duplicate-collapse wrapper is an identity and knnGraph's CELLED CORE
-    * carries the load. Shared by the `v7_knn_graph_salted` sweep row and
-    * the [[V7Salted]] recall harness — one definition, or the recall
-    * claim would be measured on different data than the timing.
+    * carries the load. The `v7_knn_graph_salted` sweep row times it, and
+    * V7SALTED_r14.json measured recall on this same definition — change
+    * it and that recall claim no longer covers the timed data.
     */
   private[graft] def saltedEmbeddings(spark: SparkSession,
       dir: String): DataFrame =

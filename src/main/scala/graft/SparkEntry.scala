@@ -33,7 +33,7 @@ object SparkEntry {
       Tutorial.matchEventPlayer(matchEvents(spark, dir)), players(spark, dir))
   }
 
-  // lazy val, not def: immutable data that Verify/Bench/ShuffleReport
+  // lazy val, not def: immutable data that Verify/Profile/ExplainAll
   // each touch several times — rebuilding ~140 entries (and
   // re-concatenating the multi-KB oracle strings) per access is waste
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -503,8 +503,9 @@ object Dedup {
     // r14: the df pass is PRUNED to the batch's own shingles first — df
     // is only ever consulted for shingles the batch carries, and the
     // full-table aggregation was the measured corpus-coupled term of the
-    // ingest loop (IngestDecompose: contain stage 1.92× at 21× corpus vs
-    // band probe 1.05×). The broadcast semi-join keeps the surviving df
+    // ingest loop (SCALE.md scaled-ingest stage split: contain stage 1.92×
+    // at 21× corpus vs band probe 1.05×; post-fix INGESTDECOMP_r14.json).
+    // The broadcast semi-join keeps the surviving df
     // values identical (corpus df of exactly those shingles) and keeps
     // the corpus side exchange-free; aggregation input drops from every
     // posting to Σ df over the batch's shingles — batch-coupled on any
@@ -723,8 +724,8 @@ object Dedup {
     * order-smallest common token sits early in both prefixes and the
     * bound prunes only 5.8 % of candidates (6.47 M → 6.10 M at sf0.1)
     * while widening the prefix relation by the rank column — isolated
-    * min 5.45 → 5.93 s, scoped rows flat-to-worse. Evidence preserved in
-    * [[graft.Decompose]]'s d20 `cand_pos` stage and OPTIMIZATION_r16.md;
+    * min 5.45 → 5.93 s, scoped rows flat-to-worse. Evidence: the d20
+    * stage split's `cand_pos` stage in OPTIMIZATION_r16.md;
     * the PipelineSpec 300/301 fixture pins the boundary pair any future
     * re-attempt must keep.
     */
@@ -749,7 +750,8 @@ object Dedup {
       .agg(array_sort(collect_list(struct(col("_df"), col("_tok")))).as("_r"))
     // persisted: BOTH candidate-join sides read the prefix relation, and
     // persisting it does two things at once (r16,
-    // measured in Decompose d20): the ranked subtree (explode + df join +
+    // measured by the d20 stage split in OPTIMIZATION_r16.md): the
+    // ranked subtree (explode + df join +
     // per-doc (df,tok) sort) runs once instead of once per side, and the
     // join planner sees the relation's TRUE size instead of a
     // lazy-subtree underestimate — which had it broadcast-hashing a

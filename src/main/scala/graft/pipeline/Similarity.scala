@@ -186,7 +186,7 @@ object Similarity {
     * k-means seed space: duplicate seeds collapse to dead cells, live
     * cells cap at the DISTINCT count, occupancy grows with N, and pair
     * volume goes O(N²/distinct) — measured 22.3× pairs for 10× rows
-    * (V7Decompose, r13) before the collapse, linear after. On all-
+    * (r13 stage split, SCALE.md) before the collapse, linear after. On all-
     * distinct data the wrapper is an identity (singleton classes; the
     * core sees the same rows and seeds) at the cost of one extra
     * vector-keyed exchange + two bounded joins — ~linear, paid for the
@@ -940,7 +940,8 @@ object Similarity {
     * cost for 10× data): the join condition referenced only the ids, so
     * codegen DEFERRED the `pqEncode(vec)` projection variable into the
     * per-build-row loop and the corpus encode silently ran once per
-    * (row, query) pair — V16Decompose pinned ~86 % of retrieve CPU in
+    * (row, query) pair — the r13 stage split (SCALE.md) pinned ~86 % of
+    * retrieve CPU in
     * pqEncode frames. Generate evaluates its input eagerly, so here the
     * encode is structurally once-per-row, and per-pair cost drops from
     * m·(dim/m) float mults to m table reads. Queries are collected to
@@ -1121,7 +1122,7 @@ object Similarity {
       // deferred encode silently runs that many times per row — at the
       // sf0.1 bench defaults (20 queries, nProbe 20 of ~40 cells) that
       // is ~10 encodes/row, measured as v17's ~2 s gate bill
-      // (V17Decompose, r15: v17_nolloyd 3.32 s vs v17b_full 1.26 s).
+      // (r15 stage split, SCALE.md: v17_nolloyd 3.32 s vs v17b_full 1.26 s).
       // In that regime one exchange of the code rows (m ints + cell id
       // per row — the corpus's COMPRESSED form) materializes the
       // projection exactly once per row; below it the lazy form stands

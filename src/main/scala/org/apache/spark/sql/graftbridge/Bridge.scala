@@ -3,6 +3,8 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** Spark 4 removed the public `new Column(Expression)` constructor; the
   * supported conversion lives in `org.apache.spark.sql.classic`, which is
@@ -30,4 +32,14 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.createOrReplaceTempFunction(
         name, builder, "built-in")
+
+  /** A SQL execution end as `QueryExecutionListener.onSuccess` reports it:
+    * (execution id, action name, QueryExecution) of a named, successful
+    * execution, else None. The id is the `spark.sql.execution.id` its
+    * jobs carry; the other three fields are `private[sql]`.
+    */
+  def namedSuccess(e: SparkListenerSQLExecutionEnd)
+      : Option[(Long, String, QueryExecution)] =
+    if (e.qe == null || e.executionFailure.isDefined) None
+    else e.executionName.map(n => (e.executionId, n, e.qe))
 }

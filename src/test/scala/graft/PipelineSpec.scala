@@ -1436,8 +1436,9 @@ class PipelineSpec extends SparkSpec {
       (4L, "alpha beta gamma beta alpha gamma", "de"))
       .toDF("doc_id", "text", "lang").withColumn("source", lit("s"))
     val buckets = 4096
-    // replay of the PRE-r16 pipeline from public pieces (the Decompose
-    // t29 mirror): gramCounts features, md5 buckets, then the two-pass
+    // replay of the PRE-r16 pipeline from public pieces (as the r16 t29
+    // stage split in OPTIMIZATION_r16.md ran it): gramCounts features,
+    // md5 buckets, then the two-pass
     // raw/tgt groupBys + left join + na.fill(0) log-ratio table
     val db = d.select(col("doc_id"), col("lang"),
         explode(graft.functions.text.gramCounts(
