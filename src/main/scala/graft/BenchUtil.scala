@@ -15,8 +15,8 @@ private[graft] object BenchUtil {
     * window had a full core to itself; sustained ≳ 1.5 means an external
     * CPU load was stealing cycles from the CPU-bound rows — the r14
     * contamination class the shuffle-bound x6 anchor cannot see
-    * (SUITEDECOMP_r15). ONE definition: the driver bench, the forked
-    * scale sweeps, and the scaled streaming sections all publish the
+    * (SUITEDECOMP_r15). ONE definition: `graft.Bench`, the scale
+    * sweeps, and the scaled streaming sections all publish the
     * factor against the same anchor, so readings are comparable across
     * artifacts.
     */

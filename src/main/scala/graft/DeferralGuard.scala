@@ -38,7 +38,7 @@ import org.apache.spark.sql.execution.window.WindowExec
   * expected matches per streamed row stay under one (the production
   * regime of [[graft.pipeline.Similarity.ivfPqTopK]]'s gated probe,
   * where nCells ≫ |queries|·nProbe). The contract, enforced by
-  * DeferralGuardSpec and the [[DeferralAudit]] main: every registered
+  * DeferralGuardSpec and the [[ExplainAll]] main: every registered
   * query's plan must be hazard-free, and any deliberate deferral must be
   * justified by its multiplicity gate's own parameters (asserted where
   * it is introduced, not discovered in a bench round).
@@ -220,69 +220,15 @@ object DeferralGuard {
   def hazards(df: DataFrame): Seq[Hazard] =
     hazards(df.queryExecution.executedPlan)
 
-  /** Hazards in every plan one registered query runs: the query is built
-    * and written to the no-op sink, and each execution captured meanwhile
-    * is walked — the checkpoints its operators ran while it was built
-    * (each a pipeline breaker) and the query's own executed plan.
+  /** All hazards in the executed plans of `runs`. */
+  def executedHazards(runs: Seq[(String, QueryExecution)]): Seq[Hazard] =
+    runs.flatMap { case (_, qe) => hazards(qe.executedPlan) }.distinct
+
+  /** Hazards in every plan one registered query runs
+    * ([[Executions.ofQuery]]): the checkpoints its operators ran while it
+    * was built (each a pipeline breaker) and the query's own executed plan.
     */
   def queryHazards(spark: SparkSession,
-      query: (SparkSession, String) => DataFrame, sfDir: String): Seq[Hazard] = {
-    val (_, runs) = Executions.capture(spark) {
-      query(spark, sfDir).write.format("noop").mode("overwrite").save()
-    }
-    // the write itself is always an execution: none captured means the
-    // capture is broken, and an empty walk would pass vacuously
-    require(runs.nonEmpty, "no execution captured for the query's write")
-    runs.flatMap { case (_, qe) => hazards(qe.executedPlan) }.distinct
-  }
-}
-
-/** Audit main (r16): build every registered query, EXECUTE it (so AQE
-  * has re-planned and broadcast decisions are the real ones), and walk
-  * every executed plan with [[DeferralGuard.queryHazards]]. Prints one JSON line
-  * (`"metric":"deferral_audit"`), exits 1 when any non-allowlisted
-  * hazard is found — the committed DEFERRAL_r{N}.json artifact, and the
-  * per-round gate that makes the three-round trap class impossible to
-  * re-introduce silently.
-  *
-  * Usage: runMain graft.DeferralAudit [sfDir]
-  */
-object DeferralAudit {
-  /** Adjudicated deliberate deferrals: query → justification. Empty at
-    * r16 HEAD — every registered query's plan is hazard-free at the
-    * bench/verify SFs (the v17 multiplicity gate materializes its code
-    * rows through an exchange there; its sub-unit-multiplicity deferral
-    * regime is exercised and asserted in DeferralGuardSpec instead).
-    */
-  private val Allow: Map[String, String] = Map.empty
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      try name -> (DeferralGuard.queryHazards(spark, fn, sfDir), None: Option[String])
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          name -> (Seq.empty[DeferralGuard.Hazard], Some(e.toString.take(200)))
-      }
-    }
-    val flagged = rows.collect { case (n, (hz, None)) if hz.nonEmpty => (n, hz) }
-    val errs = rows.collect { case (n, (_, Some(e))) => (n, e) }
-    val bad = flagged.filterNot { case (n, _) => Allow.contains(n) }
-    val flaggedJson = flagged.map { case (n, hz) =>
-      s""""$n":{"allowed":${Allow.contains(n)},"hazards":[${
-        hz.map(h => s""""${esc(h.toString)}"""").mkString(",")}]}"""
-    }.mkString("{", ",", "}")
-    val errJson = errs.map { case (n, e) => s""""$n":"${esc(e)}"""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"deferral_audit","sf":"$sfDir","n_queries":${
-      rows.size},"n_flagged":${flagged.size},"n_bad":${bad.size},"n_err":${
-      errs.size},"flagged":$flaggedJson,"errors":$errJson}""")
-    spark.stop()
-    if (bad.nonEmpty || errs.nonEmpty) sys.exit(1)
-  }
+      query: (SparkSession, String) => DataFrame, sfDir: String): Seq[Hazard] =
+    executedHazards(Executions.ofQuery(spark, query, sfDir))
 }

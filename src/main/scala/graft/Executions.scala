@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -49,6 +49,20 @@ object Executions {
       drain(spark)
       (out, seen.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Build a registered query and write it to the no-op sink: every
+    * execution that runs, its operators' checkpoints included, in order.
+    */
+  def ofQuery(spark: SparkSession, query: (SparkSession, String) => DataFrame,
+      sfDir: String): Seq[(String, QueryExecution)] = {
+    val (_, runs) = capture(spark) {
+      query(spark, sfDir).write.format("noop").mode("overwrite").save()
+    }
+    // the write itself is always an execution: none captured means the
+    // capture is broken, and an empty walk would pass vacuously
+    require(runs.nonEmpty, "no execution captured for the query's write")
+    runs
   }
 
   /** Every node of an executed plan: AQE roots expand to their final

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession configuration every diagnostic/benchmark main
-  * shares (Profile and so Bench, Verify, ExplainAll, DeferralAudit,
-  * StreamBench, ScaleBench and RecallReport call `local`): a config
+  * shares (Profile and so Bench, Verify, ExplainAll, StreamBench,
+  * ScaleBench and RecallReport call `local(cpus)`): a config
   * added here — e.g. the ObjectHashAggregate fallback threshold, which
   * changes physical aggregate operator choice — reaches the plan dumps,
   * the benches, and the oracle runner identically. A drifted copy would
@@ -12,6 +12,12 @@ import org.apache.spark.sql.SparkSession
   * defeating the plan-audit purpose.
   */
 object GraftSession {
+
+  /** SPARK_GRAFT_CPUS (default 4): the cores every main's session runs
+    * on. One default, so no main oversubscribes a host the others fit.
+    */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

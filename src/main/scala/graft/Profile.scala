@@ -11,7 +11,7 @@ import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd,
   StageInfo}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -60,13 +60,16 @@ import Profile._
   * land in `unattributed`. Per-query task totals are summed from
   * task-end events, independently of the per-stage records.
   *
+  * `host_factor` divides by `hostAnchor`; with none (a [[ScaleBench]]
+  * replica count never anchored) it is null, never a guess.
+  *
   * Usage: runMain graft.Profile [query ...]   (all queries by default)
   * Reads SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 4) and
   * SPARK_GRAFT_RUNS (default 3); prints one `"metric":"profile"` line
   * with the Bench line embedded under `"bench"`.
   */
 final case class Profile(sf: String, cpus: Int, names: Seq[String],
-    passes: Seq[Pass]) {
+    passes: Seq[Pass], hostAnchor: Option[Double] = Some(HostAnchorSf01)) {
 
   private def rows(i: Int): Seq[Run] = passes.map(_.rows(i))
 
@@ -93,8 +96,8 @@ final case class Profile(sf: String, cpus: Int, names: Seq[String],
     }
     val runTotals = passes.map(p => r3(p.rows.filter(_.err.isEmpty).map(_.sec).sum))
     val refs = passes.flatMap(_.hostRefs.filter(_.err.isEmpty).map(_.sec))
-    val factor =
-      if (refs.isEmpty) "null" else r3(median(refs) / HostAnchorSf01).toString
+    val factor = hostAnchor.filter(_ => refs.nonEmpty)
+      .fold("null")(a => r3(median(refs) / a).toString)
     s"""{"metric":"total","value":${r3(ok.sum)},"unit":"sec","value_median":${
       r3(okMed.sum)},"queries":${rowsJson(_._2)},"queries_median":${
       rowsJson(_._3)},"skew_rows":[${skewRows.mkString(",")}],"n_ok":${
@@ -221,7 +224,7 @@ object Profile {
     if (good.nonEmpty) good else row
   }
 
-  private def esc(s: String): String =
+  private[graft] def esc(s: String): String =
     s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
@@ -247,27 +250,35 @@ object Profile {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    require(runs >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $runs")
-    val spark = GraftSession.local(cpus)
-    try run(spark, sfDir, runs, names) finally spark.stop()
+    val spark = GraftSession.local(GraftSession.cpus)
+    try run(spark, sfDir, envRuns, names) finally spark.stop()
   }
 
+  /** SPARK_GRAFT_RUNS (default 3): the number of timed passes. */
+  private[graft] def envRuns: Int = {
+    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
+    require(runs >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $runs")
+    runs
+  }
+
+  /** Profile `names`, each looked up in `queries`, which must also hold
+    * [[ScaleBench.HostRefRow]].
+    */
   private[graft] def run(spark: SparkSession, sfDir: String, runs: Int,
-      names: Seq[String]): Profile = {
+      names: Seq[String], queries: Map[String, (SparkSession, String) => DataFrame]
+        = SparkEntry.queries): Profile = {
     val sorted = names.distinct.sorted
     // NonFatal only: after an OOM or linkage error the JVM is unreliable
     // and the run must fail rather than publish its numbers
     (sorted :+ ScaleBench.HostRefRow).distinct.sorted.foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir).count()
+      try queries(n)(spark, sfDir).count()
       catch { case NonFatal(_) => () }
     }
     // registered after the warm-up, so no warm-up plan is held
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
     try {
-      def once(name: String): Run = runOnce(spark, sfDir, rec, name)
+      def once(name: String): Run = runOnce(spark, sfDir, rec, queries(name))
       // a mid-pass throttle skews the closing probes away from the opening ones
       val passes = (1 to runs).map { _ =>
         val cpuFirst = BenchUtil.cpuSpin()
@@ -281,8 +292,7 @@ object Profile {
   }
 
   private def runOnce(spark: SparkSession, sfDir: String, rec: Recorder,
-      name: String): Run = {
-    val fn = SparkEntry.queries(name)
+      fn: (SparkSession, String) => DataFrame): Run = {
     Executions.drain(spark)
     rec.take() // events of earlier actions
     val j0 = Jvm.now()

@@ -22,8 +22,7 @@ object RecallReport {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local(GraftSession.cpus)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -34,7 +33,7 @@ object RecallReport {
     val only = sys.env.get("SPARK_GRAFT_RECALL_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // a typo'd section must fail loudly, never print an all-empty
-    // structurally-green artifact (the ScaleBench SPARK_GRAFT_ONLY rule)
+    // structurally-green artifact
     only.foreach(o => require(o.nonEmpty && o.subsetOf(sections),
       s"unknown SPARK_GRAFT_RECALL_ONLY sections: ${o.diff(sections)} " +
         s"(expected any of ${sections.toSeq.sorted.mkString(",")})"))

@@ -35,10 +35,13 @@ import org.apache.spark.sql.functions._
   *    retrievers, already swept (v19 = v1+v6; v20 = v12's shape);
   *  - media synthesis (m1–m3), whose cost is the synthetic byte generator.
   *
+  * [[Profile]] times the rows on the replicated directory; one name
+  * alone is its fresh-JVM isolated timing.
+  *
   * Usage: SPARK_GRAFT_SCALE_DIR=/tmp/graft_sfscale SPARK_GRAFT_REPLICAS=10
-  *        sbt "runMain graft.ScaleBench"
-  * Prints the same one-line JSON contract as [[Bench]] (metric
-  * "scale_total", plus a "replicas" field).
+  *        sbt "runMain graft.ScaleBench [query ...]"   (Headline by default)
+  * Also reads SPARK_GRAFT_SF_DIR (the source), SPARK_GRAFT_CPUS and
+  * SPARK_GRAFT_RUNS; prints the Profile line, `sf` the scaled directory.
   */
 object ScaleBench {
 
@@ -60,7 +63,7 @@ object ScaleBench {
   private val AllTables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val Headline: Seq[String] = Seq(
+  private[graft] val Headline: Seq[String] = Seq(
     // aggregation / shuffle shapes
     "a1_count_group", "a5_multi_group", "a7_percentiles", "a8_topk_per_group",
     "a9_rollup", "a11_heavy_hitters", "a16_count_min", "a17_numeric_profile",
@@ -232,24 +235,24 @@ object ScaleBench {
   }
 
   /** The host-speed reference row: a fixed, shuffle-heavy, multi-second
-    * query run FIRST and LAST in every forked sweep. r11 lost cross-round
-    * sweep comparability to a throttled host window and proved it only by
-    * forensic isolated re-runs of unchanged code; this makes the probe
-    * systematic — `host_factor` = median(reference runs) / anchor rides
-    * in the JSON, so a skewed window flags itself. Anchors are the r12
-    * calm-window medians of this row (recorded 2026-08-15, idle host);
-    * a reading far from 1 means normalize or re-run, and a missing
-    * anchor (unswept replica count) publishes null, never a guess.
+    * query [[Profile]] runs first and last in every pass. r11 lost
+    * cross-round sweep comparability to a throttled host window and
+    * proved it only by forensic isolated re-runs of unchanged code; this
+    * makes the probe systematic — `host_factor` = median(reference runs)
+    * / anchor rides in the JSON, so a skewed window flags itself. A
+    * reading far from 1 means normalize or re-run, and a missing anchor
+    * (unswept replica count) publishes null, never a guess.
     */
   private[graft] val HostRefRow = "x6_salted_join"
   /** Calm-window anchor seconds per replica count — the MEDIAN OF THE
     * SIX IN-SWEEP reference readings from the r12 calm-window sweep
     * artifacts (2026-08-15; window proven calm by per-row medians ≤ the
-    * r11 artifacts and isolated cross-checks). The anchor must be an
-    * in-sweep reading: isolated fresh-JVM runs of the same row read
-    * ~25-30 % FASTER at 100× (median 9.24 s vs in-sweep 12.2 s —
-    * page-cache state after 29 preceding queries differs from a cold
-    * start), which is exactly the mistake the first recorded anchor
+    * r11 artifacts and isolated cross-checks), which ran each row in its
+    * own JVM: re-anchor before comparing one-JVM readings against them.
+    * The anchor must be an in-sweep reading: isolated fresh-JVM runs of
+    * the same row read ~25-30 % FASTER at 100× (median 9.24 s vs in-sweep
+    * 12.2 s — page-cache state after 29 preceding queries differs from a
+    * cold start), which is exactly the mistake the first recorded anchor
     * made (3.876 s, an unreproducible cache-warm isolated reading that
     * made a calm window read as factor 3.1). Dispersion at 100× is real
     * (isolated runs span 8.2-11.5 s): treat factor ≲ 1.5 as window
@@ -260,190 +263,26 @@ object ScaleBench {
   private val HostAnchor: Map[Int, Double] = Map(
     10 -> 1.271, 100 -> 12.195)
 
-  /** Fork-per-row sweep (SPARK_GRAFT_FORK=1): one fresh child JVM per
-    * headline query, each a plain `SPARK_GRAFT_ONLY=<name>` run of this
-    * main. Same-HEAD single-JVM sweeps scattered 13–34 s on tail rows
-    * (r10: d21 34.0/20.7/13.4 in-sweep vs 14.9 isolated) because the
-    * per-query cache/GC reset is not isolation — heap fragmentation,
-    * code-cache pressure, and page-cache state survive it. A fresh JVM
-    * is; each child pays its own JIT in its own warmup pass. Children
-    * inherit this JVM's flags (the --add-opens set) and classpath;
-    * per-session disk state (scaled data, mtime-gated layouts) is built
-    * by the parent / first child and reused by the rest.
-    *
-    * `SPARK_GRAFT_RUNS=N` (default 1) repeats the whole sweep N times
-    * and publishes the PER-ROW MEDIAN (`"per_row":"median"`, plus
-    * `run_totals` and every run's host-reference readings) — the merge
-    * that produced the committed BENCH_sf* artifacts, in-repo so the
-    * artifact is regenerable by one command instead of a by-hand step.
-    */
-  private def forkedSweep(headline: Seq[String], outDir: String,
-      replicas: Int, cpus: String, passes: Int): Unit = {
-    import scala.jdk.CollectionConverters._
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xrunjdwp"))
-    val cp = System.getProperty("java.class.path")
-    val entryRe = """"queries":\{(.*?)\},"n_ok"""".r
-    def runChild(name: String): String = {
-      val pb = new ProcessBuilder(
-        (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.ScaleBench")).asJava)
-      pb.environment().put("SPARK_GRAFT_ONLY", name)
-      pb.environment().put("SPARK_GRAFT_FORK", "0")
-      pb.redirectErrorStream(false)
-      val p = pb.start()
-      // drain stderr concurrently — Spark logs enough to fill the pipe
-      // buffer and deadlock a child that is never read
-      val drain = new Thread(() => {
-        val buf = new Array[Byte](8192)
-        while (p.getErrorStream.read(buf) >= 0) ()
-      })
-      drain.setDaemon(true); drain.start()
-      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-      val rc = p.waitFor()
-      entryRe.findFirstMatchIn(out).map(_.group(1)).getOrElse(
-        s""""$name":{"sec":0,"err":"child exited $rc without a result line"}""")
-    }
-    val secRe = """:(?:\{"sec":)?([0-9.eE+-]+)""".r
-    def secOf(entry: String): Option[Double] =
-      if (entry.contains("\"err\"")) None
-      else secRe.findFirstMatchIn(entry).map(_.group(1).toDouble)
-    val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "1").toInt
-    require(nRuns >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $nRuns")
-    // each run: cpu spin + host reference row, the sweep, then both
-    // again. The spin probe (BenchUtil.cpuSpin, same anchor as Bench)
-    // closes the blind spot SUITEDECOMP_r15 proved in r14: external CPU
-    // load steals from the children's CPU-bound rows while the
-    // shuffle-bound x6 anchor stays calm — the parent's spin sees the
-    // same host contention the children do.
-    val all = (1 to nRuns).map { _ =>
-      val cpuFirst = BenchUtil.cpuSpin()
-      val refFirst = secOf(runChild(HostRefRow))
-      val entries = headline.map(name => name -> runChild(name))
-      val refLast = secOf(runChild(HostRefRow))
-      val cpuLast = BenchUtil.cpuSpin()
-      (entries, Seq(refFirst, refLast).flatten, Seq(cpuFirst, cpuLast))
-    }
-    // true median (even counts average the middle pair — the ONE shared
-    // definition in StreamBench.median): with the default single run the
-    // host refs are TWO readings, and taking the lower one would hide a
-    // mid-sweep throttle, the exact skew the reference row exists to
-    // surface
-    def median(xs: Seq[Double]): Double = StreamBench.median(xs)
-    def r3(x: Double): Double = BenchUtil.r3(x)
-    // per-row median across runs; a row with any err keeps its first
-    // err entry so failures stay loud in the merged artifact
-    val entries = headline.indices.map { i =>
-      val row = all.map(_._1(i)._2)
-      val secs = row.flatMap(secOf)
-      row.find(_.contains("\"err\"")).getOrElse(
-        s""""${headline(i)}":${r3(median(secs))}""")
-    }
-    val ok = entries.filterNot(_.contains("\"err\""))
-    val total = ok.flatMap(secOf).sum
-    val runTotals = all.map { case (es, _, _) =>
-      r3(es.map(_._2).flatMap(secOf).sum) }
-    val refs = all.flatMap(_._2)
-    val cpuRefs = all.flatMap(_._3)
-    val factor = HostAnchor.get(replicas)
-      .filter(_ => refs.nonEmpty)
-      .map(a => r3(median(refs) / a)).map(_.toString).getOrElse("null")
-    val merged = if (nRuns == 1) ""
-      else s""","runs":$nRuns,"per_row":"median","run_totals":[${
-        runTotals.mkString(",")}]"""
-    println(s"""{"metric":"scale_total","value":${r3(total)},"unit":"sec","queries":${
-      entries.mkString("{", ",", "}")},"n_ok":${ok.size},"n_err":${
-      entries.size - ok.size},"sf":"$outDir","replicas":$replicas,"cpus":$cpus,"passes":$passes,"forked":true$merged,"host_ref":{"name":"$HostRefRow","runs":[${
-      refs.map(r3).mkString(",")}]},"host_factor":$factor,${
-      BenchUtil.cpuJson(cpuRefs)}}""")
-    if (entries.size != ok.size) sys.exit(1)
-  }
-
   def main(args: Array[String]): Unit = {
+    // validate before booting a session: a typo'd name must fail loudly,
+    // not print an empty green sweep
+    val unknown = args.filterNot(Headline.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"not in Headline: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sfscale")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    if (sys.env.get("SPARK_GRAFT_FORK").contains("1")) {
-      // parent: generate the scaled data once (children find the marker
-      // and skip), then run every row in its own JVM
-      val gen = GraftSession.local(cpus)
-      generate(gen, srcDir, outDir, replicas, cpus.toInt)
-      gen.stop()
-      val only = sys.env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      only.foreach(o => require(o.forall(Headline.contains),
-        s"SPARK_GRAFT_ONLY names not in Headline: ${o.filterNot(Headline.contains)}"))
-      forkedSweep(only.fold(Headline)(o => Headline.filter(o)), outDir,
-        replicas, cpus, sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt)
-      return
-    }
-    val spark = GraftSession.local(cpus)
-    val missing = Headline.filterNot(n =>
-      SparkEntry.queries.contains(n) || ScaleOnly.contains(n))
-    require(missing.isEmpty, s"unknown headline queries: $missing")
-    generate(spark, srcDir, outDir, replicas, cpus.toInt)
-    // SPARK_GRAFT_ONLY=q1,q2 reruns a subset — for isolating one query's
-    // regression without paying the full sweep
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd ONLY name must fail loudly, not print an empty green sweep
-    only.foreach(o => require(o.forall(Headline.contains),
-      s"SPARK_GRAFT_ONLY names not in Headline: ${o.filterNot(Headline.contains)}"))
-    val headline = only.fold(Headline)(o => Headline.filter(o))
-    val qs = headline.map(n =>
-      n -> SparkEntry.queries.getOrElse(n, ScaleOnly(n)))
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-    // min of `passes` timed runs per query: single-JVM sf10 timings carry
-    // multi-second GC spread (observed ±2-3× on identical binaries); the
-    // min is the standard allocation-noise-suppressed estimator and is
-    // what the cross-SF ratios are judged on.
-    //
-    // Warmup is PER QUERY, immediately before its timed runs, with a
-    // cache/persist/GC reset between queries — a single global warmup
-    // pass left the JVM carrying every query's checkpoint blocks,
-    // broadcasts, and cache entries before the first timing, and that
-    // pollution inflated unrelated trivial queries ~2-3× in-sweep vs
-    // isolated reruns (measured r10: a1_count_group 1.66 s in-sweep,
-    // 0.40 s isolated on the identical binary). The reset bounds
-    // carry-over so in-sweep ≈ isolated; per-session materialized state
-    // (bucketed tables, IVF index) lives on disk and survives it.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    val results = qs.map { case (name, fn) =>
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc() // lets ContextCleaner reap dead broadcasts/checkpoints
-      // warmup (JIT, codegen, listings, per-session ingest builds).
-      // NonFatal only: after an OOM/linkage error the JVM is unreliable —
-      // fail the run rather than time a broken process
-      try fn(spark, outDir).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-      val runs = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        val err = try { fn(spark, outDir).count(); None }
-                  catch { case scala.util.control.NonFatal(e) => Some(e.toString.take(200)) }
-        ((System.nanoTime() - t0) / 1e9, err)
-      }
-      val err = runs.flatMap(_._2).headOption
-      // min over SUCCESSFUL passes only: a fast-failing pass's wall clock
-      // is not a measurement (fall back to all runs when none succeeded,
-      // so the err row still carries a time)
-      val good = runs.collect { case (t, None) => t }
-      (name, (if (good.nonEmpty) good else runs.map(_._1)).min, err)
-    }
-    val js = results.map {
-      case (k, v, None) => s""""$k":$v"""
-      case (k, v, Some(e)) => s""""$k":{"sec":$v,"err":"${esc(e)}"}"""
-    }.mkString("{", ",", "}")
-    val ok = results.collect { case (_, v, None) => v }
-    val nErr = results.count(_._3.isDefined)
-    println(s"""{"metric":"scale_total","value":${ok.sum},"unit":"sec","queries":$js,"n_ok":${ok.size},"n_err":$nErr,"sf":"$outDir","replicas":$replicas,"cpus":$cpus,"passes":$passes}""")
-    spark.stop()
-    if (nErr > 0) sys.exit(1)
+    val runs = Profile.envRuns
+    val spark = GraftSession.local(GraftSession.cpus)
+    val p = try {
+      generate(spark, srcDir, outDir, replicas, GraftSession.cpus.toInt)
+      Profile.run(spark, outDir, runs,
+        if (args.nonEmpty) args.toSeq else Headline,
+        SparkEntry.queries ++ ScaleOnly)
+    } finally spark.stop()
+    println(p.copy(hostAnchor = HostAnchor.get(replicas)).json)
+    if (p.nErr > 0) sys.exit(1)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming throughput benchmark — the continuous-execution numbers the
   * batch benches ([[Bench]], [[ScaleBench]]) cannot see:
@@ -15,16 +16,13 @@ import org.apache.spark.sql.functions._
   *     claim made measurable: the banded index keeps per-ingest cost
   *     O(batch), so the latency curve must stay FLAT as the corpus (and
   *     index) grows — a corpus-coupled probe would slope upward.
-  *  2. the KSQL PUSH-QUERY path ([[ksql.KsqlStreamingEngine]]): INSERT →
-  *     MemoryStream → update-mode aggregation changelog, timed per
-  *     insert burst (the reference's interactive `EMIT CHANGES` shape).
-  *  3. the QUALITY-GATE scoring loop ([[graft.streaming.StreamScore]]):
+  *  2. the QUALITY-GATE scoring loop ([[graft.streaming.StreamScore]]):
   *     micro-batches scored against the prebuilt bigram-LM model — the
   *     train-once/score-many split running in its production position;
   *     per-batch cost must track the batch, never the model corpus.
   *
   * Prints ONE JSON line:
-  * `{"metric":"stream_throughput","ingest":{...},"ksql_push":{...}}`
+  * `{"metric":"stream_throughput","ingest":{...},"quality_gate":{...}}`
   * with per-batch latencies (seconds), aggregate records/s, and the
   * final index/corpus sizes. Run via the [[ScaleBench]] java -cp recipe;
   * `SPARK_GRAFT_SF_DIR` picks the source table (default sf0.1),
@@ -46,7 +44,7 @@ object StreamBench {
   private def arr(xs: Seq[Double]): String =
     xs.map(x => f"$x%.3f").mkString("[", ",", "]")
   /** Median with even-count middle-pair averaging; 0 on empty. ONE
-    * definition for every artifact (StreamBench trends, ScaleBench's
+    * definition for every artifact (StreamBench trends, Profile's
     * per-row and host-reference medians) — a drifted copy would change
     * `host_factor` depending on which path computed it. The Python twin
     * in tools/recompute_host_factor.py must stay byte-consistent.
@@ -82,6 +80,28 @@ object StreamBench {
   }
   private def steadyRps(xs: Seq[Double], rowsPerBatch: Int): Double =
     steady(xs).size * rowsPerBatch / steady(xs).sum
+
+  /** The `latency_sec`, `steady_records_per_sec` and `steady_trend`
+    * fields of one timed loop (no braces, no trailing comma).
+    */
+  private def latencyJson(lat: Seq[Double], rowsPerBatch: Int,
+      compactEvery: Int = 0): String =
+    s""""latency_sec":${arr(lat)},"steady_records_per_sec":${
+      f"${steadyRps(lat, rowsPerBatch)}%.1f"},"steady_trend":${
+      f"${steadyTrend(lat, compactEvery)}%.3f"}"""
+
+  /** Per-batch wall seconds of feeding `batches` through `input` and
+    * running `q` to quiescence after each; stops `q`.
+    */
+  private def timeBatches[T](input: MemoryStream[T], q: StreamingQuery,
+      batches: Iterator[Array[T]]): Seq[Double] =
+    try batches.map { rows =>
+      val t0 = System.nanoTime()
+      input.addData(rows.toIndexedSeq: _*)
+      q.processAllAvailable()
+      (System.nanoTime() - t0) / 1e9
+    }.toSeq
+    finally q.stop()
 
   /** Word-salted replica of the documents table: every 4th word of each
     * text is replaced by a replica-unique token, which destroys ~3/4 of
@@ -160,14 +180,7 @@ object StreamBench {
         input.toDF().toDF("doc_id", "text"), tbl, s"$dir/sh",
         s"$dir/corpus", s"$dir/ckpt", compactEvery = compactEvery,
         containTable = Some(ctbl), manifestedCorpus = true)
-      val lat = try {
-        feed.grouped(batchRows).take(batches).map { rows =>
-          val b0 = System.nanoTime()
-          input.addData(rows.toIndexedSeq: _*)
-          q.processAllAvailable()
-          (System.nanoTime() - b0) / 1e9
-        }.toSeq
-      } finally q.stop()
+      val lat = timeBatches(input, q, feed.grouped(batchRows).take(batches))
       (corpusRows, writeSec, buildSec, lat)
     }
 
@@ -183,9 +196,7 @@ object StreamBench {
         lat: Seq[Double]): String =
       s"""{"corpus_rows":$rows,"corpus_write_sec":${f"$write%.1f"},""" +
       s""""index_build_sec":${f"$build%.1f"},""" +
-      s""""latency_sec":${arr(lat)},""" +
-      s""""steady_records_per_sec":${f"${steadyRps(lat, batchRows)}%.1f"},""" +
-      s""""steady_trend":${f"${steadyTrend(lat, compactEvery)}%.3f"}}"""
+      s"""${latencyJson(lat, batchRows, compactEvery)}}"""
     // attribution split (r13, closes the r12 "name the growth term"
     // item): the combined ratio mixes two regimes — ordinary batches,
     // whose cost must track the BATCH (the O(batch) claim), and the
@@ -293,14 +304,7 @@ object StreamBench {
       val gq = graft.streaming.StreamScore.curationGateCalibrated(
         input.toDF().toDF("doc_id", "text"), s"$dir/lm", s"$dir/dsir",
         s"$dir/thresholds", s"$dir/accept", s"$dir/reject", s"$dir/ckpt")
-      val lat = try {
-        feed.grouped(batchRows).take(batches).map { rows =>
-          val b0 = System.nanoTime()
-          input.addData(rows.toIndexedSeq: _*)
-          gq.processAllAvailable()
-          (System.nanoTime() - b0) / 1e9
-        }.toSeq
-      } finally gq.stop()
+      val lat = timeBatches(input, gq, feed.grouped(batchRows).take(batches))
       val acc = spark.read.parquet(s"$dir/accept").count()
       val rej = spark.read.parquet(s"$dir/reject").count()
       (corpusRows, lmRows, buildSec, lat, acc, rej, minLm, minDsir)
@@ -318,9 +322,7 @@ object StreamBench {
         acc: Long, rej: Long, minLm: Long, minDsir: Long): String =
       s"""{"corpus_rows":$rows,"lm_model_rows":$lm,""" +
       s""""model_build_sec":${f"$build%.1f"},""" +
-      s""""latency_sec":${arr(lat)},""" +
-      s""""steady_records_per_sec":${f"${steadyRps(lat, batchRows)}%.1f"},""" +
-      s""""steady_trend":${f"${steadyTrend(lat)}%.3f"},""" +
+      s"""${latencyJson(lat, batchRows)},""" +
       s""""accepted_rows":$acc,"rejected_rows":$rej,""" +
       s""""cal_min_lm_c6":$minLm,"cal_min_dsir_c6":$minDsir}"""
     println(
@@ -399,14 +401,7 @@ object StreamBench {
           input.toDF().toDF("vec_id", "embedding"), s"$dir/ivfindex",
           centroids, s"$dir/topk_$policy", s"$dir/ckpt_$policy",
           refreshEvery = refreshEvery)
-        try {
-          feed.grouped(batchRows).take(batches).map { rows =>
-            val b0 = System.nanoTime()
-            input.addData(rows.toIndexedSeq: _*)
-            q.processAllAvailable()
-            (System.nanoTime() - b0) / 1e9
-          }.toSeq
-        } finally q.stop()
+        timeBatches(input, q, feed.grouped(batchRows).take(batches))
       }
       (indexRows, centroids.length, buildSec,
         serve("refresh", 1), serve("pinned", Int.MaxValue))
@@ -449,8 +444,7 @@ object StreamBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
     val batchRows = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH_ROWS", "500").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local(GraftSession.cpus)
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -461,20 +455,16 @@ object StreamBench {
     if (scaledReplicas > 0) {
       // _SCALED_MODE selects a subset (ingest|retrieval|curation|all) so
       // each section can be regenerated without re-running the others;
-      // the no-env default runs EVERY scaled section ("both" is kept as
-      // a legacy alias of ingest+retrieval — pre-r11 artifacts were
-      // regenerated under that name)
+      // the no-env default runs EVERY scaled section
       val mode =
         sys.env.getOrElse("SPARK_GRAFT_STREAM_SCALED_MODE", "all")
       // a typo'd mode must fail loudly, never print an empty green run
-      // (the same rule ScaleBench applies to SPARK_GRAFT_ONLY)
-      require(
-        Set("ingest", "retrieval", "curation", "both", "all").contains(mode),
+      require(Set("ingest", "retrieval", "curation", "all").contains(mode),
         s"unknown SPARK_GRAFT_STREAM_SCALED_MODE '$mode' " +
-          "(expected ingest|retrieval|curation|both|all)")
-      if (mode == "ingest" || mode == "both" || mode == "all")
+          "(expected ingest|retrieval|curation|all)")
+      if (mode == "ingest" || mode == "all")
         scaledIngest(spark, sfDir, scaledReplicas, nBatches, batchRows)
-      if (mode == "retrieval" || mode == "both" || mode == "all")
+      if (mode == "retrieval" || mode == "all")
         scaledRetrieval(spark, sfDir, scaledReplicas, nBatches, batchRows)
       if (mode == "curation" || mode == "all")
         scaledCuration(spark, sfDir, scaledReplicas, nBatches, batchRows)
@@ -513,50 +503,13 @@ object StreamBench {
       input.toDF().toDF("doc_id", "text"), tbl, s"$dir/sh", s"$dir/corpus",
       s"$dir/ckpt", compactEvery = 4, containTable = Some(ctbl),
       manifestedCorpus = true)
-    val ingestLat = try {
-      feed.grouped(batchRows).take(nBatches).map { rows =>
-        val t0 = System.nanoTime()
-        input.addData(rows.toIndexedSeq: _*)
-        q.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
-      }.toSeq
-    } finally q.stop()
+    val ingestLat = timeBatches(input, q, feed.grouped(batchRows).take(nBatches))
     val corpusRows =
       graft.engine.Layout.readManifested(spark, s"$dir/corpus").count()
     val indexRows = spark.table(tbl).count()
     val postRows = spark.table(ctbl).count()
 
-    // ---- 2. KSQL push query ----------------------------------------
-    val e = new ksql.KsqlStreamingEngine(spark,
-      connectorProvider = (s, _) => graft.streaming.Tutorial.playersSeed(s))
-    e.execute("CREATE SOURCE CONNECTOR c WITH ('table.whitelist' = 'players');")
-    e.execute("""CREATE TABLE players (
-      ID VARCHAR PRIMARY KEY, name VARCHAR(50), team VARCHAR(50),
-      nationality VARCHAR(50)) WITH (KAFKA_TOPIC = 'players');""")
-    e.execute("""CREATE STREAM match_event (
-      id VARCHAR KEY, event_type VARCHAR, player_id VARCHAR, home boolean)
-      WITH (KAFKA_TOPIC='match_event');""")
-    val h = e.execute(
-      """SELECT id, count(id) AS n FROM match_event
-         GROUP BY id EMIT CHANGES;""").get
-    val insertsPerBurst = 200
-    val kinds = Seq("GOAL", "ASSIST", "SAVE")
-    val pushLat = try {
-      (0 until nBatches).map { b =>
-        val t0 = System.nanoTime()
-        var i = 0
-        while (i < insertsPerBurst) {
-          val id = (b * insertsPerBurst + i) % 7 + 1
-          e.execute(s"INSERT INTO match_event VALUES " +
-            s"('$id', '${kinds(i % kinds.size)}', '${i % 5 + 1}', ${i % 2 == 0});")
-          i += 1
-        }
-        h.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
-      }
-    } finally h.stop()
-
-    // ---- 3. quality-gate scoring loop -------------------------------
+    // ---- 2. quality-gate scoring loop -------------------------------
     // train-once: the LM model materializes from the source table; each
     // micro-batch is then scored by a vocab-keyed join against it
     // (StreamScore) — per-batch cost must track the batch, not the model
@@ -567,18 +520,11 @@ object StreamBench {
     val gq = graft.streaming.StreamScore.qualityGate(
       ginput.toDF().toDF("doc_id", "text"), s"$dir/model",
       s"$dir/accept", s"$dir/reject", s"$dir/gckpt")
-    val gateLat = try {
-      feed.grouped(batchRows).take(nBatches).map { rows =>
-        val t0 = System.nanoTime()
-        ginput.addData(rows.toIndexedSeq: _*)
-        gq.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
-      }.toSeq
-    } finally gq.stop()
+    val gateLat = timeBatches(ginput, gq, feed.grouped(batchRows).take(nBatches))
     val acceptRows = spark.read.parquet(s"$dir/accept").count()
     val rejectRows = spark.read.parquet(s"$dir/reject").count()
 
-    // ---- 3b. DSIR curation gate -------------------------------------
+    // ---- 2b. DSIR curation gate -------------------------------------
     // the FULL t31 decision in its streaming position: quality
     // heuristics → bigram-LM gate → DSIR target-affinity gate, all
     // against prebuilt models (t31 gate thresholds, so every branch
@@ -592,18 +538,11 @@ object StreamBench {
       cinput.toDF().toDF("doc_id", "text"), s"$dir/model",
       s"$dir/dsirmodel", s"$dir/caccept", s"$dir/creject", s"$dir/cckpt",
       minLmC6 = -3400000L, minDsirC6 = -8000000L)
-    val curLat = try {
-      feed.grouped(batchRows).take(nBatches).map { rows =>
-        val t0 = System.nanoTime()
-        cinput.addData(rows.toIndexedSeq: _*)
-        cq.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
-      }.toSeq
-    } finally cq.stop()
+    val curLat = timeBatches(cinput, cq, feed.grouped(batchRows).take(nBatches))
     val cAcceptRows = spark.read.parquet(s"$dir/caccept").count()
     val cRejectRows = spark.read.parquet(s"$dir/creject").count()
 
-    // ---- 4. moment-state maintenance --------------------------------
+    // ---- 3. moment-state maintenance --------------------------------
     // per batch: one gram_sum reduction of the batch + an O(dim²) state
     // add — latency must be flat (state never grows, work tracks the batch)
     val efeed = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -615,18 +554,11 @@ object StreamBench {
     val mq = graft.streaming.StreamMoments.momentMonitor(
       minput.toDF().toDF("vec_id", "embedding"),
       s"$dir/mstate", s"$dir/mdrift", s"$dir/mckpt")
-    val momentLat = try {
-      efeed.grouped(batchRows).take(nBatches).map { rows =>
-        val t0 = System.nanoTime()
-        minput.addData(rows.toIndexedSeq: _*)
-        mq.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
-      }.toSeq
-    } finally mq.stop()
+    val momentLat = timeBatches(minput, mq, efeed.grouped(batchRows).take(nBatches))
     val momentN = graft.streaming.StreamMoments
       .readState(spark, s"$dir/mstate").map(_._1).getOrElse(0L)
 
-    // ---- 5. continuous retrieval ------------------------------------
+    // ---- 4. continuous retrieval ------------------------------------
     // serving position: query batches probe the materialized IVF index
     // (partition-pruned), top-k lands exactly once; latency must track
     // the batch × probe fan-out, never the index
@@ -636,17 +568,10 @@ object StreamBench {
     val rq = graft.streaming.StreamRetrieve.retrievalLoop(
       rinput.toDF().toDF("vec_id", "embedding"), s"$dir/ivfindex",
       centroids, s"$dir/topk", s"$dir/rckpt")
-    val retrLat = try {
-      efeed.grouped(batchRows).take(nBatches).map { rows =>
-        val t0 = System.nanoTime()
-        rinput.addData(rows.toIndexedSeq: _*)
-        rq.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
-      }.toSeq
-    } finally rq.stop()
+    val retrLat = timeBatches(rinput, rq, efeed.grouped(batchRows).take(nBatches))
     val topkRows = spark.read.parquet(s"$dir/topk").count()
 
-    // ---- 6. retrieval with the mounted v19 drift monitor ------------
+    // ---- 5. retrieval with the mounted v19 drift monitor ------------
     // the same serving loop with a recall@k self-measurement every
     // `monEvery` batches (holdout queries through the pinned snapshot vs
     // an exact pass over the live index — StreamRetrieve scaladoc). The
@@ -670,14 +595,8 @@ object StreamBench {
       centroids, s"$dir/topk_mon", s"$dir/rckpt_mon",
       holdout = holdout, metricsEvery = monEvery,
       metricsPath = s"$dir/retr_metrics")
-    val monLat = try {
-      Iterator.continually(monGroups).flatten.take(monBatches).map { rows =>
-        val t0 = System.nanoTime()
-        moninput.addData(rows.toIndexedSeq: _*)
-        monq.processAllAvailable()
-        (System.nanoTime() - t0) / 1e9
-      }.toSeq
-    } finally monq.stop()
+    val monLat = timeBatches(moninput, monq,
+      Iterator.continually(monGroups).flatten.take(monBatches))
     val monRows = spark.read.parquet(s"$dir/retr_metrics")
       .orderBy("batch_id").collect()
     val monRecalls = monRows.map(_.getAs[Double]("recall_at_k")).toSeq
@@ -703,35 +622,20 @@ object StreamBench {
       s"""{"metric":"stream_throughput","sf":"$sfDir",""" +
       s""""warmup_batches":$WarmupBatches,""" +
       s""""ingest":{"batch_rows":$batchRows,"batches":${ingestLat.size},""" +
-      s""""latency_sec":${arr(ingestLat)},""" +
-      s""""steady_records_per_sec":${f"${steadyRps(ingestLat, batchRows)}%.1f"},""" +
-      s""""steady_trend":${f"${steadyTrend(ingestLat, compactEvery = 4)}%.3f"},""" +
+      s"""${latencyJson(ingestLat, batchRows, 4)},""" +
       s""""corpus_rows":$corpusRows,"band_index_rows":$indexRows,""" +
       s""""posting_rows":$postRows},""" +
-      s""""ksql_push":{"inserts_per_burst":$insertsPerBurst,""" +
-      s""""bursts":${pushLat.size},"latency_sec":${arr(pushLat)},""" +
-      s""""steady_records_per_sec":${
-        f"${steadyRps(pushLat, insertsPerBurst)}%.1f"},""" +
-      s""""steady_trend":${f"${steadyTrend(pushLat)}%.3f"}},""" +
       s""""quality_gate":{"batch_rows":$batchRows,"batches":${gateLat.size},""" +
-      s""""latency_sec":${arr(gateLat)},""" +
-      s""""steady_records_per_sec":${f"${steadyRps(gateLat, batchRows)}%.1f"},""" +
-      s""""steady_trend":${f"${steadyTrend(gateLat)}%.3f"},""" +
+      s"""${latencyJson(gateLat, batchRows)},""" +
       s""""accepted_rows":$acceptRows,"rejected_rows":$rejectRows},""" +
       s""""curation_gate":{"batch_rows":$batchRows,"batches":${curLat.size},""" +
-      s""""latency_sec":${arr(curLat)},""" +
-      s""""steady_records_per_sec":${f"${steadyRps(curLat, batchRows)}%.1f"},""" +
-      s""""steady_trend":${f"${steadyTrend(curLat)}%.3f"},""" +
+      s"""${latencyJson(curLat, batchRows)},""" +
       s""""accepted_rows":$cAcceptRows,"rejected_rows":$cRejectRows},""" +
       s""""moments":{"batch_rows":$batchRows,"batches":${momentLat.size},""" +
-      s""""latency_sec":${arr(momentLat)},""" +
-      s""""steady_records_per_sec":${f"${steadyRps(momentLat, batchRows)}%.1f"},""" +
-      s""""steady_trend":${f"${steadyTrend(momentLat)}%.3f"},""" +
+      s"""${latencyJson(momentLat, batchRows)},""" +
       s""""vectors_ingested":$momentN},""" +
       s""""retrieval":{"batch_rows":$batchRows,"batches":${retrLat.size},""" +
-      s""""latency_sec":${arr(retrLat)},""" +
-      s""""steady_records_per_sec":${f"${steadyRps(retrLat, batchRows)}%.1f"},""" +
-      s""""steady_trend":${f"${steadyTrend(retrLat)}%.3f"},""" +
+      s"""${latencyJson(retrLat, batchRows)},""" +
       s""""topk_rows":$topkRows},""" +
       s""""retrieval_monitor":{"batch_rows":$batchRows,""" +
       s""""batches":${monLat.size},"metrics_every":$monEvery,""" +

@@ -16,8 +16,7 @@ object Verify {
       else None
     only.foreach(names => require(names.forall(SparkEntry.queries.contains),
       s"unknown queries: ${names.filterNot(SparkEntry.queries.contains)}"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     var failed = List.empty[String]
     SparkEntry.queries

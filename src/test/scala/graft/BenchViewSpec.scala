@@ -83,6 +83,26 @@ class BenchViewSpec extends AnyFunSuite {
     assert(noRefs.get("host_factor").isNull)
   }
 
+  test("host_factor is null without a host anchor and r3(median / anchor) with one; " +
+      "host_ref lists the runs either way") {
+    val passes = Seq(pass(Seq(ok(1.0)), refs = Seq(ok(0.5), ok(0.9))))
+    val mapper = new ObjectMapper()
+    val unanchored = Profile("sfX", 4, Seq("a"), passes, hostAnchor = None).benchLine
+    assert(unanchored.contains("\"host_factor\":null"))
+    assert(mapper.readTree(unanchored).get("host_ref").get("runs").elements.asScala
+      .map(_.asDouble).toSeq === Seq(0.5, 0.9))
+    val anchored = mapper.readTree(
+      Profile("sfX", 4, Seq("a"), passes, hostAnchor = Some(1.271)).benchLine)
+    assert(anchored.get("host_factor").asDouble === BenchUtil.r3(0.7 / 1.271))
+  }
+
+  test("every ScaleBench Headline row resolves to a query, and the host-reference " +
+      "row is registered") {
+    val known = SparkEntry.queries.keySet ++ ScaleBench.ScaleOnly.keySet
+    assert(ScaleBench.Headline.filterNot(known) === Nil)
+    assert(SparkEntry.queries.contains(ScaleBench.HostRefRow))
+  }
+
   test("the line has the published keys in the published order") {
     val j = line(Seq("a"), Seq(pass(Seq(ok(1.0)))))
     assert(j.fieldNames.asScala.toSeq === Seq("metric", "value", "unit",

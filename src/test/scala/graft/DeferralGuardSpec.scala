@@ -121,8 +121,8 @@ class DeferralGuardSpec extends SparkSpec {
     // the sbt-test gate for the trap class: every plan a registered query
     // runs walks clean — the checkpoints its operators ran while it was
     // built (each a pipeline breaker) and its own plan, AQE-final as
-    // executed. The per-round DeferralAudit main runs the same walk and
-    // writes the artifact; this test is the always-on tripwire.
+    // executed. The ExplainAll main runs the same walk beside its plan
+    // dump and prints the audit line; this test is the always-on tripwire.
     val bad = registryPass.collect {
       case (name, hz, _) if hz.nonEmpty => s"$name: ${hz.mkString("; ")}"
     }

@@ -2,14 +2,14 @@
 """Merge StreamBench run outputs into one committed STREAMBENCH artifact.
 
 The bench prints one JSON object per section run: the base (non-scaled)
-main emits a single object with the ingest/ksql_push/quality_gate/
-curation_gate/moments/retrieval sections, and each scaled mode emits its
+main emits a single object with the ingest/quality_gate/curation_gate/
+moments/retrieval/retrieval_monitor sections, and each scaled mode emits its
 own one-line object ({"metric":"stream_*_scaled", ...}). The committed
 STREAMBENCH_r{N}.json is the base object with each scaled object grafted
 in under a stable key (its "metric" discriminator dropped) — this script
 IS that merge, so the artifact is regenerable by commands in the repo
-instead of a by-hand step (the same rule ScaleBench's SPARK_GRAFT_RUNS
-merge follows).
+instead of a by-hand step. Artifacts from before the base run dropped its
+ksql_push section still carry that key; it passes through unchanged.
 
 Section keys:
   stream_throughput_scaled                  -> scaled_ingest

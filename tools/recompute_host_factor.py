@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
 """Recompute a BENCH_sf* artifact's host_factor from its own raw data.
 
-The forked scale sweep (graft.ScaleBench) embeds every host-reference
-reading in the artifact (`host_ref.runs`) and publishes `host_factor` =
-median(readings) / anchor. When the recorded anchor is corrected (the
-r12 case: the first 100x anchor was an unreproducible cache-warm
-isolated reading; anchors are now defined as calm-window IN-SWEEP
-medians), this script re-derives the field from the artifact's own
+The scale sweep (graft.ScaleBench) and the suite bench (graft.Bench)
+embed every host-reference reading in the artifact (`host_ref.runs`) and
+publish `host_factor` = median(readings) / anchor. In a graft.Profile or
+ScaleBench line these sit in its `bench` section; extract that first.
+When the recorded anchor is corrected (the r12 case: the first 100x
+anchor was an unreproducible cache-warm isolated reading; anchors are
+now defined as calm-window IN-SWEEP medians), this script re-derives the field from the artifact's own
 readings instead of re-running a multi-hour sweep — the committed
 artifact stays a pure function of (sweep raw data, recorded anchor).
 

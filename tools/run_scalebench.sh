@@ -1,12 +1,16 @@
 #!/bin/bash
-# Run graft.ScaleBench outside sbt (same JVM flags build.sbt injects).
-# Usage: run_scalebench.sh <replicas> <scaleDir> [extra env via environment]
-#   SPARK_GRAFT_ONLY / SPARK_GRAFT_RUNS / SPARK_GRAFT_CPUS pass through.
+# Run graft.ScaleBench outside sbt (same JVM flags build.sbt injects) on
+# this checkout's compiled classes (`sbt compile` first).
+# Usage: run_scalebench.sh <replicas> <scaleDir> [query ...]
+#   Query names default to ScaleBench's Headline set; SPARK_GRAFT_SF_DIR,
+#   SPARK_GRAFT_RUNS and SPARK_GRAFT_CPUS pass through.
 set -euo pipefail
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 export SPARK_GRAFT_REPLICAS="$1" SPARK_GRAFT_SCALE_DIR="$2"
-export SPARK_GRAFT_FORK="${SPARK_GRAFT_FORK:-1}"
-export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}"
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+shift 2
+# the Spark jars sit where build.sbt's unmanagedBase says
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")"
+CP="$ROOT/target/scala-2.13/classes:$JARS/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -16,4 +20,4 @@ done
 exec java $OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" \
-  graft.ScaleBench < /dev/null 2>/dev/null
+  graft.ScaleBench "$@" < /dev/null 2>/dev/null
