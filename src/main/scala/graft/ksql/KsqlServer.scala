@@ -27,8 +27,20 @@ import java.nio.charset.StandardCharsets
   * [[startStreaming]] the live-changelog plane — `POST /query` holds a
   * chunked response open and streams push-query rows as they emit (see
   * its scaladoc).
+  *
+  * Accepted sockets run with TCP_NODELAY. A response goes out as two TCP
+  * writes (the headers from `sendResponseHeaders`, then the body), and
+  * with Nagle's algorithm on, the body waits for the client's delayed ACK
+  * of the headers: about 40 ms on every request/response round trip over
+  * a keep-alive connection. The JDK server takes the switch only from the
+  * `sun.net.httpserver.nodelay` system property, which it reads once,
+  * when `sun.net.httpserver.ServerConfig` loads (at the first
+  * `HttpServer.create` in the JVM). So this object sets it in its
+  * initializer, which runs before [[serve]] can create a server.
   */
 object KsqlServer {
+
+  System.setProperty("sun.net.httpserver.nodelay", "true")
 
   // ---- minimal JSON (no deps) ---------------------------------------
 

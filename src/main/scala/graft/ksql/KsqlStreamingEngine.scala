@@ -5,7 +5,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
@@ -82,6 +83,12 @@ final case class LivePolling(ticks: () => DataFrame, root: String,
   * translates to the exact streaming Aggregator
   * ([[graft.functions.ExactCountDistinct]]) because Spark's
   * count-distinct rewrite is unsupported under streaming aggregation.
+  *
+  * A topic is one ordered log, that is one partition, and a ksqlDB
+  * query's parallelism follows its topic's partition count. So each
+  * topic attachment is a one-partition `MemoryStream` (a micro-batch
+  * reads one source partition however many INSERTs it carries) and each
+  * push query keeps one state partition per stateful operator.
   *
   * Scope: this engine executes the DATA-PLANE statements (DDL, INSERT,
   * push queries). Metadata/lifecycle statements (SHOW, DESCRIBE, PRINT,
@@ -174,7 +181,10 @@ class KsqlStreamingEngine(
   private def attachStream(d: StreamDecl, watermarked: Boolean = false): Unit = {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val input = MemoryStream[(String, Long)]
+    // one partition: without a count, MemoryStream makes every addData
+    // call (one per INSERT) its own input partition, and a micro-batch
+    // of N INSERTs would run N source tasks
+    val input = MemoryStream[(String, Long)](1)
     if (d.buffer.nonEmpty) input.addData(d.buffer.toSeq: _*)
     val base = wireDecode(input.toDF().toDF("value", "_offset"), d.cols)
     (if (watermarked) base.withWatermark("_rowtime", "0 seconds") else base)
@@ -388,11 +398,11 @@ class KsqlStreamingEngine(
         }.isDefined
       queryId += 1
       val name = s"ksql_push_$queryId"
-      val q = upperCased(df).writeStream.format("memory").queryName(name)
+      val q = startOnOnePartition(upperCased(df).writeStream.format("memory")
+        .queryName(name)
         .outputMode(
           if (aggregated && !appendFinals) OutputMode.Update()
-          else OutputMode.Append())
-        .start()
+          else OutputMode.Append()))
       // the fresh attachments (the only unowned ones left) belong to this
       // query's resolved plan now
       streamDecls.values.foreach(_.attached.foreach(a =>
@@ -405,6 +415,23 @@ class KsqlStreamingEngine(
       throw new IllegalArgumentException(
         s"streaming engine does not support: $other")
   }
+
+  /** Start `writer`'s query with one shuffle partition, so its stateful
+    * operators keep one state store each instead of one per session
+    * shuffle partition. `StreamExecution` clones the session when the
+    * query is constructed, inside `start()`, and the first batch records
+    * the count in the query's offset log; so the session's own setting
+    * is restored as soon as `start()` returns, and other statements see
+    * the change only while `start()` runs. The lock keeps two engines on
+    * one session from interleaving their set and restore.
+    */
+  private def startOnOnePartition(writer: DataStreamWriter[Row]): StreamingQuery =
+    KsqlStreamingEngine.StartLock.synchronized {
+      val key = SQLConf.SHUFFLE_PARTITIONS.key
+      val prior = spark.conf.get(key)
+      spark.conf.set(key, "1")
+      try writer.start() finally spark.conf.set(key, prior)
+    }
 
   /** Execute `stmt` the way the serving planes do: a push query is
     * drained (everything inserted so far processed), its changelog
@@ -462,4 +489,9 @@ class KsqlStreamingEngine(
     */
   def attachmentCount(stream: String): Int =
     streamDecls.get(stream.toLowerCase).map(_.attached.size).getOrElse(0)
+}
+
+object KsqlStreamingEngine {
+  /** Held while a push query starts on one shuffle partition. */
+  private val StartLock = new Object
 }

@@ -387,6 +387,76 @@ class KsqlServerSpec extends SparkSpec {
     }
   }
 
+  /** Median round trip, in ms, of `requests` sent over ONE keep-alive
+    * socket, each request in one write (a client that buffers its
+    * request, as perfbench's harness does). Nagle's algorithm on the
+    * server's socket holds each response's body until the client ACKs the
+    * headers, which a delayed ACK puts off by about 40 ms.
+    */
+  private def medianRttMs(port: Int, requests: Seq[(String, String, String)]): Double = {
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setSoTimeout(30000)
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      def line(): String = {
+        val b = new java.io.ByteArrayOutputStream
+        var c = in.read()
+        while (c >= 0 && c != '\n') { b.write(c); c = in.read() }
+        b.toString(StandardCharsets.UTF_8).stripSuffix("\r")
+      }
+      val rtts = requests.map { case (method, path, body) =>
+        val bytes = body.getBytes(StandardCharsets.UTF_8)
+        val req = (s"$method $path HTTP/1.1\r\nHost: localhost\r\n" +
+          s"Content-Length: ${bytes.length}\r\n\r\n").getBytes(StandardCharsets.UTF_8) ++ bytes
+        val t0 = System.nanoTime()
+        out.write(req); out.flush()
+        val status = line()
+        val length = Iterator.continually(line()).takeWhile(_.nonEmpty).toList
+          .collectFirst { case h if h.toLowerCase.startsWith("content-length:") =>
+            h.drop("content-length:".length).trim.toInt
+          }.get
+        val reply = new String(in.readNBytes(length), StandardCharsets.UTF_8)
+        val ms = (System.nanoTime() - t0) / 1e6
+        assert(status.startsWith("HTTP/1.1 200"), s"$status $reply")
+        assert(!reply.contains("\"error\""), reply)
+        ms
+      }.sorted
+      rtts(rtts.size / 2)
+    } finally sock.close()
+  }
+
+  test("keep-alive round trips on both planes skip the delayed-ACK wait") {
+    import graft.ksql.KsqlStreamingEngine
+    val ddl = """CREATE STREAM match_event (
+      id VARCHAR KEY, event_type VARCHAR, player_id VARCHAR,
+      home boolean) WITH (KAFKA_TOPIC='match_event');"""
+    val infos = Seq.fill(20)(("GET", "/info", ""))
+    val inserts = Iterator.continually(Tutorial.canonicalEvents).flatten.take(20)
+      .map { ev =>
+        ("POST", "/ksql", jsonBody("INSERT INTO match_event VALUES " +
+          s"('${ev.id}', '${ev.event_type}', '${ev.player_id}', ${ev.home});"))
+      }.toSeq
+    def check(plane: String, port: Int): Unit = {
+      assert(post(port, "/ksql", jsonBody(ddl))._1 === 200)
+      val info = medianRttMs(port, infos)
+      val insert = medianRttMs(port, inserts)
+      assert(info < 10.0, s"$plane: median /info round trip $info ms")
+      assert(insert < 10.0, s"$plane: median INSERT round trip $insert ms")
+    }
+    val batch = KsqlServer.start(new KsqlEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s)), 0)
+    try check("batch", batch.getAddress.getPort) finally batch.stop(0)
+    val engine = new KsqlStreamingEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s))
+    val streaming = KsqlServer.startStreaming(engine, 0)
+    try check("streaming", streaming.getAddress.getPort)
+    finally {
+      streaming.stop(0)
+      engine.stopAll()
+    }
+  }
+
   test("json escaping survives quotes, backslashes, and control chars") {
     import spark.implicits._
     val engine = new KsqlEngine(spark,

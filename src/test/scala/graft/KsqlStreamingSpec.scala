@@ -506,6 +506,69 @@ class KsqlStreamingSpec extends SparkSpec {
     } finally h.stop()
   }
 
+  test("a push query reads one source partition per micro-batch and keeps " +
+      "one state partition; the session's shuffle partitions are unchanged") {
+    import java.lang.management.ManagementFactory
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.{MicroBatchExecution,
+      StreamExecution, StreamingQueryWrapper}
+    import org.apache.spark.sql.execution.streaming.sources.MemorySink
+    val key = "spark.sql.shuffle.partitions"
+    val partitions = spark.conf.get(key)
+    val e = freshEngine
+    ddl(e)
+    val h = e.execute(
+      "SELECT id, COUNT(id) AS n FROM match_event GROUP BY id EMIT CHANGES;").get
+    // batch id -> tasks of the batch's parentless (source-reading) stages
+    val sourceTasks = new java.util.concurrent.ConcurrentHashMap[Long, Int]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).filter(p =>
+          p.getProperty(StreamExecution.QUERY_ID_KEY) == h.query.id.toString)
+          .foreach { p =>
+            sourceTasks.merge(p.getProperty(MicroBatchExecution.BATCH_ID_KEY).toLong,
+              j.stageInfos.filter(_.parentIds.isEmpty).map(_.numTasks).sum, _ + _)
+          }
+    }
+    try {
+      assert(spark.conf.get(key) === partitions)
+      insert(e, Tutorial.canonicalEvents.take(1))
+      h.processAllAvailable()
+      assert(h.query.lastProgress.stateOperators(0).numShufflePartitions === 1)
+
+      // Hold the memory sink's monitor: the batch for the next INSERT
+      // fixes its offsets, runs, and then blocks on the sink write, so the
+      // 40 INSERTs made meanwhile all land in the batch after it.
+      val exec = h.query.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      val sink = exec.sink.asInstanceOf[MemorySink]
+      val threads = ManagementFactory.getThreadMXBean
+      def blockedOnSink: Boolean =
+        Option(threads.getThreadInfo(exec.queryExecutionThread.getId))
+          .flatMap(i => Option(i.getLockInfo))
+          .exists(_.getIdentityHashCode == System.identityHashCode(sink))
+      spark.sparkContext.addSparkListener(listener)
+      sink.synchronized {
+        insert(e, Tutorial.canonicalEvents.slice(1, 2))
+        val deadline = System.nanoTime() + 60000000000L
+        while (!blockedOnSink && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(blockedOnSink, "the stream never reached the sink write")
+        insert(e, Seq.fill(40)(Tutorial.canonicalEvents.head))
+      }
+      h.processAllAvailable()
+      Executions.drain(spark)
+      val batch = h.query.recentProgress.find(_.numInputRows == 40)
+        .getOrElse(fail(s"no batch of 40 rows: " +
+          h.query.recentProgress.map(_.numInputRows).mkString(",")))
+      assert(sourceTasks.get(batch.batchId) === 1,
+        s"source tasks by batch: $sourceTasks")
+      assert(batch.stateOperators(0).numShufflePartitions === 1)
+      assert(spark.conf.get(key) === partitions)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      e.release(h)
+    }
+  }
+
   test("two concurrent push queries over one topic progress independently") {
     val e = freshEngine
     ddl(e)

@@ -4,6 +4,7 @@
 # Usage: run_scalebench.sh <replicas> <scaleDir> [query ...]
 #   Query names default to ScaleBench's Headline set; SPARK_GRAFT_SF_DIR,
 #   SPARK_GRAFT_RUNS and SPARK_GRAFT_CPUS pass through.
+# stdout is the one JSON line; the JVM's log and errors go to stderr.
 set -euo pipefail
 ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 export SPARK_GRAFT_REPLICAS="$1" SPARK_GRAFT_SCALE_DIR="$2"
@@ -20,4 +21,4 @@ done
 exec java $OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" \
-  graft.ScaleBench "$@" < /dev/null 2>/dev/null
+  graft.ScaleBench "$@" < /dev/null
