@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
-
-import scala.collection.mutable
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{collect_set, size}
 
 /** Exact COUNT_DISTINCT usable under streaming update-mode aggregation.
   *
@@ -12,28 +9,14 @@ import scala.collection.mutable
   * per-key exact distinct count. Spark's `countDistinct` rewrites to a
   * two-phase expand/aggregate that streaming aggregation rejects, so the
   * streaming path needs either `approx_count_distinct` (HLL sketch — the
-  * right answer at 100 TB) or this exact Aggregator, which keeps the
-  * observed value set in per-key state (state grows with distinct
+  * right answer at 100 TB) or the size of a `collect_set`, which keeps
+  * the observed value set in per-key state (state grows with distinct
   * cardinality — fine at dimension-key scale, documented trade-off;
   * SURVEY.md §7.4-7.5).
   */
-class ExactCountDistinct extends Aggregator[String, mutable.HashSet[String], Long] {
-  override def zero: mutable.HashSet[String] = mutable.HashSet.empty
-  override def reduce(b: mutable.HashSet[String], a: String): mutable.HashSet[String] = {
-    if (a != null) b += a
-    b
-  }
-  override def merge(b1: mutable.HashSet[String], b2: mutable.HashSet[String]): mutable.HashSet[String] =
-    b1 ++= b2
-  override def finish(r: mutable.HashSet[String]): Long = r.size.toLong
-  override def bufferEncoder: Encoder[mutable.HashSet[String]] =
-    Encoders.kryo[mutable.HashSet[String]]
-  override def outputEncoder: Encoder[Long] = Encoders.scalaLong
-}
-
 object ExactCountDistinct {
-  /** `exact_count_distinct(col)` as an aggregate Column (cast input to
-    * string upstream; any key type stringifies losslessly for counting).
+  /** The exact distinct count of `c` as an aggregate BIGINT Column (the
+    * input stringifies losslessly for counting; nulls are not counted).
     */
-  def column(c: Column): Column = udaf(new ExactCountDistinct).apply(c)
+  def column(c: Column): Column = size(collect_set(c.cast("string"))).cast("bigint")
 }

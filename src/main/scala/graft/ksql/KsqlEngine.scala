@@ -305,15 +305,9 @@ object KsqlEngine {
     */
   private[ksql] def jsonEncode(x: Any, dt: DataType): String = {
     // every char < 0x20 must be escaped or from_json (PERMISSIVE)
-    // silently decodes the whole row as nulls — same escape table as
-    // KsqlServer.jsonEscape, so the two wire planes cannot diverge
-    def quote(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < 0x20 => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    // silently decodes the whole row as nulls: KsqlServer.jsonEscape's
+    // table, so the two wire planes cannot diverge
+    def quote(s: String): String = "\"" + KsqlServer.jsonEscape(s) + "\""
     (x, dt) match {
       case (null, _) => "null"
       case (s: String, _) => quote(s)

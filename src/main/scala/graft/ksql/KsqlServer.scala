@@ -276,9 +276,10 @@ object KsqlServer {
     *    one `{"row":{"columns":[…]}}` line per emitted changelog row,
     *    held OPEN: INSERTs posted while the response is open appear as
     *    further chunks (the ksqlDB `/query-stream` delimited shape,
-    *    simplified). A blank heartbeat line flushes every poll so a
-    *    closed client is detected promptly; disconnect stops the
-    *    standing query. At most [[MaxPushStreams]] are open at once.
+    *    simplified). Rows leave as each micro-batch lands; a blank
+    *    heartbeat line goes out at least every 100 ms so a closed
+    *    client is detected promptly; disconnect stops the standing
+    *    query. At most [[MaxPushStreams]] are open at once.
     *  - `POST /ksql` executes statements on the SAME streaming engine
     *    (one engine = one session, as in ksqlDB): DDL/INSERT → status,
     *    push queries → [[KsqlStreamingEngine.executeDrained]] (the
@@ -336,19 +337,18 @@ object KsqlServer {
           s""""columnNames":$cols}""" + "\n")
           .getBytes(StandardCharsets.UTF_8))
         os.flush()
-        // poll-and-stream: every new changelog row becomes one chunk.
-        // Chunk order is emission order because the memory sink
-        // appends per micro-batch and [[PushHandle.drainSince]] walks
-        // its batch list in order. Each poll is INCREMENTAL — O(rows
-        // landed since the last poll), zero Spark jobs —
-        // so a long-lived connection's total serving cost is O(rows
-        // emitted), not O(changelog²). The stream's own trigger
-        // advances micro-batches; the loop never calls
-        // processAllAvailable, it only observes the sink. The blank
-        // heartbeat makes a closed client surface as IOException on
-        // flush even when no rows are arriving, and a query stopped
-        // under the handler (engine shutdown) ends the response after
-        // one final drain instead of spinning until a write fails.
+        // wait-and-stream: every new changelog row becomes one chunk, in
+        // emission order (the changelog keeps batches in batch-id order).
+        // Each drain is INCREMENTAL — O(rows landed since the last
+        // drain), zero Spark jobs — so a long-lived connection's total
+        // serving cost is O(rows emitted), not O(changelog²). The loop
+        // never calls processAllAvailable: it waits on the changelog,
+        // which wakes it as each batch lands, for at most the 100 ms
+        // heartbeat. The blank heartbeat makes a closed client surface as
+        // IOException on flush even when no rows are arriving, and a
+        // query stopped under the handler (engine shutdown) ends the
+        // response after one final drain instead of spinning until a
+        // write fails.
         var cursor = -1L
         var more = true
         while (more) {
@@ -361,7 +361,7 @@ object KsqlServer {
               .getBytes(StandardCharsets.UTF_8))
           }
           os.write('\n'.toInt); os.flush()
-          if (more) Thread.sleep(100)
+          if (more) h.changelog.awaitPast(cursor, 100)
         }
       } finally {
         try os.close() catch { case _: java.io.IOException => () }
@@ -369,9 +369,9 @@ object KsqlServer {
     } catch {
       case _: java.io.IOException => () // client closed: normal end
     } finally {
-      // release, not stop: the memory sink's table holds this
-      // connection's full changelog — a server field-tested only by
-      // short tests would leak one changelog per connection served
+      // release, not stop: the handle holds this connection's full
+      // changelog — a server field-tested only by short tests would
+      // leak one changelog per connection served
       engine.release(h)
     }
   }

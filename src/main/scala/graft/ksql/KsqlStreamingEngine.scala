@@ -10,44 +10,64 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQu
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-/** One live push query. */
-final case class PushHandle(spark: SparkSession, name: String,
-    query: StreamingQuery, aggregated: Boolean) {
-  /** Block until everything inserted so far is processed. */
-  def processAllAvailable(): Unit = query.processAllAvailable()
-  /** Every emitted row (append rows, or the update-mode changelog). */
-  def emissions: DataFrame = spark.table(name)
+/** The rows one push query emitted (append rows, or the update-mode
+  * changelog), per micro-batch in batch-id order. The query's
+  * `foreachBatch` sink [[append]]s each batch and wakes the readers
+  * waiting in [[awaitPast]]; reads take the same monitor, so `(rows,
+  * cursor)` is one consistent snapshot. A standing query keeps every
+  * row it emitted until it is released (the changelog IS its result).
+  */
+final class Changelog(val schema: StructType) {
+  private val batches = mutable.ArrayBuffer.empty[(Long, Array[Row])]
+  private var lastBatchId = -1L
 
-  private lazy val memSink = query
-    .asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
-    .streamingQuery.sink
-    .asInstanceOf[org.apache.spark.sql.execution.streaming.sources.MemorySink]
-
-  /** Drain changelog rows from batches PAST `cursor` (a batchId; -1 =
-    * from the beginning), returning `(rows, newCursor)`. O(new rows)
-    * and driver-only — no Spark job, no sink-table scan: it reads the
-    * memory sink's own batch list, so a long-lived `/query` connection
-    * pays each poll for what landed since its last poll, not for the
-    * whole changelog (which is O(n²) over the connection's lifetime).
-    * Both sink reads happen under the sink's monitor (its accessors are
-    * `synchronized` methods), making `(rows, newCursor)` one consistent
-    * snapshot — a batch landing between unlocked reads would otherwise
-    * be duplicated or skipped.
-    *
-    * Changelog retention: the memory sink keeps every batch of a
-    * STANDING query (that is the push-query contract — the changelog IS
-    * the result), so sink memory grows with emissions until the query
-    * stops. Bound a standing query's lifetime (or its input rate)
-    * accordingly; the drain being incremental means only MEMORY grows,
-    * not per-batch serving cost.
+  /** Keep `rows` as batch `batchId` and wake every waiting reader. A
+    * batch id at or below the last one kept is a replay (Structured
+    * Streaming re-runs a batch whose commit did not land under the same
+    * id) and is ignored, so no row is kept twice.
     */
-  def drainSince(cursor: Long): (Seq[Row], Long) = {
-    val s = memSink
-    s.synchronized {
-      (s.dataSinceBatch(cursor), s.latestBatchId.getOrElse(cursor))
+  def append(batchId: Long, rows: Array[Row]): Unit = synchronized {
+    if (batchId > lastBatchId) {
+      if (rows.nonEmpty) batches += batchId -> rows
+      lastBatchId = batchId
+      notifyAll()
     }
   }
+
+  /** Rows of the batches past `cursor` (a batch id; -1 = from the
+    * beginning) and the new cursor. Walks back from the newest batch, so
+    * it costs the new rows, not the whole changelog.
+    */
+  def since(cursor: Long): (Seq[Row], Long) = synchronized {
+    val from = batches.lastIndexWhere(_._1 <= cursor) + 1
+    (batches.view.drop(from).flatMap(_._2).toVector, lastBatchId)
+  }
+
+  /** Wait until a batch past `cursor` is kept, or `ms` pass. */
+  def awaitPast(cursor: Long, ms: Long): Unit = synchronized {
+    if (lastBatchId <= cursor) wait(ms)
+  }
+}
+
+/** One live push query and the [[Changelog]] its sink fills. */
+final case class PushHandle(spark: SparkSession, name: String,
+    query: StreamingQuery, changelog: Changelog) {
+  /** Block until everything inserted so far is processed. */
+  def processAllAvailable(): Unit = query.processAllAvailable()
+  /** Every emitted row so far, as a local DataFrame with the schema the
+    * query started with; it stays readable after the query stops.
+    */
+  def emissions: DataFrame =
+    spark.createDataFrame(changelog.since(-1L)._1.asJava, changelog.schema)
+  /** Drain changelog rows from batches PAST `cursor` (a batchId; -1 =
+    * from the beginning), returning `(rows, newCursor)`. O(new rows)
+    * and driver-only (no Spark job), so a long-lived `/query` connection
+    * pays each read for what landed since its last read, not for the
+    * whole changelog (which is O(n²) over the connection's lifetime).
+    */
+  def drainSince(cursor: Long): (Seq[Row], Long) = changelog.since(cursor)
   def stop(): Unit = query.stop()
 }
 
@@ -78,10 +98,9 @@ final case class LivePolling(ticks: () => DataFrame, root: String,
   * init.sql — SURVEY §7.5 pt.1), so stream-table joins are stream-static.
   *
   * A push query returns a [[PushHandle]]: an update-mode (aggregations)
-  * or append-mode (stateless) memory-sink StreamingQuery plus accessors
-  * for the emitted changelog and current state. `COUNT_DISTINCT`
-  * translates to the exact streaming Aggregator
-  * ([[graft.functions.ExactCountDistinct]]) because Spark's
+  * or append-mode (stateless) StreamingQuery whose `foreachBatch` sink
+  * fills the handle's [[Changelog]], keyed by batch id. `COUNT_DISTINCT`
+  * translates to the size of a `collect_set`, because Spark's
   * count-distinct rewrite is unsupported under streaming aggregation.
   *
   * A topic is one ordered log, that is one partition, and a ksqlDB
@@ -101,9 +120,6 @@ class KsqlStreamingEngine(
       KsqlEngine.jdbcConnectorProvider,
     livePolling: Option[LivePolling] = None) extends KsqlTranslator[PushHandle] {
   import KsqlTranslator.{connectorTopic, jdbcOptions, topicOf}
-
-  spark.udf.register("graft_exact_count_distinct",
-    org.apache.spark.sql.functions.udaf(new graft.functions.ExactCountDistinct))
 
   /** A declared stream: the durable record buffer (the topic log) plus
     * every MemoryStream currently attached to it. Each push query gets
@@ -243,11 +259,11 @@ class KsqlStreamingEngine(
 
   /** Exact streaming count-distinct: Spark rejects native
     * count(DISTINCT) under streaming aggregation, so the argument (whole
-    * — it may contain calls/parens) casts to STRING into the exact
-    * Aggregator.
+    * — it may contain calls/parens) casts to STRING into a `collect_set`
+    * whose size is the count, cast to BIGINT like `count(DISTINCT)`.
     */
   override protected def countDistinctRender(args: String): String =
-    s"graft_exact_count_distinct(CAST(($args) AS STRING))"
+    s"CAST(size(collect_set(CAST(($args) AS STRING))) AS BIGINT)"
 
   def execute(stmt: KsqlStatement): Option[PushHandle] = stmt match {
     case SetProperty(_, _) => None
@@ -398,7 +414,11 @@ class KsqlStreamingEngine(
         }.isDefined
       queryId += 1
       val name = s"ksql_push_$queryId"
-      val q = startOnOnePartition(upperCased(df).writeStream.format("memory")
+      val out = upperCased(df)
+      val changelog = new Changelog(out.schema)
+      // collect before append takes the monitor: readers never wait on a job
+      val q = startOnOnePartition(out.writeStream
+        .foreachBatch((batch: DataFrame, id: Long) => changelog.append(id, batch.collect()))
         .queryName(name)
         .outputMode(
           if (aggregated && !appendFinals) OutputMode.Update()
@@ -407,7 +427,7 @@ class KsqlStreamingEngine(
       // query's resolved plan now
       streamDecls.values.foreach(_.attached.foreach(a =>
         if (a.owner.isEmpty) a.owner = Some(q)))
-      val h = PushHandle(spark, name, q, aggregated)
+      val h = PushHandle(spark, name, q, changelog)
       handles += h
       Some(h)
 
@@ -435,12 +455,11 @@ class KsqlStreamingEngine(
 
   /** Execute `stmt` the way the serving planes do: a push query is
     * drained (everything inserted so far processed), its changelog
-    * snapshotted, and the query RELEASED. The snapshot is analyzed before
-    * the release and reads the stopped sink, so it still collects after;
-    * the release rides a finally so a drain that throws (runtime error in
+    * snapshotted as a local DataFrame, and the query RELEASED. The
+    * release rides a finally so a drain that throws (runtime error in
     * the micro-batch) cannot leak the handle — a leaked active query
-    * would pin its MemoryStream attachments, a kept sink table its whole
-    * changelog.
+    * would pin its MemoryStream attachments and keep its changelog
+    * growing.
     */
   def executeDrained(stmt: KsqlStatement): Option[DataFrame] =
     execute(stmt).map { h =>
@@ -450,13 +469,10 @@ class KsqlStreamingEngine(
       } finally release(h)
     }
 
-  /** Stop a push query and RELEASE its driver-side footprint: the
-    * memory sink's temp table (which holds the query's FULL changelog)
-    * and the handle registration. Serving planes running
-    * drain-snapshot-stop must use this, not bare `stop()` — a
-    * long-lived server otherwise grows by every changelog ever emitted
-    * across all queries it served (the sink table and handle were kept
-    * forever even after the query stopped).
+  /** Stop a push query and unregister its handle, which holds the
+    * query's FULL changelog. Serving planes running drain-snapshot-stop
+    * must use this, not bare `stop()` — a long-lived server otherwise
+    * keeps every changelog ever emitted across all queries it served.
     */
   def release(h: PushHandle): Unit = synchronized {
     // under the engine lock: the server's /query handlers release from
@@ -466,7 +482,6 @@ class KsqlStreamingEngine(
     // changelog this method exists to free). Reentrant, so the /ksql
     // path's release-under-lock is unaffected.
     h.stop()
-    spark.catalog.dropTempView(h.name)
     handles -= h
   }
 

@@ -26,7 +26,7 @@ private[ksql] final case class Derived(kind: String, name: String,
   * KSQL → Spark SQL SELECT translation is textual and total for the
   * reference dialect: `EMIT CHANGES` stripped,
   * `UCASE`→`upper`, `COUNT_DISTINCT` → engine-chosen aggregate (exact
-  * `count(DISTINCT)` in batch, the exact streaming Aggregator in
+  * `count(DISTINCT)` in batch, the size of a `collect_set` in
   * streaming, where Spark rejects count-distinct), `LATEST_BY_OFFSET(x)`
   * → `graft_latest_by_offset(x, stream._offset)`, ksqlDB-style
   * alias-prefixed `SELECT *` expansion.
@@ -76,8 +76,8 @@ trait KsqlTranslator[R] {
       .getOrElse(spark.table(name).columns.toSeq.filterNot(LogColumns))
 
   /** Render a `COUNT_DISTINCT(args)` call — engine-specific (batch uses
-    * native count-distinct; streaming substitutes the exact Aggregator,
-    * which Spark's unsupported-operation check requires).
+    * native count-distinct; streaming substitutes the size of a
+    * `collect_set`, which Spark's unsupported-operation check requires).
     */
   protected def countDistinctRender(args: String): String =
     s"count(DISTINCT $args)"

@@ -97,7 +97,7 @@ object Tutorial {
     * (which is non-unique per player and sorts lexicographically).
     *
     * `countDistinctMatches` parameterizes A3's streaming story: batch uses
-    * exact `countDistinct`; streaming passes the custom exact Aggregator
+    * exact `countDistinct`; streaming passes `ExactCountDistinct.column`
     * or `approx_count_distinct` (SURVEY.md §7.5 pt.2).
     */
   def playerStats(matchEventPlayer: DataFrame, players: DataFrame,

@@ -346,6 +346,66 @@ class KsqlServerSpec extends SparkSpec {
     }
   }
 
+  test("/query rows leave as their micro-batch's sink write lands, not on " +
+      "a poll") {
+    import graft.ksql.KsqlStreamingEngine
+    val engine = new KsqlStreamingEngine(spark,
+      connectorProvider = (s, _) => Tutorial.playersSeed(s))
+    val server = KsqlServer.startStreaming(engine, 0)
+    val port = server.getAddress.getPort
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      assert(post(port, "/ksql", jsonBody(
+        """CREATE STREAM del_ev (id VARCHAR KEY, event_type VARCHAR)
+          WITH (KAFKA_TOPIC='del_ev');"""))._1 === 200)
+      sock.setSoTimeout(30000)
+      val body = jsonBody("SELECT id FROM del_ev EMIT CHANGES;")
+        .getBytes(StandardCharsets.UTF_8)
+      sock.getOutputStream.write((s"POST /query HTTP/1.1\r\nHost: localhost\r\n" +
+        s"Content-Length: ${body.length}\r\n\r\n").getBytes(StandardCharsets.UTF_8) ++ body)
+      sock.getOutputStream.flush()
+      // the chunked framing arrives as lines of its own; data lines keep
+      // their JSON shape
+      val in = new java.io.BufferedReader(
+        new java.io.InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
+      def next(p: String => Boolean): String = {
+        var l = in.readLine()
+        while (l != null && !p(l)) l = in.readLine()
+        assert(l != null, "stream closed early")
+        l
+      }
+      val queryId = "\"queryId\":\"(ksql_push_\\d+)\"".r
+        .findFirstMatchIn(next(_.contains("queryId"))).get.group(1)
+      val q = spark.streams.active.find(_.name == queryId).get
+      // one INSERT per micro-batch: each row is read before the next
+      // INSERT, so the n-th batch with input carries the n-th row
+      val n = 12
+      val arrivalsMs = (1 to n).map { i =>
+        assert(post(port, "/ksql", jsonBody(
+          s"INSERT INTO del_ev VALUES ('$i', 'GOAL');"))._1 === 200)
+        val row = next(_.startsWith("{\"row\""))
+        val now = java.time.Instant.now()
+        assert(row.contains(s"""["$i"]"""), row)
+        now.getEpochSecond * 1e3 + now.getNano / 1e6
+      }
+      def batches = q.recentProgress.filter(_.numInputRows > 0)
+      eventually("the last batch's progress never arrived")(batches.length >= n)
+      // the sink write as perfbench's push.deliver_ms reads it: the end of
+      // the trigger less its trailing offset commit
+      val sinkWritesMs = batches.takeRight(n).map { p =>
+        java.time.Instant.parse(p.timestamp).toEpochMilli +
+          p.durationMs.get("triggerExecution").longValue -
+          p.durationMs.get("commitOffsets").longValue
+      }
+      val gaps = arrivalsMs.zip(sinkWritesMs).map { case (a, w) => a - w }.sorted
+      assert(gaps(n / 2) < 20.0, s"sink write to client read, ms: $gaps")
+    } finally {
+      sock.close()
+      server.stop(0)
+      engine.stopAll()
+    }
+  }
+
   test("/query streams past MaxPushStreams get 503 before any query " +
       "starts; a slot frees once a client disconnects") {
     import graft.ksql.KsqlStreamingEngine

@@ -131,6 +131,26 @@ class KsqlStreamingSpec extends SparkSpec {
     } finally h.stop()
   }
 
+  test("the push sink keeps a replayed batch id once") {
+    val e = freshEngine
+    ddl(e)
+    val h = e.execute("SELECT id, event_type FROM match_event EMIT CHANGES;").get
+    try {
+      insert(e, Tutorial.canonicalEvents.take(2))
+      h.processAllAvailable()
+      val (rows, last) = h.drainSince(-1L)
+      assert(rows.size === 2)
+      // a query restarted from its checkpoint re-runs its last uncommitted
+      // batch under the same id; the sink hands it over again
+      h.changelog.append(last, rows.toArray)
+      assert(h.drainSince(-1L) === ((rows, last)))
+      assert(h.emissions.collect().toSeq.map(_.toSeq) === rows.map(_.toSeq))
+      insert(e, Tutorial.canonicalEvents.slice(2, 3))
+      h.processAllAvailable()
+      assert(h.drainSince(last)._1.size === 1)
+    } finally e.release(h)
+  }
+
   test("streaming CSAS + player_stats with exact COUNT_DISTINCT (all.sql:129-160)") {
     val e = freshEngine
     ddl(e)
@@ -512,7 +532,6 @@ class KsqlStreamingSpec extends SparkSpec {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.streaming.runtime.{MicroBatchExecution,
       StreamExecution, StreamingQueryWrapper}
-    import org.apache.spark.sql.execution.streaming.sources.MemorySink
     val key = "spark.sql.shuffle.partitions"
     val partitions = spark.conf.get(key)
     val e = freshEngine
@@ -536,11 +555,11 @@ class KsqlStreamingSpec extends SparkSpec {
       h.processAllAvailable()
       assert(h.query.lastProgress.stateOperators(0).numShufflePartitions === 1)
 
-      // Hold the memory sink's monitor: the batch for the next INSERT
+      // Hold the changelog's monitor: the batch for the next INSERT
       // fixes its offsets, runs, and then blocks on the sink write, so the
       // 40 INSERTs made meanwhile all land in the batch after it.
       val exec = h.query.asInstanceOf[StreamingQueryWrapper].streamingQuery
-      val sink = exec.sink.asInstanceOf[MemorySink]
+      val sink = h.changelog
       val threads = ManagementFactory.getThreadMXBean
       def blockedOnSink: Boolean =
         Option(threads.getThreadInfo(exec.queryExecutionThread.getId))
