@@ -2,9 +2,9 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
-/** Sink layer: Kafka key/value assembly and push-query sinks.
+/** Sink layer: Kafka key/value assembly and streaming sinks.
   *
   * Wire-format fidelity (SURVEY.md §7.5 pt.5, reference README.md:339-351,
   * 462-465):
@@ -47,14 +47,6 @@ object Sinks {
       .option("checkpointLocation", checkpoint)
       .outputMode(mode)
       .start()
-
-  /** Push query (Q1, `SELECT … EMIT CHANGES`, README.md:94-118): continuous
-    * incremental results to an in-memory table the caller can poll —
-    * `update` mode for aggregations (the count-evolution golden,
-    * README.md:247-253), `append` for stateless queries.
-    */
-  def pushQuery(df: DataFrame, name: String, mode: OutputMode): StreamingQuery =
-    df.writeStream.format("memory").queryName(name).outputMode(mode).start()
 
   /** Batch twin of a persistent query: materialize to parquet (the driver's
     * Verify path uses this shape).

@@ -2,11 +2,16 @@ package graft.ksql
 
 import graft.engine.{Sources, TableOps}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, GenericInternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, Project, Union}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** One executed statement: the result DataFrame (queries/SHOW) or the
   * error ksqlDB's CLI would have printed (the reference script itself
@@ -18,17 +23,77 @@ import scala.jdk.CollectionConverters._
 final case class StatementResult(statement: KsqlStatement,
     df: Option[DataFrame], error: Option[String])
 
+/** One in-memory topic (the Kafka log analogue). `base` is the
+  * connector-fed portion, checkpointed once at CREATE SOURCE CONNECTOR:
+  * it stays in executor blocks (a 100 TB snapshot is never collected to
+  * the driver), and every later read sees the same rows at the same
+  * offsets, where re-running a JDBC read (no ORDER BY) could renumber
+  * them. `log` holds the INSERTed records (driver-side by nature: a
+  * human typed them), converted to Catalyst rows once, at INSERT. It is
+  * an immutable Vector replaced on append, so whoever holds it holds a
+  * snapshot. `baseCount` (the offset origin for INSERTs) counts the
+  * checkpoint on first INSERT.
+  */
+private[ksql] final class Topic(val schema: StructType, base: Option[DataFrame]) {
+  private var log = Vector.empty[InternalRow]
+  private lazy val baseCount: Long = base.fold(0L)(_.count())
+  private val toCatalyst = schema.fields.toSeq.filterNot(f => KsqlTranslator.LogColumns(f.name))
+    .map(f => CatalystTypeConverters.createToCatalystConverter(f.dataType))
+
+  /** Append one record of value columns (the schema's, in order); its
+    * offset and ROWTIME (the [[KsqlTranslator.withRowtime]] clock, in
+    * microseconds) come from its position in the log.
+    */
+  def append(values: Seq[Any]): Unit = {
+    val off = baseCount + log.length
+    val rowtime = (KsqlTranslator.RowtimeBaseSec + off) * 1000000L
+    log :+= new GenericInternalRow(
+      (values.zip(toCatalyst).map { case (v, c) => c(v) } :+ off :+ rowtime).toArray)
+  }
+
+  /** This topic's rows as they stand now, as a plan whose output is
+    * exactly `out` (the ids the query above it resolved against). The
+    * checkpoint is re-instanced, so a topic read twice in one query keeps
+    * distinct attribute ids in each branch.
+    */
+  def snapshot(out: Seq[Attribute]): LogicalPlan = base match {
+    case None => LocalRelation(out, log)
+    case Some(b) =>
+      val scan = b.queryExecution.analyzed.asInstanceOf[MultiInstanceRelation].newInstance()
+      val rows = if (log.isEmpty) scan
+        else Union(scan, LocalRelation(scan.output.map(_.newInstance()), log))
+      Project(out.zip(rows.output).map { case (o, a) =>
+        Alias(a, o.name)(exprId = o.exprId) }, rows)
+  }
+}
+
+/** A topic's rows inside a registered view: the leaf that
+  * [[KsqlEngine]] replaces, per query, with [[Topic.snapshot]]. It is
+  * identified by the [[Topic]] object it carries, not by its attribute
+  * ids: a second reference to the same view gets new ids from
+  * `DeduplicateRelations` (through [[newInstance]]) and must still bind
+  * to the same topic. Never planned.
+  */
+private[ksql] final case class TopicRelation(topic: Topic, output: Seq[Attribute])
+    extends LeafNode with MultiInstanceRelation {
+  override def newInstance(): TopicRelation = copy(output = output.map(_.newInstance()))
+}
+
 /** Executes the reference's KSQL dialect on Spark — the API-compatibility
   * layer that lets a user of the reference submit the same statements they
   * run today (reference: files/ksqldb-cli/all.sql, README.md).
   *
-  * Execution model: batch re-evaluation. Topics are in-memory row buffers
-  * with per-record offsets (the Kafka log analogue); declared collections
-  * are views over them (tables apply latest-by-key upsert on the PRIMARY
-  * KEY, Q3); CSAS/CTAS collections store their SELECT and re-evaluate it
-  * against current topic state on every query — a push query therefore
-  * always observes the converged state a ksqlDB push query would have
-  * emitted last (the README's golden tables are exactly these states).
+  * Execution model: views registered by DDL, bound per query. Each
+  * declared collection's view is registered once, at CREATE, over a
+  * [[TopicRelation]] leaf of its [[Topic]] (tables apply latest-by-key
+  * upsert on the PRIMARY KEY, Q3); CSAS/CTAS collections register their
+  * translated SELECT over those views, once, at CREATE. A query (SELECT,
+  * EXPLAIN, PRINT) analyzes only its own text, then binds every topic
+  * leaf in its plan to that topic's rows as they stand at `execute`, so
+  * the result is the converged state at that moment however late it is
+  * collected — the state a ksqlDB push query would have emitted last (the
+  * README's golden tables are exactly these states). A CREATE that
+  * replaces a collection or a topic re-registers the views that read it.
   * Continuous *emission* semantics (the changelog between states) are
   * exercised by [[KsqlStreamingEngine]]. SELECT translation is the shared
   * [[KsqlTranslator]]'s.
@@ -37,26 +102,7 @@ class KsqlEngine(
     val spark: SparkSession,
     connectorProvider: (SparkSession, Map[String, String]) => DataFrame =
       KsqlEngine.jdbcConnectorProvider) extends KsqlTranslator[DataFrame] {
-  import KsqlTranslator.{LogColumns, RowtimeBaseSec, connectorTopic, topicOf}
-
-  /** One in-memory topic: `base` is the connector-fed portion as a LAZY
-    * DataFrame (never collected to the driver — a 100 TB snapshot stays
-    * distributed), `rows` the hand-INSERTed literal records (driver-side
-    * by nature: a human typed them). `baseCount` (offset origin for
-    * INSERTs) is computed on first INSERT, not at CREATE.
-    */
-  private case class Topic(schema: StructType, base: DataFrame,
-      rows: mutable.ArrayBuffer[Row]) {
-    private var baseCountCache: Option[Long] = None
-    def baseCount: Long = {
-      if (baseCountCache.isEmpty) baseCountCache = Some(base.count())
-      baseCountCache.get
-    }
-  }
-
-  /** An INSERTed record's ROWTIME: the [[withRowtime]] clock as a value. */
-  private def rowtime(offset: Long): java.sql.Timestamp =
-    new java.sql.Timestamp((RowtimeBaseSec + offset) * 1000L)
+  import KsqlTranslator.{LogColumns, connectorTopic, topicOf}
 
   private val topics = mutable.LinkedHashMap.empty[String, Topic]
   private val decls = mutable.LinkedHashMap.empty[String, Decl]
@@ -80,10 +126,14 @@ class KsqlEngine(
       properties(k) = v; None
 
     case CreateConnector(name, props) =>
-      val withLog = withLogColumns(connectorProvider(spark, props))
-      topics(connectorTopic(props)) =
-        Topic(withLog.schema, withLog, mutable.ArrayBuffer.empty)
+      // the snapshot runs once, here (Scratch's eager-checkpoint rule)
+      val snap = withLogColumns(connectorProvider(spark, props))
+        .localCheckpoint(eager = true)
+      val topic = connectorTopic(props)
+      topics(topic) = new Topic(snap.schema, Some(snap))
       connectors += name
+      // a collection declared before its connector re-binds to the data
+      decls.values.filter(_.topic == topic).toSeq.foreach(registerDecl)
       None
 
     case CreateCollection(kind, name, cols, props) =>
@@ -93,16 +143,14 @@ class KsqlEngine(
           StructField(c.name, c.dataType)).toSeq :+
           StructField("_offset", LongType, nullable = false) :+
           StructField("_rowtime", TimestampType, nullable = false))
-        topics(topic) = Topic(schema,
-          spark.createDataFrame(java.util.List.of[Row](), schema),
-          mutable.ArrayBuffer.empty)
+        topics(topic) = new Topic(schema, None)
       }
-      decls(name.toLowerCase) = Decl(kind, name, cols, topic)
+      registerDecl(Decl(kind, name, cols, topic))
       None
 
     case c: CreateAsSelect =>
-      refreshViews()
       createDerived(c)
+      refreshReaders(c.name)
       None
 
     case ins @ InsertValues(target, _, _) =>
@@ -123,8 +171,7 @@ class KsqlEngine(
           s"${d.topic}'s schema — INSERTed values would have nowhere to land")
       val converted = valueFields.map(f => supplied.get(f.name.toLowerCase)
         .map { case (c, v) => KsqlEngine.convertLiteral(v, c.dataType) }.orNull)
-      val off = topic.baseCount + topic.rows.length
-      topic.rows += Row.fromSeq(converted :+ off :+ rowtime(off))
+      topic.append(converted)
       None
 
     case q @ PushQuery(select, _) =>
@@ -133,13 +180,11 @@ class KsqlEngine(
       // validity rule still applies, so the same statement never
       // succeeds here and fails on the streaming engine
       pushWindowKind(q)
-      refreshViews()
-      Some(upperCased(spark.sql(translateSelect(select))))
+      Some(pinned(spark.sql(translateSelect(select)), _.toUpperCase))
 
     case ExplainCommand(select) =>
       import spark.implicits._
-      refreshViews()
-      val qe = spark.sql(translateSelect(select)).queryExecution
+      val qe = pinned(spark.sql(translateSelect(select))).queryExecution
       Some(qe.explainString(org.apache.spark.sql.execution.SimpleMode)
         .linesIterator.toSeq.toDF("plan"))
 
@@ -150,7 +195,6 @@ class KsqlEngine(
           d.cols.map(c => (c.name.toUpperCase, c.dataType.sql,
             if (c.isKey) (if (d.kind == "TABLE") "PRIMARY KEY" else "KEY") else ""))
         case None =>
-          refreshViews()
           spark.table(name).schema.fields.toSeq
             .filterNot(f => LogColumns(f.name))
             .map(f => (f.name.toUpperCase, f.dataType.sql, ""))
@@ -177,11 +221,11 @@ class KsqlEngine(
     case PrintTopic(topic) =>
       val key = topics.keys.find(_.equalsIgnoreCase(topic)).getOrElse(
         throw new NoSuchElementException(s"topic $topic does not exist"))
-      Some(topicDF(key))
+      val t = topics(key)
+      Some(Bridge.ofRows(spark, t.snapshot(DataTypeUtils.toAttributes(t.schema))))
 
     // ksqlDB terminates persistent queries by id; here the derived
-    // collection IS the persistent query — terminating it stops the
-    // re-evaluation and drops its view
+    // collection IS the persistent query — terminating it drops its view
     case TerminateQuery(qid) =>
       val n = qid.toLowerCase
       if (!derived.contains(n))
@@ -213,8 +257,7 @@ class KsqlEngine(
   }
 
   /** Reject removing a collection some remaining derived query reads —
-    * otherwise every later refreshViews() would throw resolving the
-    * dangling SELECT (ksqlDB rejects such drops the same way).
+    * its view would dangle (ksqlDB rejects such drops the same way).
     */
   private def requireNoDependents(n: String): Unit =
     derived.values.find(d => d.name.toLowerCase != n &&
@@ -226,28 +269,35 @@ class KsqlEngine(
 
   // ---- views ----------------------------------------------------------
 
-  private def topicDF(topic: String): DataFrame = {
-    val t = topics(topic)
-    if (t.rows.isEmpty) t.base
-    else t.base.union(spark.createDataFrame(t.rows.toSeq.asJava, t.schema))
+  /** Register a declared collection's view over its topic's leaf, then
+    * re-register the derived views that read it. The decl is recorded
+    * only once its view builds.
+    */
+  private def registerDecl(d: Decl): Unit = {
+    val t = topics(d.topic)
+    val projected = Bridge.ofRows(spark,
+      TopicRelation(t, DataTypeUtils.toAttributes(t.schema))).select(
+      d.cols.map(c => col(c.name)) :+ col("_offset") :+ col("_rowtime"): _*)
+    val view = d.kind match {
+      case "TABLE" =>
+        TableOps.latestByKey(projected, d.cols.filter(_.isKey).map(_.name), "_offset")
+      case _ => projected
+    }
+    view.createOrReplaceTempView(d.name)
+    decls(d.name.toLowerCase) = d
+    refreshReaders(d.name)
   }
 
-  /** Re-materialize every collection view against current topic state, in
-    * registration order (derived collections may read earlier ones).
+  /** `df` with every topic leaf bound to that topic's rows as they stand
+    * now (the pin that makes a result the state at `execute`, however
+    * late it is collected) and its columns renamed by `rename`, in the
+    * one analysis the bound plan needs.
     */
-  private def refreshViews(): Unit = {
-    decls.values.foreach { d =>
-      val base = topicDF(d.topic)
-      val projected = base.select(
-        d.cols.map(c => col(c.name)) :+ col("_offset") :+ col("_rowtime"): _*)
-      val view = d.kind match {
-        case "TABLE" =>
-          TableOps.latestByKey(projected, d.cols.filter(_.isKey).map(_.name), "_offset")
-        case _ => projected
-      }
-      view.createOrReplaceTempView(d.name)
+  private def pinned(df: DataFrame, rename: String => String = identity): DataFrame = {
+    val plan = df.queryExecution.analyzed.transformWithSubqueries {
+      case TopicRelation(t, out) => t.snapshot(out)
     }
-    refreshDerived()
+    Bridge.ofRows(spark, Project(plan.output.map(a => Alias(a, rename(a.name))()), plan))
   }
 }
 

@@ -10,7 +10,7 @@ import scala.collection.mutable
 private[ksql] final case class Decl(kind: String, name: String,
     cols: Seq[ColumnDef], topic: String)
 
-/** A derived (CSAS/CTAS) collection: its SELECT, re-derived on read. */
+/** A derived (CSAS/CTAS) collection: its SELECT, registered as a view. */
 private[ksql] final case class Derived(kind: String, name: String,
     select: String, partitionBy: Option[String], topic: String)
 
@@ -70,9 +70,13 @@ trait KsqlTranslator[R] {
     declared(name).map(_.kind)
       .orElse(derived.get(name.toLowerCase).map(_.kind))
 
+  /** Output columns of each derived view, recorded as it registers. */
+  private val derivedColumns = mutable.Map.empty[String, Seq[String]]
+
   /** Output columns of a collection (without the log columns). */
   protected def viewColumns(name: String): Seq[String] =
     declared(name).map(_.cols.map(_.name))
+      .orElse(derived.get(name.toLowerCase).flatMap(d => derivedColumns.get(d.name)))
       .getOrElse(spark.table(name).columns.toSeq.filterNot(LogColumns))
 
   /** Render a `COUNT_DISTINCT(args)` call — engine-specific (batch uses
@@ -89,10 +93,26 @@ trait KsqlTranslator[R] {
     val df = spark.sql(translateSelect(d.select, injectOffset = d.kind == "STREAM"))
     d.partitionBy.fold(df)(p => df.repartition(col(p)))
       .createOrReplaceTempView(d.name)
+    derivedColumns(d.name) = df.columns.toSeq.filterNot(LogColumns)
   }
 
   /** Re-register every derived view, in creation order. */
   protected def refreshDerived(): Unit = derived.values.foreach(registerDerived)
+
+  /** Re-register, in creation order, every derived view that reads `name`
+    * directly or through another derived view: a view holds the plans of
+    * the views it read when it was registered, so a replaced one reaches
+    * its readers only this way.
+    */
+  protected def refreshReaders(name: String): Unit = {
+    val stale = mutable.Set(name.toLowerCase)
+    derived.values.foreach { d =>
+      if (fromSources(d.select).exists(s => stale(s._1.toLowerCase))) {
+        registerDerived(d)
+        stale += d.name.toLowerCase
+      }
+    }
+  }
 
   /** CREATE … AS SELECT: the view is built at CREATE, so a bad SELECT
     * fails there, as in ksqlDB.

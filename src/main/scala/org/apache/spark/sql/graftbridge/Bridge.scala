@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
@@ -9,8 +10,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 /** Spark 4 removed the public `new Column(Expression)` constructor; the
   * supported conversion lives in `org.apache.spark.sql.classic`, which is
   * `private[sql]`. This shim (compiled inside the `org.apache.spark.sql`
-  * package hierarchy) re-exports just the two conversions the engine needs
-  * to expose native Catalyst expressions as user-facing Columns.
+  * package hierarchy) re-exports just the conversions the engine needs
+  * to expose native Catalyst expressions and plans as user-facing Columns
+  * and DataFrames.
   *
   * VERSION PIN: verified against Spark 4.1.2 (the /opt/spark/jars build
   * this repo compiles with). If Spark moves: `ExpressionUtils.column/
@@ -22,6 +24,10 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over a logical plan the caller built. */
+  def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Register a named SQL function backed by a Catalyst expression builder
     * (FunctionRegistry is `private[sql]`; bare AggregateFunctions are

@@ -81,6 +81,43 @@ class JdbcSourceSpec extends SparkSpec {
     assert(got.length === 10)
   }
 
+  test("the batch plane scans the database once per CREATE SOURCE CONNECTOR, " +
+      "not once per SELECT") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    graft.streaming.Tutorial.playersSeed(spark).write
+      .format("jdbc").option("url", url).option("dbtable", "scan_players")
+      .option("driver", "org.apache.derby.jdbc.EmbeddedDriver").save()
+    Executions.drain(spark)
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        if (s.stageInfo.rddInfos.exists(_.name == "JDBCRDD")) scans.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val e = new graft.ksql.KsqlEngine(spark)
+      e.execute("CREATE SOURCE CONNECTOR scan_src WITH (" +
+        "'connection.url' = 'jdbc:derby:memory:graftjdbc', " +
+        "'connection.driver.class' = 'org.apache.derby.jdbc.EmbeddedDriver', " +
+        "'table.whitelist' = 'scan_players');")
+      e.execute("""CREATE TABLE players (
+        id VARCHAR PRIMARY KEY, name VARCHAR(50), team VARCHAR(50),
+        nationality VARCHAR(50)) WITH (KAFKA_TOPIC = 'scan_players');""")
+      // every read sees the same records at the same offsets
+      val offsets = (1 to 3).map { _ =>
+        e.execute("PRINT 'scan_players' FROM BEGINNING;").get
+          .select("id", "_offset").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+      assert(offsets.distinct.size === 1 && offsets.head.size === 10)
+      e.execute("INSERT INTO players VALUES ('11', 'dani', 'sevilla', 'Spanish');")
+      val counts = (1 to 3).map(_ =>
+        e.execute("SELECT id, name FROM players EMIT CHANGES;").get.count())
+      assert(counts === Seq(11L, 11L, 11L))
+      Executions.drain(spark)
+      assert(scans.get === 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("fromJdbcIncrement rejects identifier injection") {
     intercept[IllegalArgumentException] {
       Sources.fromJdbcIncrement(spark, url, "t; DROP TABLE x", "id", 0L)

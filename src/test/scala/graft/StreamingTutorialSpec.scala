@@ -3,9 +3,10 @@ package graft
 import graft.engine.{Sinks, TableOps}
 import graft.streaming.Tutorial
 import graft.streaming.Tutorial.MatchEvent
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import scala.jdk.CollectionConverters._
 
@@ -17,6 +18,10 @@ import scala.jdk.CollectionConverters._
   */
 class StreamingTutorialSpec extends SparkSpec {
 
+  /** A push query into an in-memory table named `name` the test polls. */
+  private def pushQuery(df: DataFrame, name: String, mode: OutputMode): StreamingQuery =
+    df.writeStream.format("memory").queryName(name).outputMode(mode).start()
+
   test("push query: home-goals count evolves 2 then 1 per match (README.md:247-253)") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -24,7 +29,7 @@ class StreamingTutorialSpec extends SparkSpec {
     val counts = input.toDF()
       .filter(col("home") && col("event_type") === "GOAL")
       .groupBy("id").agg(count(col("id")).as("goals"))
-    val q = Sinks.pushQuery(counts, "home_goals_evolution", OutputMode.Update())
+    val q = pushQuery(counts, "home_goals_evolution", OutputMode.Update())
     try {
       // first four inserts (match 1): README golden shows home_goals = 2
       input.addData(Tutorial.canonicalEvents.take(4): _*)
@@ -48,7 +53,7 @@ class StreamingTutorialSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[MatchEvent]
     val kv = Sinks.kafkaKeyValue(Tutorial.matchResults(input.toDF()), Seq("id"))
-    val q = Sinks.pushQuery(kv, "match_results_wire", OutputMode.Update())
+    val q = pushQuery(kv, "match_results_wire", OutputMode.Update())
     try {
       input.addData(Tutorial.canonicalEvents: _*)
       q.processAllAvailable()
@@ -66,7 +71,7 @@ class StreamingTutorialSpec extends SparkSpec {
     val input = MemoryStream[(String, String, Long)]
     val table = TableOps.latestByKey(
       input.toDF().toDF("id", "team", "_offset"), Seq("id"), "_offset")
-    val q = Sinks.pushQuery(table, "players_table", OutputMode.Update())
+    val q = pushQuery(table, "players_table", OutputMode.Update())
     try {
       input.addData(("1", "Barcelona", 0L))
       q.processAllAvailable()
@@ -91,7 +96,7 @@ class StreamingTutorialSpec extends SparkSpec {
       Tutorial.matchEventPlayer(events), Tutorial.playersSeed(spark),
       countDistinctMatches =
         graft.functions.ExactCountDistinct.column(col("mep_id")))
-    val q = Sinks.pushQuery(stats, "player_stats_stream", OutputMode.Update())
+    val q = pushQuery(stats, "player_stats_stream", OutputMode.Update())
     try {
       input.addData(Tutorial.canonicalEvents.zipWithIndex.map { case (ev, i) =>
         (ev.id, ev.event_type, ev.player_id, ev.home, i.toLong) }: _*)
@@ -596,7 +601,7 @@ class StreamingTutorialSpec extends SparkSpec {
     val input = MemoryStream[MatchEvent]
     val proj = input.toDF().filter(col("event_type") === "ASSIST")
       .select("id", "player_id")
-    val q = Sinks.pushQuery(proj, "assists_stream", OutputMode.Append())
+    val q = pushQuery(proj, "assists_stream", OutputMode.Append())
     try {
       input.addData(Tutorial.canonicalEvents: _*)
       q.processAllAvailable()
