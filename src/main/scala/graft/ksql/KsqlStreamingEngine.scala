@@ -1,6 +1,6 @@
 package graft.ksql
 
-import graft.engine.TableOps
+import graft.engine.{NioCheckpointFileManager, TableOps}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -107,7 +107,10 @@ final case class LivePolling(ticks: () => DataFrame, root: String,
   * query's parallelism follows its topic's partition count. So each
   * topic attachment is a one-partition `MemoryStream` (a micro-batch
   * reads one source partition however many INSERTs it carries) and each
-  * push query keeps one state partition per stateful operator.
+  * push query keeps one state partition per stateful operator. A push
+  * query's checkpoint is a temporary directory, written through
+  * [[NioCheckpointFileManager]]: a micro-batch forks no process, and
+  * each checkpoint file still lands by an atomic rename.
   *
   * Scope: this engine executes the DATA-PLANE statements (DDL, INSERT,
   * push queries). Metadata/lifecycle statements (SHOW, DESCRIBE, PRINT,
@@ -417,7 +420,7 @@ class KsqlStreamingEngine(
       val out = upperCased(df)
       val changelog = new Changelog(out.schema)
       // collect before append takes the monitor: readers never wait on a job
-      val q = startOnOnePartition(out.writeStream
+      val q = startPush(out.writeStream
         .foreachBatch((batch: DataFrame, id: Long) => changelog.append(id, batch.collect()))
         .queryName(name)
         .outputMode(
@@ -436,21 +439,30 @@ class KsqlStreamingEngine(
         s"streaming engine does not support: $other")
   }
 
-  /** Start `writer`'s query with one shuffle partition, so its stateful
-    * operators keep one state store each instead of one per session
-    * shuffle partition. `StreamExecution` clones the session when the
-    * query is constructed, inside `start()`, and the first batch records
-    * the count in the query's offset log; so the session's own setting
-    * is restored as soon as `start()` returns, and other statements see
-    * the change only while `start()` runs. The lock keeps two engines on
-    * one session from interleaving their set and restore.
+  /** Start a push query's `writer` with the push settings: one shuffle
+    * partition, so its stateful operators keep one state store each
+    * instead of one per session shuffle partition; and the
+    * [[NioCheckpointFileManager]], so its transient checkpoint (offset
+    * log, commit log, state deltas) is written without a forked process,
+    * with the same write-then-atomic-rename. `StreamExecution` clones the
+    * session when the query is constructed, inside `start()`, the first
+    * batch records the partition count in the query's offset log, and the
+    * query's state stores read the clone's configuration; so the
+    * session's own values are restored (or unset, if it had none) as soon
+    * as `start()` returns, and other statements see the change only while
+    * `start()` runs. The lock keeps two engines on one session from
+    * interleaving their set and restore.
     */
-  private def startOnOnePartition(writer: DataStreamWriter[Row]): StreamingQuery =
+  private def startPush(writer: DataStreamWriter[Row]): StreamingQuery =
     KsqlStreamingEngine.StartLock.synchronized {
-      val key = SQLConf.SHUFFLE_PARTITIONS.key
-      val prior = spark.conf.get(key)
-      spark.conf.set(key, "1")
-      try writer.start() finally spark.conf.set(key, prior)
+      import KsqlStreamingEngine.PushSettings
+      val prior = PushSettings.map { case (k, _) => k -> spark.conf.getOption(k) }
+      PushSettings.foreach { case (k, v) => spark.conf.set(k, v) }
+      try writer.start()
+      finally prior.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
 
   /** Execute `stmt` the way the serving planes do: a push query is
@@ -507,6 +519,12 @@ class KsqlStreamingEngine(
 }
 
 object KsqlStreamingEngine {
-  /** Held while a push query starts on one shuffle partition. */
+  /** Held while a push query starts with [[PushSettings]]. */
   private val StartLock = new Object
+
+  /** The session settings a push query is started under. */
+  private val PushSettings = Seq(
+    SQLConf.SHUFFLE_PARTITIONS.key -> "1",
+    SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key ->
+      classOf[NioCheckpointFileManager].getName)
 }

@@ -588,6 +588,63 @@ class KsqlStreamingSpec extends SparkSpec {
     }
   }
 
+  test("a push micro-batch forks no process") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
+    import org.apache.spark.sql.internal.SQLConf
+    import scala.jdk.CollectionConverters._
+    val managerKey = SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key
+    val e = freshEngine
+    ddl(e)
+    e.execute("""CREATE STREAM match_event_player WITH (
+        KAFKA_TOPIC='match_event_player') AS
+      SELECT id, event_type, player_id FROM match_event PARTITION BY player_id;""")
+    val h = e.execute(
+      """SELECT p.id AS player_id,
+           LATEST_BY_OFFSET(p.name) AS player_name,
+           sum(CASE WHEN mep.event_type = 'GOAL' THEN 1 ELSE 0 END) goals,
+           CAST(sum(CASE WHEN mep.event_type = 'GOAL' THEN 1 ELSE 0 END)
+               AS DOUBLE) / cast(COUNT_DISTINCT((mep.id)) AS DOUBLE) avg_goals,
+           sum(CASE WHEN mep.event_type = 'ASSIST' THEN 1 ELSE 0 END) assists
+         FROM match_event_player mep JOIN players p ON p.id = mep.player_id
+         GROUP BY p.id EMIT CHANGES;""").get
+    // the manager is the started query's setting, not the session's
+    assert(spark.conf.getOption(managerKey).isEmpty)
+    val recording = new Recording()
+    val dump = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+    try {
+      insert(e, Tutorial.canonicalEvents.take(1)) // the warm batch
+      h.processAllAvailable()
+      recording.enable("jdk.ProcessStart").withStackTrace()
+      recording.start()
+      Tutorial.canonicalEvents.slice(1, 6).foreach { ev =>
+        insert(e, Seq(ev))
+        h.processAllAvailable()
+      }
+      recording.stop()
+      recording.dump(dump)
+      def frames(ev: RecordedEvent): Seq[String] = ev.getStackTrace.getFrames.asScala.toSeq
+        .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+      // Spark removes a collected session's artifact directory with a
+      // forked `rm -rf`, on the JDK's cleaner thread, whenever the clone
+      // of an earlier, stopped query is garbage collected: not this
+      // query's batches
+      val forks = RecordingFile.readAllEvents(dump).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .filterNot(frames(_).exists(_.startsWith("org.apache.spark.sql.artifact.ArtifactManager")))
+      assert(forks.isEmpty, forks.map { ev =>
+        ev.getString("command") + " from " + frames(ev).take(12).mkString(" < ")
+      }.mkString(s"${forks.size} process starts in 5 micro-batches:\n", "\n", ""))
+      // the five batches ran and carried their rows
+      assert(h.query.recentProgress.count(_.numInputRows > 0) >= 6)
+      assert(h.emissions.collect().map(_.getString(0)).toSet === Set("1", "2"))
+    } finally {
+      recording.close()
+      java.nio.file.Files.deleteIfExists(dump)
+      e.release(h)
+    }
+  }
+
   test("two concurrent push queries over one topic progress independently") {
     val e = freshEngine
     ddl(e)
